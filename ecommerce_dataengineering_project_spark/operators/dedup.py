@@ -5,12 +5,18 @@ Scale design (the whole point of these ops is the 100 TB case):
 
 - exact dedup: hash-groupBy on a 256-bit content fingerprint — one
   shuffle keyed by the hash, map-side combined, no text comparison.
-- MinHash-LSH near-dup: shingle -> 16 minhashes -> 4 bands -> band
-  bucket self-join. The candidate join is on band hashes (tiny keys),
-  so the cross-product only materializes within buckets; exact Jaccard
-  verification then runs only on candidates. This is the standard
+- MinHash-LSH near-dup: per-document shingle sets -> 16 minhashes ->
+  4 bands -> band bucket self-join. Each document is split once into
+  one ``array<bigint>`` of distinct shingle hashes; signatures are
+  ``array_min`` over it (no shuffle) and exact Jaccard verification is
+  ``size(array_intersect)`` of a candidate pair's two sets. The
+  candidate join is on band hashes (tiny keys), so the cross-product
+  only materializes within buckets. This is the standard
   sub-quadratic pipeline (Broder '97 resemblance sketches; LSH banding
-  per Mining of Massive Datasets ch.3).
+  per Mining of Massive Datasets ch.3). Pitfall: an n-gram lambda that
+  closes over the token expression gets ``split(text)`` inlined into
+  its body by the optimizer, which re-splits the document per n-gram
+  (quadratic in document length); see ``shingle_sets``.
 - SimHash: 60-bit per-doc signature via per-bit vote aggregation
   (Charikar '02) — one groupBy, signatures join/band cheaply.
 - n-gram Jaccard: the exact (quadratic-within-bucket) baseline used to
@@ -32,9 +38,10 @@ from pyspark.sql import functions as F
 
 from ecommerce_dataengineering_project_spark.functions.scalars import round_half_up
 
-# Universal-hash parameters: h_i(x) = (A[i]*x31 + B[i]) mod M61.
-# x31 < 2^31 keeps A[i]*x31 < 2^62, inside signed-int64 range on every
-# engine. Constants are arbitrary fixed odd numbers (seeded once).
+# Universal-hash parameters (sql_universal_hash): h_i(x) = (A[i]*x31 + B[i])
+# mod M61 with x31 = x mod M31. x31 < 2^31 keeps A[i]*x31 < 2^62, inside
+# signed-int64 range on every engine. Constants are arbitrary fixed odd
+# numbers (seeded once).
 M61 = (1 << 61) - 1
 M31 = (1 << 31) - 1
 MINHASH_A = [
@@ -82,16 +89,8 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str = "text") -> Da
     )
 
 
-def shingles(df: DataFrame, id_col: str, text_col: str = "text", n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document (one row each),
-    emitted as 60-bit integer hashes.
-
-    Hashing at the source keeps every downstream shuffle and join key
-    8 bytes instead of a full n-gram string — at corpus scale the
-    candidate-pair and verification joins move an order of magnitude
-    fewer bytes. The hash is the portable sha-256 prefix (module
-    docstring), so SQL oracles reproduce it exactly.
-    """
+def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, __toks): each document split into its tokens, once."""
     # A corpus that arrives as FEWER partitions than the session would
     # otherwise serialize the tokenize+hash work into those few tasks;
     # spread it first (cheap: the exchange moves raw text once, before
@@ -101,45 +100,107 @@ def shingles(df: DataFrame, id_col: str, text_col: str = "text", n: int = 3) -> 
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         df = df.repartition(par)
-    toks = F.split(F.col(text_col), " ")
-    # Guard: F.sequence(1, 0) would generate a DESCENDING [1, 0], not
-    # an empty list — docs shorter than n shingle to nothing instead.
-    idx = F.when(F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))).otherwise(
-        F.array().cast("array<int>")
+    return df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__toks"))
+
+
+def _shingle_set(n: int) -> Column:
+    """The distinct n-gram hashes of the ``__toks`` column."""
+    toks = F.col("__toks")
+    # slice() rejects a negative length; docs shorter than n (and NULL
+    # texts, whose size is NULL) get zero-length slices instead.
+    n_grams = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    grams = F.transform(
+        F.arrays_zip(*[F.slice(toks, k + 1, n_grams).alias(f"t{k}") for k in range(n)]),
+        lambda g: F.concat_ws(" ", *[g[f"t{k}"] for k in range(n)]),
     )
-    gram = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + k).cast("int")) for k in range(n)]
-        ),
+    return F.coalesce(
+        F.array_distinct(F.transform(grams, hash60)), F.array().cast("array<bigint>")
     )
-    return df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(F.transform(gram, hash60))).alias("shingle"),
+
+
+def shingle_sets(df: DataFrame, id_col: str, text_col: str = "text", n: int = 3) -> DataFrame:
+    """One row per document: (id, shingle_set), the document's distinct
+    word n-gram shingles as an ``array<bigint>`` of 60-bit hashes.
+    Documents shorter than ``n`` tokens, and NULL texts, get an empty
+    set.
+
+    Hashing at the source keeps every downstream shuffle and join key
+    8 bytes instead of a full n-gram string — at corpus scale the
+    candidate-pair and verification joins move an order of magnitude
+    fewer bytes. The hash is the portable sha-256 prefix (module
+    docstring), so SQL oracles reproduce it exactly.
+
+    Each document is split ONCE. The n-grams are the rows of
+    ``arrays_zip`` over the n shifted ``slice``s of the token array, so
+    the lambda that joins a gram reads only its own element. A lambda
+    that instead indexes the token column (``element_at(toks, i + k)``)
+    is quadratic: Catalyst inlines ``split(text)`` into the lambda body
+    and every n-gram re-splits the whole document. The slices reference
+    the token column several times, which keeps CollapseProject from
+    inlining the split back into them. Likewise, no filter may sit on
+    ``shingle_set`` before it is materialized: Catalyst pushes it below
+    the projection and evaluates the set twice.
+    """
+    return _tokens(df, id_col, text_col).select(
+        F.col(id_col), _shingle_set(n).alias("shingle_set")
     )
+
+
+def shingles(df: DataFrame, id_col: str, text_col: str = "text", n: int = 3) -> DataFrame:
+    """Distinct word n-gram shingles per document (one row each),
+    emitted as 60-bit integer hashes: :func:`shingle_sets` exploded."""
+    # explode the set EXPRESSION, not a shingle_set column: over a
+    # column, Catalyst infers size(shingle_set) > 0 and pushes that
+    # filter below the projection (see shingle_sets)
+    return _tokens(df, id_col, text_col).select(
+        F.col(id_col), F.explode(_shingle_set(n)).alias("shingle")
+    )
+
+
+def sql_universal_hash(x: str, i: int) -> str:
+    """SQL text of the i-th universal hash of the bigint expression x:
+    (A[i]*(x mod M31) + B[i]) mod M61. SQL text, not Column calls: the
+    set path wraps it in 16 lambdas, and each lambda built through the
+    Column API costs many py4j round trips on the driver."""
+    return f"({MINHASH_A[i]} * ({x} % {M31}) + {MINHASH_B[i]}) % {M61}"
 
 
 def minhash_signatures(sh: DataFrame, id_col: str) -> DataFrame:
-    """16 minhash values per document over its shingle set.
+    """16 minhash values per document over its shingle rows (the
+    :func:`shingles` relation). One groupBy: the per-shingle hash
+    arithmetic is codegen'd, the mins combine map-side."""
+    return sh.groupBy(id_col).agg(
+        *[
+            F.expr(f"min({sql_universal_hash('shingle', i)})").alias(f"sig_{i}")
+            for i in range(NUM_HASHES)
+        ]
+    )
 
-    Plain groupBy/agg: the per-shingle hash arithmetic is codegen'd,
-    the mins combine map-side, one shuffle on the doc id.
-    """
-    x31 = (F.col("shingle") % M31).alias("x31")
-    base = sh.select(F.col(id_col), x31)
-    sigs = [
-        F.min((F.lit(MINHASH_A[i]) * F.col("x31") + F.lit(MINHASH_B[i])) % F.lit(M61)).alias(
-            f"sig_{i}"
-        )
-        for i in range(NUM_HASHES)
-    ]
-    return base.groupBy(id_col).agg(*sigs)
+
+def set_signatures(sets: DataFrame, id_col: str) -> DataFrame:
+    """16 minhash values per document over its :func:`shingle_sets`
+    row: a projection, no shuffle. An empty set's signature is NULL
+    (the minimum of an empty array); :func:`band_keys` gives it no
+    bands."""
+    return sets.select(
+        F.col(id_col),
+        *[
+            F.expr(f"array_min(transform(shingle_set, x -> {sql_universal_hash('x', i)}))")
+            .alias(f"sig_{i}")
+            for i in range(NUM_HASHES)
+        ],
+    )
 
 
 def band_keys(sig: DataFrame, id_col: str) -> DataFrame:
     """LSH band keys (id, band_id, band_hash) from a signature
     relation — the unit both the batch self-join and the persisted
-    incremental index are built from."""
+    incremental index are built from.
+
+    A NULL signature (an empty shingle set) gets no bands: its band
+    hash would be the hash of "" and every empty document would share
+    it. The guard is on the explode's input, not a filter, so Catalyst
+    never pushes it below an unmaterialized signature projection."""
     band_rows = []
     for b in range(BANDS):
         cols = [F.col(f"sig_{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
@@ -151,9 +212,10 @@ def band_keys(sig: DataFrame, id_col: str) -> DataFrame:
                 ),
             )
         )
-    return sig.select(
-        F.col(id_col), F.explode(F.array(*band_rows)).alias("band")
-    ).select(id_col, "band.band_id", "band.band_hash")
+    bands = F.when(F.col("sig_0").isNotNull(), F.array(*band_rows))
+    return sig.select(F.col(id_col), F.explode(bands).alias("band")).select(
+        id_col, "band.band_id", "band.band_hash"
+    )
 
 
 def lsh_candidate_pairs(sig: DataFrame, id_col: str) -> DataFrame:
@@ -165,8 +227,8 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str) -> DataFrame:
     bucket size, not corpus size.
     """
     # the band relation is both sides of the self-join — without
-    # materialization each side re-runs the 16-min signature aggregate
-    # feeding it (r15 plan audit; same fix as minhash_incremental)
+    # materialization each side re-derives the signatures feeding it
+    # (r15 plan audit; same fix as minhash_incremental)
     bands = band_keys(sig, id_col).localCheckpoint(eager=False)
     a = bands.alias("a")
     b = bands.alias("b")
@@ -182,44 +244,49 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def jaccard_verify(
-    pairs: DataFrame, sh: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Exact Jaccard on candidate pairs only (the sketch filtered the
-    quadratic blowup; this join is candidates x shingles)."""
-    sa = sh.select(F.col(id_col).alias("id_a"), F.col("shingle"))
-    sb = sh.select(F.col(id_col).alias("id_b"), F.col("shingle"))
-    inter = (
-        pairs.join(sa, "id_a")
-        .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return _jaccard_from_inter(inter, sh, id_col, threshold)
-
-
 def minhash_lsh_dedup(
     df: DataFrame,
     id_col: str,
     text_col: str = "text",
     threshold: float = 0.8,
-    sh: DataFrame | None = None,
 ) -> DataFrame:
-    """X2 end-to-end: shingle -> minhash -> LSH bands -> verified pairs.
+    """X2 end-to-end over per-document shingle sets:
+    :func:`shingle_sets` -> :func:`set_signatures` -> LSH bands ->
+    verified pairs (id_a, id_b, jaccard).
 
-    The shingle relation fans out into signatures, sizes, and both
-    sides of the verification join; it is persisted so the tokenize +
-    sha-256 map work runs once, not once per consumer (Spark only
-    reuses identical *exchanges*, not arbitrary subtrees).
+    Each document is split once; an n-gram lambda that closes over
+    the token expression would re-split it per n-gram (quadratic in
+    document length; see :func:`shingle_sets`). Every stage after the
+    split reads one row per document. The
+    signatures are 16 ``array_min``s over the set (no groupBy), the
+    candidates are the band-hash self-join, and verification is exact
+    Jaccard as ``size(array_intersect(a, b))`` over each candidate pair
+    joined to its two sets. Pairs that share no shingle are dropped, as
+    a shingle-level intersection join would drop them.
+
+    The set relation feeds the signatures and both sides of the
+    verification join; it is materialized once so the tokenize +
+    sha-256 map work runs once, not once per consumer.
     """
-    if sh is None:
-        # eager localCheckpoint, not persist(): the result is
-        # returned lazily, so a cache entry could never be
-        # unpersisted by the caller (session-lifetime storage leak)
-        sh = shingles(df, id_col, text_col).localCheckpoint(eager=True)
-    sig = minhash_signatures(sh, id_col)
-    cand = lsh_candidate_pairs(sig, id_col)
-    return jaccard_verify(cand, sh, id_col, threshold)
+    # eager localCheckpoint, not persist(): the result is returned
+    # lazily, so a cache entry could never be unpersisted by the
+    # caller (session-lifetime storage leak)
+    sets = shingle_sets(df, id_col, text_col).localCheckpoint(eager=True)
+    cand = lsh_candidate_pairs(set_signatures(sets, id_col), id_col)
+    sa = sets.select(F.col(id_col).alias("id_a"), F.col("shingle_set").alias("set_a"))
+    sb = sets.select(F.col(id_col).alias("id_b"), F.col("shingle_set").alias("set_b"))
+    scored = cand.join(sa, "id_a").join(sb, "id_b").select(
+        "id_a",
+        "id_b",
+        F.size(F.array_intersect("set_a", "set_b")).alias("n_inter"),
+        (F.size("set_a") + F.size("set_b")).alias("n_sum"),
+    )
+    jac = F.col("n_inter") / (F.col("n_sum") - F.col("n_inter"))
+    return (
+        scored.where(F.col("n_inter") > 0)
+        .select("id_a", "id_b", round_half_up(jac, 6).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
 
 
 def _jaccard_from_inter(
@@ -762,12 +829,11 @@ def minhash_band_index(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """The persisted state of incremental NEAR-dup: each accepted
-    doc's LSH band keys (id, band_id, band_hash) — 16 rows of ~40
-    bytes per doc, no text. The continuous-ingest caller appends the
+    doc's LSH band keys (id, band_id, band_hash) — one ~80-byte row
+    per band and doc, no text. The continuous-ingest caller appends the
     kept docs' keys after every batch; bucket the stored index by
     (band_id, band_hash) to make the probe join shuffle-free."""
-    sh = shingles(docs, id_col, text_col)
-    return band_keys(minhash_signatures(sh, id_col), id_col)
+    return band_keys(set_signatures(shingle_sets(docs, id_col, text_col), id_col), id_col)
 
 
 def minhash_incremental(
@@ -801,26 +867,24 @@ def minhash_incremental(
     they cannot collide and are always kept (same convention as the
     exact-Jaccard baseline / decontaminate).
 
-    Scale shape: signatures are one exchange on the new-batch ids
-    (map-side combined mins); both probes are joins on the
+    Scale shape: signatures are a per-document projection over the
+    shingle sets (no exchange); both probes are joins on the
     high-entropy (band_id, band_hash) key — history-sized but
     skew-free, and shuffle-free for the stored side if the index is
     bucketed by that key. The final assembly is two left joins back
     to the batch ids.
     """
-    sh = shingles(new_docs, id_col, text_col)
     # The batch band-key relation feeds THREE plan branches (the
     # history probe and both sides of the within-batch self-join); the
-    # derivation behind it (text scan -> shingle explode -> 16 minhash
-    # aggregations) is the operator's expensive part, and without
-    # materialization each branch re-derives it — the r15 plan audit
-    # counted the scan+shingle+sig subtree 4x in one plan. Checkpoint
-    # the 16-rows-per-doc skinny relation once (lazy); every branch
-    # then reads the result. Same bounded-state shape as the
+    # derivation behind it (text scan -> shingle sets -> 16 minhashes)
+    # is the operator's expensive part, and without materialization
+    # each branch re-derives it — the r15 plan audit counted the
+    # scan+shingle+sig subtree 4x in one plan. Checkpoint the
+    # 4-rows-per-doc skinny relation once (lazy); every branch then
+    # reads the result. Same bounded-state shape as the
     # exact_jaccard_pairs shingle checkpoint above.
-    nb = band_keys(minhash_signatures(sh, id_col), id_col).localCheckpoint(
-        eager=False
-    )
+    sets = shingle_sets(new_docs, id_col, text_col)
+    nb = band_keys(set_signatures(sets, id_col), id_col).localCheckpoint(eager=False)
     hist = history_bands.select(
         F.col(id_col).alias("__hist_id"), "band_id", "band_hash"
     )

@@ -32,7 +32,7 @@ JACCARD_THRESHOLD = 0.8
 NGRAM_THRESHOLD = 0.5
 COSINE_THRESHOLD = 0.4
 
-# The shingle relation feeds three queries; persist once per (session,
+# The shingle relation feeds two queries; persist once per (session,
 # corpus) so the tokenize+hash map work and its cache are shared across
 # them. Keyed on the session too: a DataFrame outliving its (stopped)
 # SparkSession must not be served to a new one. The value keeps a
@@ -75,9 +75,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_dedup(
-        docs, "doc_id", threshold=JACCARD_THRESHOLD, sh=_shingles_for(spark, sf_dir)
-    )
+    return minhash_lsh_dedup(docs, "doc_id", threshold=JACCARD_THRESHOLD)
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

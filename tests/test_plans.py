@@ -370,3 +370,30 @@ def test_fuzzy_multiblock_same_join_shape(spark, sf_dir):
     # pairs subtree appears once per symmetrize branch + the verdict
     # fan-out join — NOT 3x (one per block key)
     assert n_joins <= 3, plan
+
+
+def test_shingling_splits_each_document_once(spark):
+    """Shingling must tokenize each document exactly once. An n-gram
+    lambda that indexes the token column gets ``split(text)`` inlined
+    into its body by the optimizer (one full re-split per n-gram:
+    quadratic in document length); a filter on the set column gets
+    pushed below the set projection and evaluates the set twice. Both
+    show up as extra ``split(`` in the optimized plan. The band keys
+    over unmaterialized sets must not re-derive the set either."""
+    from ecommerce_dataengineering_project_spark.operators.dedup import (
+        band_keys,
+        set_signatures,
+        shingle_sets,
+        shingles,
+    )
+
+    df = spark.createDataFrame([(1, "a b c d"), (2, None)], "doc_id long, text string")
+
+    def optimized(d) -> str:
+        return d._jdf.queryExecution().optimizedPlan().toString()
+
+    for n in (1, 2, 3):
+        assert optimized(shingle_sets(df, "doc_id", n=n)).count("split(") == 1
+        assert optimized(shingles(df, "doc_id", n=n)).count("split(") == 1
+    bands = optimized(band_keys(set_signatures(shingle_sets(df, "doc_id"), "doc_id"), "doc_id"))
+    assert bands.count("split(") == 1 and bands.count("array_distinct(") == 1, bands

@@ -73,18 +73,22 @@ def test_minhash_universal_hash_stays_in_int64(x31):
 @pytest.mark.parametrize("n", [1, 2, 3])
 def test_shingles_match_duckdb_on_edge_texts(spark, n):
     """Shingle hashing parity on edge-case texts (short docs, repeated
-    tokens, single char) — the guard paths of the Spark expression."""
-    from ecommerce_dataengineering_project_spark.operators.dedup import shingles
+    tokens, single char, empty and NULL text) — the guard paths of the
+    Spark expression — for both the per-document sets and their
+    exploded rows."""
+    from ecommerce_dataengineering_project_spark.operators.dedup import (
+        shingle_sets,
+        shingles,
+    )
 
-    texts = ["a", "a b", "a b c", "a b c d", "x x x x x", "one two one two one"]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id int, text string")
-    got = {
-        (r.doc_id, r.shingle)
-        for r in shingles(df, "doc_id", n=n).collect()
-    }
+    texts = ["a", "a b", "a b c", "a b c d", "x x x x x", "one two one two one", "", None]
+    rows = list(enumerate(texts))
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    got = {(r.doc_id, r.shingle) for r in shingles(df, "doc_id", n=n).collect()}
+    sets = {r.doc_id: r.shingle_set for r in shingle_sets(df, "doc_id", n=n).collect()}
     con = duckdb.connect()
     con.execute("CREATE TABLE d (doc_id INT, text VARCHAR)")
-    con.executemany("INSERT INTO d VALUES (?, ?)", list(enumerate(texts)))
+    con.executemany("INSERT INTO d VALUES (?, ?)", rows)
     joined = " || ' ' || ".join(f"ws[i+{k}]" for k in range(n))
     want = set(
         con.sql(
@@ -97,6 +101,63 @@ def test_shingles_match_duckdb_on_edge_texts(spark, n):
         ).fetchall()
     )
     assert got == want
+    # one row per document (empty set for short, empty and NULL texts),
+    # no repeated hash inside a set, and the same shingles as the rows
+    assert sorted(sets) == [i for i, _ in rows]
+    assert all(len(s) == len(set(s)) for s in sets.values())
+    assert {(i, h) for i, s in sets.items() for h in s} == want
+
+
+def test_minhash_lsh_matches_oracle_with_short_empty_and_null_docs(spark):
+    """The set pipeline equals the DuckDB MinHash-LSH oracle on a corpus
+    mixing near-duplicate families with documents that have no
+    shingles (fewer than 3 tokens, empty, NULL). Those documents never
+    pair: an empty set has a NULL signature, and banding it would give
+    every empty document the same band hash."""
+    import random
+
+    from ecommerce_dataengineering_project_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_lsh_dedup,
+        set_signatures,
+        shingle_sets,
+    )
+    from ecommerce_dataengineering_project_spark.queries.ext_dedup import (
+        JACCARD_THRESHOLD,
+        ORACLES,
+    )
+
+    rnd = random.Random(11)
+    vocab = [f"w{i}" for i in range(400)]
+    rows, doc_id = [], 0
+    for _ in range(12):
+        base = [rnd.choice(vocab) for _ in range(rnd.randrange(20, 60))]
+        for copy in range(3):
+            toks = list(base)
+            for _ in range(copy):  # 0, 1 or 2 single-token edits
+                toks[rnd.randrange(len(toks))] = rnd.choice(vocab)
+            rows.append((doc_id, " ".join(toks)))
+            doc_id += 1
+    no_shingles = ["", "", None, None, "a", "a", "a b", "a b"]
+    short_ids = set()
+    for t in no_shingles:
+        rows.append((doc_id, t))
+        short_ids.add(doc_id)
+        doc_id += 1
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        tuple(r)
+        for r in minhash_lsh_dedup(df, "doc_id", threshold=JACCARD_THRESHOLD).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = sorted(con.sql(ORACLES["dedup_minhash_lsh"]).fetchall())
+    assert got == want
+    assert len(got) >= 12  # the near-duplicate families do pair
+    cand = lsh_candidate_pairs(set_signatures(shingle_sets(df, "doc_id"), "doc_id"), "doc_id")
+    cand_ids = {i for r in cand.collect() for i in (r.id_a, r.id_b)}
+    assert cand_ids and not cand_ids & short_ids
 
 
 @given(
