@@ -65,14 +65,15 @@ class IsolationForest:
             my = len(nodes)
             nodes.append(None)  # reserve
             sub = X[idx]
-            if depth >= limit or len(idx) <= 1 or (sub.max(0) == sub.min(0)).all():
+            hi_all, lo_all = sub.max(0), sub.min(0)
+            if depth >= limit or len(idx) <= 1 or (hi_all == lo_all).all():
                 nodes[my] = ("leaf", len(idx), depth)
                 return my
-            # uniform feature among non-constant ones
-            spans = sub.max(0) - sub.min(0)
-            feats = np.flatnonzero(spans > 0)
-            f = int(rng.choice(feats))
-            lo, hi = float(sub[:, f].min()), float(sub[:, f].max())
+            # uniform feature among non-constant ones; integers() is the
+            # draw rng.choice(feats) makes, without its argument checks
+            feats = np.flatnonzero(hi_all > lo_all)
+            f = int(feats[rng.integers(0, len(feats))])
+            lo, hi = float(lo_all[f]), float(hi_all[f])
             thr = float(rng.uniform(lo, hi))
             mask = sub[:, f] < thr
             left = grow(idx[mask], depth + 1)

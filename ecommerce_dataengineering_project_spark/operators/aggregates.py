@@ -11,8 +11,19 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, DoubleType, LongType, StructField, StructType
 
 from ecommerce_dataengineering_project_spark.functions.scalars import round_half_up
+
+# The columns ``daily_sales`` returns. A reader of a persisted result
+# passes it to skip the Spark job that infers a parquet schema.
+DAILY_SALES_SCHEMA = StructType(
+    [
+        StructField("purchase_date", DateType()),
+        StructField("daily_total_sales", DoubleType()),
+        StructField("daily_transaction_count", LongType()),
+    ]
+)
 
 
 def daily_sales(
@@ -27,6 +38,15 @@ def daily_sales(
     Sum is rounded to cents on output so results are reproducible
     across engines and partition orders (double addition is not
     associative).
+
+    The result has one row per calendar day, so it is sorted in a
+    single partition: ``repartition(1).sortWithinPartitions`` is one
+    ``SinglePartition`` exchange, where ``orderBy`` adds a sampling job
+    to pick range bounds. The exchange sits after the hash aggregate,
+    which keeps its own partitioning, so the fact scan and the partial
+    and final aggregation stay parallel. ``coalesce(1)`` would not: it
+    adds no exchange, so Catalyst runs the final aggregation in the
+    one task that writes the result.
     """
     return (
         df.groupBy(F.to_date(F.col(ts_col)).alias("purchase_date"))
@@ -34,7 +54,8 @@ def daily_sales(
             round_half_up(F.sum(amount), 2).alias("daily_total_sales"),
             F.count(F.col(id_col)).alias("daily_transaction_count"),
         )
-        .orderBy("purchase_date")
+        .repartition(1)
+        .sortWithinPartitions("purchase_date")
     )
 
 

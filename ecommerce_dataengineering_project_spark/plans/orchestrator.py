@@ -198,34 +198,63 @@ def sales_pipeline_dag(
     spark, sf_dir: str, out_root: str, run_token: str = "r1"
 ) -> Dag:
     """The reference DAG's shape over THIS engine's stages
-    (sales_pipeline_dag.py:99-107): start -> {produce, stream} ->
+    (sales_pipeline_dag.py:99-107): start -> produce -> stream ->
     join_streams -> promote(gold txlog) -> transform(fct+daily) ->
     anomaly -> metadata. Each task is a real Spark job writing under
     ``out_root``; re-running a half-finished run_id only executes the
-    tasks that have not succeeded."""
+    tasks that have not succeeded.
+
+    What each task reads and writes (``<run>`` is ``run=<run_token>``):
+
+    - ``produce_sales_stream`` reads ``sf_dir``'s events and writes them
+      Kafka-shaped (one JSON ``value`` per event) to
+      ``bronze_events/<run>``;
+    - ``run_streaming_consumer`` reads ``bronze_events/<run>`` as an
+      ``availableNow`` stream and sinks it once into
+      ``silver_purchases/<run>``, checkpointed in
+      ``checkpoints/run_streaming_consumer/<run>``;
+    - ``delta_to_iceberg`` reads ``silver_purchases/<run>`` and appends
+      it to the ``gold_tx`` txlog, which every run shares;
+    - ``run_dbt_transformation`` reads ``sf_dir``'s lineitem and writes
+      ``fct_purchases`` and ``daily_sales``;
+    - ``run_anomaly_detection_model`` reads ``daily_sales`` and writes
+      the flagged days to ``anomalies``.
+
+    Keying bronze, silver and the checkpoint by run token lets a later
+    run over the same ``out_root`` promote only its own rows, while a
+    replay of one run's stream hop or promote finds its work done.
+    Silver and ``daily_sales`` are read with their known schemas, which
+    saves a schema-inference job per read."""
     from pyspark.sql import functions as F
 
+    from ecommerce_dataengineering_project_spark.ml.daily_anomaly import score_daily_sales
+    from ecommerce_dataengineering_project_spark.operators.aggregates import DAILY_SALES_SCHEMA
     from ecommerce_dataengineering_project_spark.queries.core import q_daily_sales, q_fct_purchases
-    from ecommerce_dataengineering_project_spark.queries.ml_queries import (
-        q_anomaly_isolation_forest,
-    )
     from ecommerce_dataengineering_project_spark.sources.readers import load_table
     from ecommerce_dataengineering_project_spark.sources.txlog import TxTable
+    from ecommerce_dataengineering_project_spark.streaming.bronze_silver import (
+        EVENT_SCHEMA,
+        events_to_kafka,
+        stream_events_to_silver,
+    )
 
     dag = Dag("sales_pipeline")
+    run_dir = f"run={run_token}"
+    bronze = os.path.join(out_root, "bronze_events", run_dir)
+    silver = os.path.join(out_root, "silver_purchases", run_dir)
+    daily = os.path.join(out_root, "daily_sales")
 
     def produce():  # the bounded stand-in for generator.producer
-        load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(
-            os.path.join(out_root, "bronze_events")
-        )
+        events_to_kafka(load_table(spark, sf_dir, "events")).write.mode(
+            "overwrite"
+        ).parquet(bronze)
 
     def stream():  # streaming_consumer's bronze->silver hop, bounded
-        from ecommerce_dataengineering_project_spark.queries.streaming_queries import (
-            q_stream_bronze_silver,
-        )
-
-        q_stream_bronze_silver(spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(out_root, "silver_purchases")
+        stream_events_to_silver(
+            spark,
+            bronze,
+            silver,
+            os.path.join(out_root, "checkpoints", "run_streaming_consumer", run_dir),
         )
 
     def promote():  # delta_to_iceberg: silver -> versioned gold table
@@ -238,9 +267,8 @@ def sales_pipeline_dag(
         # over the same out_root (new token, new watermark key) really
         # appends — a fixed app_id would make every later run a
         # silent permanent no-op.
-        silver = spark.read.parquet(os.path.join(out_root, "silver_purchases"))
         TxTable(os.path.join(out_root, "gold_tx")).append_txn(
-            silver,
+            spark.read.schema(EVENT_SCHEMA).parquet(silver),
             app_id=f"sales_pipeline.promote.{run_token}",
             txn_version=1,
         )
@@ -249,14 +277,13 @@ def sales_pipeline_dag(
         q_fct_purchases(spark, sf_dir).write.mode("overwrite").parquet(
             os.path.join(out_root, "fct_purchases")
         )
-        q_daily_sales(spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(out_root, "daily_sales")
-        )
+        q_daily_sales(spark, sf_dir).write.mode("overwrite").parquet(daily)
 
     def anomaly():  # ml/anomaly_detection.py
-        q_anomaly_isolation_forest(spark, sf_dir).where(
-            F.col("is_anomaly")
-        ).write.mode("overwrite").parquet(os.path.join(out_root, "anomalies"))
+        days = spark.read.schema(DAILY_SALES_SCHEMA).parquet(daily).toPandas()
+        spark.createDataFrame(score_daily_sales(days)).where(F.col("is_anomaly")).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out_root, "anomalies"))
 
     dag.add(Task("start"))
     dag.add(Task("produce_sales_stream", produce))
@@ -268,8 +295,7 @@ def sales_pipeline_dag(
     dag.add(Task("ingest_datahub_metadata", lambda: None))
     for up, down in [
         ("start", "produce_sales_stream"),
-        ("start", "run_streaming_consumer"),
-        ("produce_sales_stream", "join_streams"),
+        ("produce_sales_stream", "run_streaming_consumer"),
         ("run_streaming_consumer", "join_streams"),
         ("join_streams", "delta_to_iceberg"),
         ("delta_to_iceberg", "run_dbt_transformation"),

@@ -36,6 +36,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_dataengineering_project_spark.functions.scalars import round_half_up
+from ecommerce_dataengineering_project_spark.ml.daily_anomaly import (
+    fit_daily_forest,
+    score_daily_sales,
+)
 from ecommerce_dataengineering_project_spark.ml.isolation_forest import IsolationForest
 from ecommerce_dataengineering_project_spark.queries.core import _AMOUNT_SQL, q_daily_sales
 
@@ -53,28 +57,11 @@ def q_anomaly_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fit_forest(daily: pd.DataFrame) -> tuple[IsolationForest, np.ndarray]:
-    X = np.log1p(daily[["daily_total_sales", "daily_transaction_count"]].to_numpy())
-    return IsolationForest(n_estimators=100, max_samples=256, seed=42).fit(X), X
-
-
 def q_anomaly_isolation_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily-sales anomaly scores: distributed agg, driver-side fit
     (the aggregate is calendar-bounded — a few thousand rows even at
     100 TB of facts), deterministic seed=42."""
-    daily = q_daily_sales(spark, sf_dir).toPandas()
-    forest, X = _fit_forest(daily)
-    scores = forest.score_samples(X)
-    out = pd.DataFrame(
-        {
-            "purchase_date": daily["purchase_date"],
-            "daily_total_sales": daily["daily_total_sales"],
-            "daily_transaction_count": daily["daily_transaction_count"],
-            "anomaly_score": np.round(scores, 6),
-            "is_anomaly": scores > 0.5,
-        }
-    )
-    return spark.createDataFrame(out)
+    return spark.createDataFrame(score_daily_sales(q_daily_sales(spark, sf_dir).toPandas()))
 
 
 def score_with_forest(
@@ -113,8 +100,7 @@ def q_anomaly_scores_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (|days| rows — tiny at any corpus size): the toPandas fill is
     # the one materialization, the scoring plan reads the blocks.
     daily = q_daily_sales(spark, sf_dir).localCheckpoint(eager=False)
-    daily_pd = daily.toPandas()
-    forest, _ = _fit_forest(daily_pd)
+    forest = fit_daily_forest(daily.toPandas())
     feats = daily.select(
         "purchase_date",
         "daily_total_sales",

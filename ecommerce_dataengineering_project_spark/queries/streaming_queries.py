@@ -28,7 +28,12 @@ from ecommerce_dataengineering_project_spark.functions.scalars import (
     sql_round_half_up,
 )
 from ecommerce_dataengineering_project_spark.sources.readers import load_table
-from ecommerce_dataengineering_project_spark.streaming.bronze_silver import parse_with_drift
+from ecommerce_dataengineering_project_spark.streaming.bronze_silver import (
+    EVENT_JSON_OPTIONS,
+    EVENT_SCHEMA,
+    events_to_kafka,
+    parse_events,
+)
 from ecommerce_dataengineering_project_spark.streaming.event_windows import (
     session_agg,
     sliding_agg,
@@ -49,29 +54,11 @@ from ecommerce_dataengineering_project_spark.streaming.stateful import (
     inventory_restock_stream,
 )
 from pyspark.sql.types import (
-    DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
-
-EVENT_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
-
-# Lossless timestamp round-trip through JSON (default to_json format
-# truncates to milliseconds; events carry microseconds).
-_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-
 
 # Event-time cut points for the staged micro-batch splits. n_data=3 is
 # the original three 10-day ranges; n_data=1/2 are the CONSOLIDATED
@@ -181,30 +168,17 @@ def q_stream_bronze_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1/P1-P3 end-to-end: events -> JSON 'value' strings (Kafka
     shape) -> streaming from_json parse with drift-tolerant schema ->
     append sink. Stateless, so no flush rows needed."""
-    # timestampNTZFormat is belt-and-braces: load_table normalizes NTZ
-    # to TIMESTAMP, but if an NTZ column ever reaches this JSON
-    # round-trip, the default NTZ format would truncate µs→ms.
-    opts = {"timestampFormat": _TS_FMT, "timestampNTZFormat": _TS_FMT}
-    aliases = {"value": ["value", "amount"]}  # drift-alias demo (cf. add_supplement(s))
 
     def stage(source_dir: str):
         # stateless parse: one consolidated micro-batch (r16 — each
         # extra batch paid a full trigger of addBatch + commit fsync
         # for a pipeline with no state to carry between batches)
-        tagged = _tagged_events(spark, sf_dir, n_data=1)
-        data_cols = [c for c in tagged.columns if c != "__batch"]
-        kafka = tagged.select(
-            F.to_json(F.struct(*data_cols), opts).alias("value"), "__batch"
-        )
+        kafka = events_to_kafka(_tagged_events(spark, sf_dir, n_data=1), "__batch")
         stage_source_tagged(kafka, 1, source_dir)
         return kafka.drop("__batch").schema
 
     src = staged_source(spark, f"events_kafka_d1_{_sf_key(sf_dir)}", stage)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        return parse_with_drift(stream, EVENT_SCHEMA, aliases, options=opts)
-
-    return run_bounded_stream(spark, "bronze_silver", None, transform, source=src)
+    return run_bounded_stream(spark, "bronze_silver", None, parse_events, source=src)
 
 
 def q_stream_tumbling_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -564,8 +538,6 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_quarantine,
     )
 
-    opts = {"timestampFormat": _TS_FMT, "timestampNTZFormat": _TS_FMT}
-
     def stage(source_dir: str):
         # stateless corrupt-capture parse: one consolidated batch (r16)
         tagged = _tagged_events(spark, sf_dir, n_data=1)
@@ -576,7 +548,7 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("event_id") % 7 == 0,
                 F.concat(F.lit("corrupt:"), F.col("event_id").cast("string")),
             )
-            .otherwise(F.to_json(F.struct(*data_cols), opts))
+            .otherwise(F.to_json(F.struct(*data_cols), EVENT_JSON_OPTIONS))
             .alias("value"),
             "__batch",
         )
@@ -589,7 +561,7 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def transform(stream: DataFrame) -> DataFrame:
-        return parse_quarantine(stream, parse_schema, options=opts)
+        return parse_quarantine(stream, parse_schema, options=EVENT_JSON_OPTIONS)
 
     return run_bounded_stream(spark, "quarantine", None, transform, source=src)
 

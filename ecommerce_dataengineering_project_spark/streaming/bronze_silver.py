@@ -17,13 +17,14 @@ column, so both producer generations land in one silver schema.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
     IntegerType,
+    LongType,
     StringType,
     TimestampType,
 )
@@ -45,6 +46,25 @@ PURCHASE_SCHEMA = StructType(
 )
 
 PURCHASE_DRIFT_ALIASES = {"add_supplement": ["add_supplement", "add_supplements"]}
+
+# The click-event stream the medallion DAG carries from bronze to silver.
+EVENT_SCHEMA = StructType(
+    [
+        StructField("event_id", LongType()),
+        StructField("ts", TimestampType()),
+        StructField("user_id", LongType()),
+        StructField("event_type", StringType()),
+        StructField("value", DoubleType()),
+        StructField("props", StringType()),
+    ]
+)
+
+# Lossless timestamp round-trip through JSON (default to_json format
+# truncates to milliseconds; events carry microseconds). The NTZ format
+# covers an NTZ column that reaches the round-trip un-normalized.
+_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+EVENT_JSON_OPTIONS = {"timestampFormat": _TS_FMT, "timestampNTZFormat": _TS_FMT}
+EVENT_DRIFT_ALIASES = {"value": ["value", "amount"]}
 
 
 def _widen_schema(schema: StructType, aliases: dict[str, list[str]]) -> StructType:
@@ -140,3 +160,42 @@ def to_kafka_shape(df: DataFrame, options: dict[str, str] | None = None) -> Data
 def stamp_ingestion(df: DataFrame, col: str = "ingestion_timestamp") -> Column:
     """P4 (streaming_consumer.py:72)."""
     return df.withColumn(col, F.current_timestamp())
+
+
+def events_to_kafka(events: DataFrame, *keep: str) -> DataFrame:
+    """Click events as Kafka-shaped bronze: the ``EVENT_SCHEMA`` columns
+    serialized into one JSON ``value`` string, plus the ``keep``
+    columns unchanged."""
+    value = F.to_json(F.struct(*EVENT_SCHEMA.fieldNames()), EVENT_JSON_OPTIONS)
+    return events.select(value.alias("value"), *keep)
+
+
+def parse_events(kafka_shaped: DataFrame) -> DataFrame:
+    """The inverse of ``events_to_kafka``: ``EVENT_SCHEMA`` rows, with
+    ``amount`` accepted as a drifted name for ``value``."""
+    return parse_with_drift(
+        kafka_shaped, EVENT_SCHEMA, EVENT_DRIFT_ALIASES, options=EVENT_JSON_OPTIONS
+    )
+
+
+def stream_events_to_silver(
+    spark: SparkSession, bronze_dir: str, silver_dir: str, checkpoint_dir: str
+) -> None:
+    """The streaming consumer's bronze->silver hop over the parquet
+    files of ``events_to_kafka`` bronze in ``bronze_dir``: one
+    ``availableNow`` run parses every file the checkpoint has not yet
+    committed and appends it to the parquet sink ``silver_dir``, then
+    stops. A re-run with the same checkpoint finds nothing new and
+    writes nothing, so replaying the hop after a crash is a no-op.
+    With no ``maxFilesPerTrigger``, the run takes every new file in one
+    micro-batch."""
+    bronze = spark.readStream.schema("value STRING").parquet(bronze_dir)
+    q = (
+        parse_events(bronze)
+        .writeStream.format("parquet")
+        .option("path", silver_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()

@@ -4,6 +4,7 @@ recall, and the P11/P12 pipeline query."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from ecommerce_dataengineering_project_spark.ml.isolation_forest import IsolationForest
 
@@ -101,3 +102,32 @@ def test_scores_match_golden_file():
     X = np.vstack([normal, outliers])
     s = IsolationForest(seed=golden["seed"]).fit(X).score_samples(X)
     np.testing.assert_allclose(s, np.array(golden["scores"]), rtol=0, atol=1e-9)
+
+
+# sha256 of repr(forest._trees) for IsolationForest(seed=42) on
+# _daily_like(n), recorded before the tree builder was last optimized:
+# a faster build must draw the same random numbers in the same order.
+TREE_FINGERPRINTS = {
+    60: "2a9c4f9c373b9a4581e0776ddd9b896c43b7b6d0b8d8aaeca9d13b691b582cd8",
+    256: "f0c138d90a7988b9d74702f85af82063774a51371cc362ede0d58a09b1d87f5c",
+    1000: "f5ef68bc6be7f6758b733219cc3c04f9dd3c69bca750541d4169d4a8ca84e004",
+}
+
+
+def _daily_like(n: int) -> np.ndarray:
+    """log1p(daily sales, daily count)-shaped features: a continuous
+    column and an integer one with ties, so nodes go constant on one
+    feature before the other."""
+    rng = np.random.default_rng(n)
+    X = np.log1p(np.column_stack([rng.lognormal(8, 0.5, n), rng.poisson(40, n)]).astype(float))
+    X[: max(1, n // 50)] *= 1.3
+    return X
+
+
+@pytest.mark.parametrize("n", sorted(TREE_FINGERPRINTS))
+def test_trees_match_recorded_fingerprints(n):
+    import hashlib
+
+    forest = IsolationForest(n_estimators=100, max_samples=256, seed=42).fit(_daily_like(n))
+    digest = hashlib.sha256(repr(forest._trees).encode()).hexdigest()
+    assert digest == TREE_FINGERPRINTS[n]

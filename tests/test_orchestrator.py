@@ -161,3 +161,106 @@ def test_sales_pipeline_dag_end_to_end(spark, tmp_path):
         TxTable(os.path.join(out, "gold_tx")).read(spark).count()
         == 2 * gold.count()
     )
+
+
+def test_failed_produce_marks_stream_hop_upstream_failed(tmp_path):
+    """The stream hop consumes what produce wrote, so it waits for it:
+    a failed produce stops the hop and everything after it."""
+    from ecommerce_dataengineering_project_spark.plans.orchestrator import sales_pipeline_dag
+
+    def boom():
+        raise RuntimeError("producer down")
+
+    dag = sales_pipeline_dag(None, str(tmp_path / "sf"), str(tmp_path / "out"))
+    dag.tasks["produce_sales_stream"].fn = boom
+    states = DagRun(dag, "r1", str(tmp_path / "state")).run()
+    assert states["produce_sales_stream"] == FAILED
+    assert states["run_streaming_consumer"] == UPSTREAM_FAILED
+    assert {s for t, s in states.items() if t not in ("start", "produce_sales_stream")} == {
+        UPSTREAM_FAILED
+    }
+
+
+def _listing(root: str) -> dict[str, int]:
+    import os
+
+    out = {}
+    for d, dirs, files in os.walk(root):
+        for name in dirs + files:
+            path = os.path.join(d, name)
+            out[path] = os.stat(path).st_mtime_ns
+    return out
+
+
+@pytest.fixture(scope="module")
+def refresh(spark, sf_dir, tmp_path_factory):
+    """One finished sales_pipeline refresh over ``sf_dir``, with the
+    streaming harness's scratch tree listed before and after it."""
+    import os
+
+    from ecommerce_dataengineering_project_spark.plans.orchestrator import sales_pipeline_dag
+    from ecommerce_dataengineering_project_spark.streaming.harness import TMP_ROOT
+
+    base = tmp_path_factory.mktemp("refresh")
+    out = str(base / "out")
+    streams = os.path.join(TMP_ROOT, "streams")
+    before = _listing(streams)
+    dag = sales_pipeline_dag(spark, sf_dir, out, run_token="r1")
+    states = DagRun(dag, "r1", str(base / "state")).run()
+    assert set(states.values()) == {SUCCESS}, states
+    return dag, out, before, _listing(streams)
+
+
+def test_refresh_writes_nothing_to_harness_scratch(refresh):
+    _, _, before, after = refresh
+    assert after == before
+
+
+def test_replayed_stream_hop_and_promote_write_nothing(spark, sf_dir, refresh):
+    """A crash between a task's commit and the DagRun's state save
+    re-runs the task on resume. The stream checkpoint and the
+    append_txn watermark make both replays no-ops."""
+    import os
+
+    from ecommerce_dataengineering_project_spark.sources.readers import load_table
+    from ecommerce_dataengineering_project_spark.sources.txlog import TxTable
+    from ecommerce_dataengineering_project_spark.streaming.bronze_silver import EVENT_SCHEMA
+
+    dag, out, _, _ = refresh
+    silver_dir = os.path.join(out, "silver_purchases", "run=r1")
+
+    def counts():
+        silver = spark.read.parquet(silver_dir).count()
+        return silver, TxTable(os.path.join(out, "gold_tx")).read(spark).count()
+
+    events = load_table(spark, sf_dir, "events").count()
+    assert counts() == (events, events)
+    # promote reads silver with EVENT_SCHEMA instead of inferring it
+    assert [(f.name, f.dataType) for f in spark.read.parquet(silver_dir).schema] == [
+        (f.name, f.dataType) for f in EVENT_SCHEMA
+    ]
+    dag.tasks["run_streaming_consumer"].fn()
+    dag.tasks["delta_to_iceberg"].fn()
+    assert counts() == (events, events)
+
+
+def test_refresh_anomalies_equal_the_anomaly_query(spark, sf_dir, refresh):
+    """The DAG fits on the daily_sales it persisted; the query fits on
+    its own aggregation of the same lineitem. Same days, same forest."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from ecommerce_dataengineering_project_spark.queries.ml_queries import (
+        q_anomaly_isolation_forest,
+    )
+
+    _, out, _, _ = refresh
+    got = sorted(tuple(r) for r in spark.read.parquet(os.path.join(out, "anomalies")).collect())
+    want = sorted(
+        tuple(r)
+        for r in q_anomaly_isolation_forest(spark, sf_dir).where(F.col("is_anomaly")).collect()
+    )
+    days = spark.read.parquet(os.path.join(out, "daily_sales")).count()
+    assert got == want
+    assert 0 < len(got) < days

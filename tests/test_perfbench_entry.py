@@ -3,8 +3,8 @@
 perfbench/ calls engine functions by name (operators, their arguments,
 the DuckDB oracles). An engine rename that breaks it must fail here,
 in the test suite, before it reaches a benchmark run. One tiny traced
-corpus_dedup run covers every engine function the traced pass and its
-checks call.
+run per workload covers every engine function its operations, traced
+spans and checks call.
 """
 
 from __future__ import annotations
@@ -14,12 +14,15 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_corpus_dedup_traced_tiny_run_is_correct():
+@pytest.mark.parametrize("workload", ["corpus_dedup", "medallion"])
+def test_traced_tiny_run_is_correct(workload):
     cmd = [
-        sys.executable, "perfbench/run.py", "--workload", "corpus_dedup", "--seed", "3",
+        sys.executable, "perfbench/run.py", "--workload", workload, "--seed", "3",
         "--scale", "tiny", "--seconds", "1", "--trace", "1",
     ]
     p = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True, timeout=600)

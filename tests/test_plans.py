@@ -9,6 +9,7 @@ regression here is invisible at sf0.01 and catastrophic at 100 TB.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 import pytest
@@ -32,6 +33,29 @@ def test_column_pruning_daily_sales(spark, sf_dir):
     scan = [ln for ln in plan.splitlines() if "FileScan parquet" in ln][0]
     assert "l_extendedprice" in scan and "l_shipdate" in scan
     assert "l_comment" not in scan and "l_partkey" not in scan
+
+
+def test_daily_sales_sorts_in_one_partition_without_range_sampling(spark, sf_dir):
+    """The per-day result is sorted behind one SinglePartition exchange:
+    no range partitioning (whose bounds cost a sampling job), while the
+    aggregate's own hash exchange keeps its parallelism. coalesce(1)
+    would drop the SinglePartition exchange and pull the final
+    aggregation into one task. DAILY_SALES_SCHEMA, which readers of the
+    persisted result pass, names the columns it returns."""
+    from ecommerce_dataengineering_project_spark.operators.aggregates import DAILY_SALES_SCHEMA
+
+    df = q_daily_sales(spark, sf_dir)
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in DAILY_SALES_SCHEMA
+    ]
+    days = [r.purchase_date for r in df.collect()]
+    plan = _plan(df)
+    assert "isFinalPlan=true" in plan
+    assert "Exchange SinglePartition" in plan
+    assert "rangepartitioning" not in plan
+    hash_parts = [int(n) for n in re.findall(r"Exchange hashpartitioning\(.*, (\d+)\)", plan)]
+    assert hash_parts and min(hash_parts) > 1, plan
+    assert len(days) > 1 and days == sorted(days)
 
 
 def test_filter_pushdown_incremental(spark, sf_dir):
