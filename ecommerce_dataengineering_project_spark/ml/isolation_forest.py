@@ -65,8 +65,13 @@ class IsolationForest:
             my = len(nodes)
             nodes.append(None)  # reserve
             sub = X[idx]
-            hi_all, lo_all = sub.max(0), sub.min(0)
-            if depth >= limit or len(idx) <= 1 or (hi_all == lo_all).all():
+            # a split can leave a child empty (uniform(lo, hi) may round
+            # to lo), and max/min of an empty array raise: test size first
+            leaf = depth >= limit or len(idx) <= 1
+            if not leaf:
+                hi_all, lo_all = sub.max(0), sub.min(0)
+                leaf = (hi_all == lo_all).all()
+            if leaf:
                 nodes[my] = ("leaf", len(idx), depth)
                 return my
             # uniform feature among non-constant ones; integers() is the

@@ -17,6 +17,10 @@ Scale design (the whole point of these ops is the 100 TB case):
   closes over the token expression gets ``split(text)`` inlined into
   its body by the optimizer, which re-splits the document per n-gram
   (quadratic in document length); see ``shingle_sets``.
+- connected components: min-label propagation over the undirected
+  pair graph, one join plus one map-side-combined ``min`` aggregate per
+  round (the first round needs no join); the large/small-star variant
+  takes O(log n) rounds on long chains.
 - SimHash: 60-bit per-doc signature via per-bit vote aggregation
   (Charikar '02) — one groupBy, signatures join/band cheaply.
 - n-gram Jaccard: the exact (quadratic-within-bucket) baseline used to
@@ -431,13 +435,21 @@ def connected_components(
     and match relations are not transitive-closed by construction.
 
     Min-label propagation: each round every node takes the smallest
-    label among itself and its neighbors (one join + one map-side-
-    combined groupBy per round — no driver-side graph state; labels
-    are per-edge messages, so a 100 TB edge set just shuffles by key).
-    Rounds needed = graph diameter, which for near-dup clusters is
-    small (components are quasi-cliques of rewrites of one document —
-    LSH/Jaccard candidates share shingles, so most members pair
-    directly). For adversarial long-chain graphs the alternating
+    label among itself and its neighbors — no driver-side graph state;
+    labels are per-edge messages, so a 100 TB edge set just shuffles
+    by key. Round 1 starts from the identity labelling (each node's
+    label is its own id), so it needs no join: it is the messages
+    ``dst -> src`` and ``src -> src`` over the undirected edges,
+    grouped by node with ``min``. Each later round is one join of the
+    edges with the labels (``src = node`` sends ``(dst, label)``) and
+    one map-side-combined ``min`` aggregate over those messages unioned
+    with the nodes' own labels. Self-edges are dropped, and duplicate
+    edges are harmless: ``min`` is idempotent and the map-side combine
+    folds a repeated message before the exchange, so the edges are
+    never ``distinct``-ed. Rounds needed = graph diameter, which for
+    near-dup clusters is small (components are quasi-cliques of
+    rewrites of one document — LSH/Jaccard candidates share shingles,
+    so most members pair directly). For adversarial long-chain graphs the alternating
     large-star/small-star variant (Kiveris et al., "Connected
     Components in MapReduce") converges in O(log n) rounds; the
     per-round dataflow below is the same shape.
@@ -446,18 +458,22 @@ def connected_components(
     order-independent XOR of the (node, label) pair hashes): a round
     either strictly decreases some label or changes nothing, so an
     unchanged signature IS the fixpoint (two scalars per round to the
-    driver — the loop is driver-side but the data never is). The
-    signature rides the round's label rebuild as an ``observe()``
-    metric (the X28 CollectMetrics pattern): it is accumulated inline
-    by the SAME job that materializes the round's eager
-    ``localCheckpoint`` — no second aggregate pass over the labels,
-    no extra exchange, one job per round. (The earlier lazy-checkpoint
-    + separate ``agg().collect()`` formulation re-scanned the labels
-    through a partial/final aggregate each round — a measured 1.28x
-    on the sf0.1 headline.) ``localCheckpoint`` truncates each
-    round's lineage so the plan doesn't grow with the round count.
+    driver — the loop is driver-side but the data never is). Round 1
+    is compared with the empty labelling's signature ``(0, None)``,
+    which it equals only when there are no edges. The signature rides
+    the round's label rebuild as an ``observe()`` metric (the X28
+    CollectMetrics pattern): it is accumulated inline by the SAME job
+    that materializes the round's eager ``localCheckpoint`` — no second
+    aggregate pass over the labels, no extra exchange, one job per
+    round. (The earlier lazy-checkpoint + separate ``agg().collect()``
+    formulation re-scanned the labels through a partial/final
+    aggregate each round — a measured 1.28x on the sf0.1 headline.)
+    ``localCheckpoint`` truncates each round's lineage so the plan
+    doesn't grow with the round count. A path of n nodes needs
+    ``max_rounds >= n``: n - 1 rounds to reach the fixpoint and one to
+    see it.
 
-    If ``max_rounds`` is exhausted before the fixpoint (diameter >
+    If ``max_rounds`` is exhausted before the fixpoint (diameter >=
     max_rounds — chained near-dup families), the labels are NOT
     transitively closed and silently returning them would be wrong.
     ``on_exhausted`` decides: ``"fallback"`` (default) reruns with the
@@ -471,7 +487,7 @@ def connected_components(
     und = (
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
+        .where(F.col("src") != F.col("dst"))
         .persist()
     )
     # Iterate only over nodes that appear in some edge: in a dedup
@@ -481,31 +497,31 @@ def connected_components(
     _checkpoint_signed_nl = functools.partial(
         _checkpoint_signed, c1="node", c2="label"
     )
-    labels, prev_sum = _checkpoint_signed_nl(
-        und.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
+
+    def _min_label(msgs: DataFrame) -> DataFrame:
+        return msgs.groupBy("node").agg(F.min("label").alias("label"))
+
+    step = _min_label(
+        und.select(F.col("dst").alias("node"), F.col("src").alias("label")).unionAll(
+            und.select(F.col("src").alias("node"), F.col("src").alias("label"))
+        )
     )
+    prev_sig = (0, None)
     converged = False
-    for _ in range(max_rounds):
-        nbr_min = (
-            und.join(labels, und["src"] == labels["node"])
-            .groupBy("dst")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        labels, cur_sum = _checkpoint_signed_nl(
-            labels.join(nbr_min, labels["node"] == nbr_min["dst"], "left").select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
+    try:
+        for _ in range(max_rounds):
+            labels, sig = _checkpoint_signed_nl(step)
+            if sig == prev_sig:
+                converged = True
+                break
+            prev_sig = sig
+            step = _min_label(
+                und.join(labels, und["src"] == labels["node"])
+                .select(F.col("dst").alias("node"), "label")
+                .unionAll(labels)
             )
-        )
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    und.unpersist()
+    finally:
+        und.unpersist()
     if not converged:
         # Labels were still moving on the last allowed round: they are
         # not a transitive closure and MUST NOT be returned as-is.

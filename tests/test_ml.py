@@ -131,3 +131,12 @@ def test_trees_match_recorded_fingerprints(n):
     forest = IsolationForest(n_estimators=100, max_samples=256, seed=42).fit(_daily_like(n))
     digest = hashlib.sha256(repr(forest._trees).encode()).hexdigest()
     assert digest == TREE_FINGERPRINTS[n]
+
+
+def test_fit_survives_an_empty_child():
+    """Two values one ulp apart: the threshold drawn between them can
+    round to the lower one, leaving a child with no rows, which must
+    become a leaf rather than raise."""
+    X = np.array([100.0, 99.99999999999999]).reshape(-1, 1)
+    s = IsolationForest(n_estimators=10, seed=1).fit(X).score_samples(X)
+    assert ((s > 0.0) & (s <= 1.0)).all()
