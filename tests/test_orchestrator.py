@@ -4,6 +4,9 @@ semantics, plus the sales pipeline wired over real engine stages."""
 
 from __future__ import annotations
 
+import json
+import os
+import threading
 import time
 
 import pytest
@@ -128,6 +131,160 @@ def test_resume_reruns_only_unfinished_tasks(tmp_path):
     calls.clear()
     DagRun(dag, "r2", str(tmp_path)).run()
     assert calls == ["first", "mid", "last"]
+
+
+def _chain(calls, *tids, fns=None):
+    """A linear DAG over ``tids``; each task records its run unless
+    ``fns`` gives it another body."""
+    fns = fns or {}
+    dag = Dag("t")
+    for tid in tids:
+        dag.add(Task(tid, fns.get(tid, lambda tid=tid: calls.append(tid))))
+    for up, down in zip(tids, tids[1:]):
+        dag.set_downstream(up, down)
+    return dag
+
+
+def _log(run: DagRun) -> list[dict]:
+    with open(run.log_path) as fh:
+        return [json.loads(line) for line in fh]
+
+
+@pytest.mark.parametrize("tail", [b'{"task": "mid", "try": 2, "sta', b"garbage\n"])
+def test_torn_or_garbage_trailing_line_is_ignored_on_resume(tmp_path, tail):
+    calls: list[str] = []
+    healthy = {"ok": False}
+
+    def mid():
+        calls.append("mid")
+        if not healthy["ok"]:
+            raise RuntimeError("still broken")
+
+    dag = _chain(calls, "first", "mid", "last", fns={"mid": mid})
+    run = DagRun(dag, "r1", str(tmp_path))
+    assert run.run() == {"first": SUCCESS, "mid": FAILED, "last": UPSTREAM_FAILED}
+    with open(run.log_path, "ab") as fh:
+        fh.write(tail)
+    healthy["ok"] = True
+    resumed = DagRun(dag, "r1", str(tmp_path))
+    assert resumed.state["mid"]["state"] == FAILED
+    assert resumed.run() == {"first": SUCCESS, "mid": SUCCESS, "last": SUCCESS}
+    assert calls == ["first", "mid", "mid", "last"]
+    # the tail was cut before the resume appended, so every line parses
+    assert [r["state"] for r in _log(resumed) if r["task"] == "mid"] == [
+        "running", FAILED, "running", SUCCESS,
+    ]
+
+
+def test_unparsable_line_before_the_last_raises(tmp_path):
+    run = DagRun(_chain([], "a", "b"), "r1", str(tmp_path))
+    run.run()
+    with open(run.log_path) as fh:
+        lines = fh.readlines()
+    lines.insert(1, "garbage\n")
+    with open(run.log_path, "w") as fh:
+        fh.writelines(lines)
+    with pytest.raises(ValueError, match="line 2"):
+        DagRun(_chain([], "a", "b"), "r1", str(tmp_path))
+
+
+@pytest.mark.parametrize("crash_at", range(4))
+def test_crash_resumes_at_the_crashed_task(tmp_path, crash_at):
+    """A BaseException out of a task fn stands in for the process dying
+    while that task runs: the resume skips everything before it and
+    re-runs it and its downstream, each exactly once."""
+    tids = ["a", "b", "c", "d"]
+    calls: list[str] = []
+    crashed = {"yet": False}
+
+    def crashing():
+        if not crashed["yet"]:
+            crashed["yet"] = True
+            raise SystemExit("killed")
+        calls.append(tids[crash_at])
+
+    dag = _chain(calls, *tids, fns={tids[crash_at]: crashing})
+    with pytest.raises(SystemExit):
+        DagRun(dag, "r1", str(tmp_path)).run()
+    assert calls == tids[:crash_at]
+    resumed = DagRun(dag, "r1", str(tmp_path))
+    assert resumed.state[tids[crash_at]]["state"] == "running"
+    assert resumed.run() == {t: SUCCESS for t in tids}
+    assert calls == tids
+    assert resumed.state[tids[crash_at]]["try"] == 2
+
+
+def _explode():
+    raise ValueError("bad row 7")
+
+
+def test_failed_attempts_log_error_type_message_and_traceback(tmp_path):
+    dag = Dag("t")
+    dag.add(Task("boom", _explode, retries=1))
+    run = DagRun(dag, "r1", str(tmp_path))
+    assert run.run() == {"boom": FAILED}
+    lines = _log(run)
+    assert [(r["try"], r["state"]) for r in lines] == [
+        (1, "running"), (1, "up_for_retry"), (2, "running"), (2, FAILED),
+    ]
+    for r in lines[1::2]:
+        assert r["error_type"] == "ValueError"
+        assert r["message"] == "bad row 7"
+        assert "in _explode" in r["traceback"]
+        assert r["traceback"].endswith("ValueError: bad row 7")
+        assert r["start"] <= r["end"]
+    assert lines[0]["end"] is None and lines[0]["error_type"] is None
+
+
+def test_timed_out_attempt_is_logged_as_task_timeout(tmp_path):
+    release = threading.Event()
+    dag = Dag("t")
+    dag.add(Task("slow", lambda: release.wait(5), execution_timeout_s=0.05))
+    run = DagRun(dag, "r1", str(tmp_path))
+    try:
+        assert run.run() == {"slow": FAILED}
+    finally:
+        release.set()
+    last = _log(run)[-1]
+    assert (last["state"], last["error_type"]) == (FAILED, "TaskTimeout")
+    assert last["message"] == "slow: exceeded 0.05s"
+    assert last["end"] - last["start"] >= 0.05
+
+
+def test_run_appends_one_line_per_transition_and_never_renames(tmp_path, monkeypatch):
+    """No state write replaces or renames a file: every transition is
+    one appended line, and nothing else is written."""
+
+    def no_rename(*_a, **_kw):
+        raise AssertionError("state must be appended, not replaced")
+
+    monkeypatch.setattr(os, "replace", no_rename)
+    monkeypatch.setattr(os, "rename", no_rename)
+    flaky = {"n": 0}
+
+    def fails_once():
+        flaky["n"] += 1
+        if flaky["n"] == 1:
+            raise RuntimeError("transient")
+
+    calls: list[str] = []
+    dag = _chain(
+        calls, "a", "b", "c", "d", "e",
+        fns={"b": fails_once, "d": lambda: 1 / 0},
+    )
+    dag.tasks["b"].retries = 1
+    run = DagRun(dag, "r1", str(tmp_path))
+    assert run.run() == {
+        "a": SUCCESS, "b": SUCCESS, "c": SUCCESS, "d": FAILED, "e": UPSTREAM_FAILED,
+    }
+    assert [(r["task"], r["state"]) for r in _log(run)] == [
+        ("a", "running"), ("a", SUCCESS),
+        ("b", "running"), ("b", "up_for_retry"), ("b", "running"), ("b", SUCCESS),
+        ("c", "running"), ("c", SUCCESS),
+        ("d", "running"), ("d", FAILED),
+        ("e", UPSTREAM_FAILED),
+    ]
+    assert os.listdir(tmp_path) == [os.path.basename(run.log_path)]
 
 
 def test_sales_pipeline_dag_end_to_end(spark, tmp_path):
