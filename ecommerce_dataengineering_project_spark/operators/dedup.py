@@ -991,7 +991,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.4,
-    max_codegen_doubles: int | None = None,
     shard_col: str | None = None,
 ) -> DataFrame:
     """SemDeDup-style cluster-scoped embedding dedup (Abbas et al.
@@ -1004,22 +1003,14 @@ def semantic_dedup(
     candidate space shrinks from O(n^2) to sum of per-cell squares —
     with k balanced cells, a k-fold reduction — and the only wide ops
     are one exchange on the (small-int) cell key plus the keep
-    anti-join. Centroids arrive as plan literals (seeded_centroids or
-    a trained fit); assignment is the pure-codegen sequential-fold
-    scorer (ivf_cell_exact), so with seeded centroids the whole
-    operator — assignment, pairing, keep decision — reproduces
-    bit-for-bit in a SQL oracle. The price vs the exact global scan
-    is recall: near-dups straddling a cell boundary are missed
-    (SemDeDup accepts this by design; raise the cell count only as
-    sqrt-ish of corpus size to keep cells dense).
-
-    Assignment auto-switches on plan size (similarity.cell_assign):
-    past ``max_codegen_doubles`` total centroid doubles (default
-    similarity.MAX_CODEGEN_CENTROID_DOUBLES ≈ 2 MB of literals — the
-    point sqrt(n) cells cross at true 100-TB corpus sizes) the
-    nearest-cell scorer runs as the Arrow-batched numpy matmul instead
-    of the codegen fold, keeping plan size O(1) in the cell count. The
-    pairing and keep stages are identical either way.
+    anti-join. Centroids come from seeded_centroids or a trained fit;
+    assignment is similarity.nearest_cells, bit-identical to a SQL
+    fold, so with seeded centroids the whole operator — assignment,
+    pairing, keep decision — reproduces bit-for-bit in a SQL oracle,
+    and the plan's size does not grow with the cell count. The price
+    vs the exact global scan is recall: near-dups straddling a cell
+    boundary are missed (SemDeDup accepts this by design; raise the
+    cell count only as sqrt-ish of corpus size to keep cells dense).
 
     ``shard_col`` is the 100 TB configuration (the production SemDeDup
     shape): pair only within (shard, cell), where the shard is a
@@ -1039,10 +1030,9 @@ def semantic_dedup(
     to a sentinel shard upstream if they should dedup together.
     """
     from ecommerce_dataengineering_project_spark.operators.similarity import (
-        MAX_CODEGEN_CENTROID_DOUBLES,
         as_double,
-        cell_assign,
         dot,
+        nearest_cells,
         norm,
     )
     from ecommerce_dataengineering_project_spark.functions.scalars import round_half_up
@@ -1051,8 +1041,8 @@ def semantic_dedup(
     v = emb.select(
         F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v"), *shard_cols
     )
-    # The fold assigner costs n * n_cells * dim interpreted ops; a
-    # small single-file corpus otherwise scores it in ONE task (and the
+    # The assigner costs n * n_cells * dim multiply-adds; a small
+    # single-file corpus otherwise scores it in ONE task (and the
     # self-join recomputes it per branch). Round-robin to the session's
     # parallelism ONLY when the scan is narrower than the session — at
     # lake scale the scan already has more partitions than cores and an
@@ -1061,8 +1051,6 @@ def semantic_dedup(
     par = emb.sparkSession.sparkContext.defaultParallelism
     if v.rdd.getNumPartitions() < par:
         v = v.repartition(par)
-    if max_codegen_doubles is None:
-        max_codegen_doubles = MAX_CODEGEN_CENTROID_DOUBLES
     # The assignment is consumed by BOTH sides of the keep-decision
     # self-join; unmaterialized, the probe branch and the partner
     # branch each run the full nearest-cell scorer (n * n_cells * dim)
@@ -1072,10 +1060,7 @@ def semantic_dedup(
     # persisted index there; the in-one-query variant just keeps it in
     # task-local cache instead of a table.
     assigned = (
-        v.withColumn(
-            "cell",
-            cell_assign(F.col("v"), centroids, "v", max_codegen_doubles),
-        )
+        v.withColumn("cell", nearest_cells(F.col("v"), centroids).cells[0])
         .withColumn("nrm", norm("v"))
         .localCheckpoint(eager=False)
     )
@@ -1125,7 +1110,6 @@ def semantic_cell_index(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_codegen_doubles: int | None = None,
 ) -> DataFrame:
     """The persisted state of incremental SEMANTIC dedup: each accepted
     vector's (id, cell, vector, norm) — the kept-embeddings table plus
@@ -1136,17 +1120,14 @@ def semantic_cell_index(
     batch; PERSIST IT BUCKETED/PARTITIONED BY ``cell`` so the probe
     join in ``semantic_dedup_incremental`` never shuffles history."""
     from ecommerce_dataengineering_project_spark.operators.similarity import (
-        MAX_CODEGEN_CENTROID_DOUBLES,
         as_double,
-        cell_assign,
+        nearest_cells,
         norm,
     )
 
-    if max_codegen_doubles is None:
-        max_codegen_doubles = MAX_CODEGEN_CENTROID_DOUBLES
     v = emb.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v"))
     return v.withColumn(
-        "cell", cell_assign(F.col("v"), centroids, "v", max_codegen_doubles)
+        "cell", nearest_cells(F.col("v"), centroids).cells[0]
     ).withColumn("nrm", norm("v"))
 
 
@@ -1157,7 +1138,6 @@ def semantic_dedup_incremental(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.4,
-    max_codegen_doubles: int | None = None,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental SemDeDup — the continuous-ingest variant of X2's
@@ -1186,8 +1166,8 @@ def semantic_dedup_incremental(
     (version centroids WITH the index; refresh both together when
     drift warrants, then re-assign once).
 
-    Scale shape: the new batch is assigned map-side (same codegen/
-    Arrow auto-switch as ``semantic_dedup``), then ONE left-outer join
+    Scale shape: the new batch is assigned map-side (the same
+    nearest-cell assigner as ``semantic_dedup``), then ONE left-outer join
     carries both probes — the history index and the smaller-id batch
     partners ride a single tagged union, so the whole decision is one
     join + one aggregation (the ``semantic_dedup`` single-join move,
@@ -1213,7 +1193,7 @@ def semantic_dedup_incremental(
     # the within-batch partner side of the union — unmaterialized,
     # each branch re-ran the full scorer over the batch.
     nb = (
-        semantic_cell_index(new_emb, centroids, id_col, vec_col, max_codegen_doubles)
+        semantic_cell_index(new_emb, centroids, id_col, vec_col)
         .localCheckpoint(eager=False)
         if assigned is None
         else assigned

@@ -196,7 +196,7 @@ def benchmark_contamination(
     never shuffled; the per-doc max/argmax runs map-side as partial
     aggregation before one corpus-id exchange. Cost is n*m cosines
     with m constant: linear in the corpus. For eval suites large
-    enough that n*m stings, assign BOTH sides IVF cells (cell_assign)
+    enough that n*m stings, assign BOTH sides IVF cells (nearest_cells)
     and score within probed cells only — the same crossover
     dedup_embedding_cosine documents.
 
@@ -390,27 +390,6 @@ def lsh_bucket(vec: str, dim: int, num_planes: int = NUM_PLANES) -> Column:
     return F.expr("CAST(" + " + ".join(parts) + " AS INT)")
 
 
-def _cell_assigner(centroids: list[list[float]], n_probe: int):
-    """Arrow-batched cell assignment: per batch, one numpy matmul
-    against the centroid matrix, argsort for the probe list. (An
-    unrolled n_cells x dim codegen expression works but the generated
-    method is large enough to hurt JIT/compile memory — for a trained
-    quantizer the vectorized pandas UDF is the honest scale path.)"""
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    C = np.asarray(centroids, dtype=np.float64)  # (cells, dim)
-    half_sq = (C * C).sum(axis=1) / 2.0
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def probe_cells(vecs: pd.Series) -> pd.Series:
-        X = np.stack(vecs.to_numpy())  # (batch, dim)
-        scores = X @ C.T - half_sq  # argmax == nearest centroid
-        order = np.argsort(-scores, axis=1)[:, :n_probe]
-        return pd.Series(list(order.astype("int32")))
-
-    return probe_cells
-
-
 def fit_ivf_centroids(
     corpus: DataFrame,
     dim: int,
@@ -421,7 +400,8 @@ def fit_ivf_centroids(
     sample_rows: int = 100_000,
 ) -> list[list[float]]:
     """Coarse quantizer for IVF. Centroids are a few KB of driver
-    state either way and ship to executors as plan literals.
+    state either way and ship to executors inside the
+    :func:`nearest_cells` UDF.
 
     fitter="local" (default): collect a bounded sample and run seeded
     Lloyd iterations in numpy — a coarse quantizer needs rough cells,
@@ -467,9 +447,9 @@ def suggest_n_cells(
 
     Uses floor(IEEE-double sqrt) + clamp so a SQL oracle reproduces the
     count exactly (``GREATEST(min, LEAST(max, CAST(FLOOR(SQRT(n)) AS
-    INT)))``). The ceiling exists because centroids ship as plan
-    literals — 4096 x 64 doubles is ~2 MB of plan, the practical limit
-    before a trained quantizer + broadcast join is the better shape.
+    INT)))``). The ceiling bounds the per-vector assignment work
+    (n_cells x dim multiply-adds, 4096 x 64 at most); past it a
+    trained hierarchical quantizer is the better shape.
     """
     return int(min(max_cells, max(min_cells, math.floor(math.sqrt(max(n_rows, 0))))))
 
@@ -499,7 +479,7 @@ def seeded_centroids(
 
     At scale this is a TakeOrdered over a map-only hash projection (no
     full sort, no training pass); the n_cells vectors are a few KB of
-    plan literals, exactly like the trained path."""
+    driver state, exactly like the trained path."""
     rows = (
         corpus.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
         .withColumn(
@@ -522,71 +502,64 @@ def _halfsq(c: list[float]) -> float:
     return acc / 2.0
 
 
-def _cell_structs(vec: str, centroids: list[list[float]]) -> str:
-    """Per-cell nearest-centroid score structs for a named
-    array<double> column: score_j = ``v . c_j - |c_j|^2/2`` (argmax ==
-    nearest by L2) with the dot as a sequential fold — bit-identical
-    to a LIST_REDUCE(LIST_ZIP(...)) oracle fold. Scores are negated so
-    array_min / ascending sort order means best-first with ties to the
-    LOWER cell id — the same (s DESC, cell ASC) order the oracle's
-    ROW_NUMBER uses.
-
-    Deliberately ONE flat expression per cell, not a
-    transform(sequence(..), j -> ..) over a 2-D centroid literal: the
-    compact form captures the outer lambda variable inside a nested
-    HOF, and when the corpus and query sides scan the same source,
-    Spark 4.1.2's relation deduplication mis-rebinds the captured
-    attribute (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND at execution,
-    reproduced). The flat form has no outer-scope capture and is
-    immune; it costs ~0.1 s of extra eval on the sf0.1 corpus."""
-    return ", ".join(
-        f"named_struct('negs', -((aggregate(zip_with(`{vec}`, "
-        + "array("
-        + ", ".join(f"{x!r}D" for x in c)
-        + "), (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)) - "
-        f"{_halfsq(c)!r}D), 'cell', {j})"
-        for j, c in enumerate(centroids)
-    )
+def _fold_dots(X: np.ndarray, M: np.ndarray) -> np.ndarray:
+    """``X @ M.T`` accumulated one dimension at a time in ascending
+    order, NOT as a BLAS matmul: BLAS may reassociate or FMA the sum,
+    and a score within ~1e-13 of a tie (or of zero, for a sign bit)
+    would then flip against the sequential LIST_REDUCE fold the SQL
+    oracles run. Each step is one IEEE multiply and one add per cell,
+    and 0.0 + t1 == t1, so every entry is bit-identical to that fold."""
+    S = np.zeros((len(X), M.shape[0]), dtype=np.float64)
+    for d in range(X.shape[1]):
+        S += np.outer(X[:, d], M[:, d])
+    return S
 
 
-def ivf_cell_exact(vec: str, centroids: list[list[float]]) -> Column:
-    """Nearest-centroid cell id for a named array<double> column, as a
-    pure codegen expression (no Python on the hot path)."""
-    return F.expr(f"array_min(array({_cell_structs(vec, centroids)})).cell")
-
-
-# Centroid literals stop being plan-friendly past ~2 MB of doubles
-# (4096 cells x 64 dims — the suggest_n_cells ceiling rationale); above
-# this the Arrow-batched matmul assigner is the right shape.
-MAX_CODEGEN_CENTROID_DOUBLES = 4096 * 64
-
-
-def cell_assign(
-    vec_col: Column, centroids: list[list[float]], vec_sql: str,
-    max_codegen_doubles: int = MAX_CODEGEN_CENTROID_DOUBLES,
+def nearest_cells(
+    vec: Column, centroids: list[list[float]], n_probe: int = 1
 ) -> Column:
-    """Nearest-centroid cell id, auto-switching on plan size: below
-    ``max_codegen_doubles`` total centroid doubles, the pure-codegen
-    sequential-fold scorer (bit-for-bit SQL-oracle-reproducible); above
-    it — where sqrt(n) cells at true 100-TB corpus sizes blow past any
-    sane literal budget — the Arrow-batched numpy matmul assigner
-    (one BLAS matmul per batch, centroid matrix captured once per
-    executor, plan size O(1) in the cell count). ``vec_sql`` is the
-    column NAME for the codegen path; ``vec_col`` the Column for the
-    Arrow path — both must refer to the same array<double> values."""
-    n_cells = len(centroids)
-    dim = len(centroids[0]) if n_cells else 0
-    if n_cells * dim <= max_codegen_doubles:
-        return ivf_cell_exact(vec_sql, centroids)
-    return F.element_at(_cell_assigner(centroids, 1)(vec_col), 1)
+    """The nearest-centroid assigner — the one way a vector gets its
+    cell (IVF, SemDeDup, the index lifecycle). ``vec`` is an
+    array<double> column; the result is a struct of
 
+    - ``cells``: the ``n_probe`` nearest cell ids, nearest first;
+    - ``score``: the nearest cell's ``dot(v, c) - |c|^2/2``.
 
-def ivf_probes_exact(vec: str, centroids: list[list[float]], n_probe: int) -> Column:
-    """The ``n_probe`` nearest cell ids, nearest first."""
-    return F.expr(
-        f"transform(slice(sort_array(array({_cell_structs(vec, centroids)})), "
-        f"1, {n_probe}), s -> s.cell)"
+    The score's argmax is the L2-nearest centroid. Dots are
+    :func:`_fold_dots` sums and ``|c|^2/2`` is :func:`_halfsq`, so
+    every score is bit-identical to the oracles' LIST_REDUCE fold.
+    Cells are ordered by a stable sort on the negated score, so equal
+    scores go to the LOWER cell id — the oracles'
+    ``ORDER BY s DESC, cell ASC``.
+
+    One Arrow-batched pandas UDF: the centroids ride in its pickled
+    closure (PySpark broadcasts a command past its size threshold),
+    so the plan's size does not grow with the cell count."""
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        IntegerType,
+        StructField,
+        StructType,
     )
+
+    C = np.asarray(centroids, dtype=np.float64)  # (cells, dim)
+    half_sq = np.asarray([_halfsq(c) for c in centroids], dtype=np.float64)
+    out = StructType(
+        [
+            StructField("cells", ArrayType(IntegerType())),
+            StructField("score", DoubleType()),
+        ]
+    )
+
+    @F.pandas_udf(out)
+    def nearest(vecs: pd.Series) -> pd.DataFrame:
+        scores = _fold_dots(np.stack(vecs.to_numpy()), C) - half_sq
+        order = np.argsort(-scores, axis=1, kind="stable")[:, :n_probe]
+        best = scores[np.arange(len(scores)), order[:, 0]]
+        return pd.DataFrame({"cells": list(order.astype("int32")), "score": best})
+
+    return nearest(vec)
 
 
 def ivf_topk(
@@ -599,26 +572,18 @@ def ivf_topk(
     n_cells: int = 16,
     n_probe: int = 4,
     centroids: list[list[float]] | None = None,
-    assigner: str = "fast",
 ) -> DataFrame:
     """IVF ANN top-k: corpus vectors live in their nearest-centroid
     cell; each query probes its ``n_probe`` nearest cells and scores
     only those vectors. The probe join shuffles only by cell id.
-
-    ``assigner="fast"``: Arrow-batched numpy matmul assignment — the
-    throughput path for trained (k-means) centroids, where bit-level
-    reproducibility across engines is moot anyway.
-    ``assigner="exact"``: pure codegen'd sequential-fold scoring (no
-    Python anywhere) — dimension-ascending accumulation matches a SQL
-    LIST_REDUCE fold bit-for-bit, so with ``seeded_centroids`` the
-    whole query is oracle-checkable.
+    Assignment is :func:`nearest_cells`, bit-identical to a SQL
+    LIST_REDUCE fold, so with ``seeded_centroids`` the whole query is
+    oracle-checkable.
 
     vs LSH (lsh_topk): IVF adapts to the data distribution (cells
     follow density), costs a selection/training pass; LSH is oblivious
     but free. Recall is regression-tested against brute_force_topk.
     """
-    if assigner not in ("fast", "exact"):
-        raise ValueError(f"ivf_topk: unknown assigner {assigner!r}")
     if centroids is None:
         centroids = fit_ivf_centroids(corpus, dim, n_cells, vec_col)
     # Cast + norm are materialized per ROW here, below the join — the
@@ -626,62 +591,61 @@ def ivf_topk(
     # dim-wide expression is wrong on a pair loop: a 193-term generated
     # method blows the JIT huge-method limit and deoptimizes to
     # interpreted bytecode (~7x on this operator).
-    if assigner == "exact":
-        c = _ivf_corpus_cells_exact(corpus, centroids, id_col, vec_col)
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double(F.col(vec_col)).alias("qv"),
-        ).withColumn("probe_cells", ivf_probes_exact("qv", centroids, n_probe))
-    else:
-        assign_one = _cell_assigner(centroids, 1)
-        assign_probe = _cell_assigner(centroids, n_probe)
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double(F.col(vec_col)).alias("cv"),
-            F.element_at(
-                assign_one(F.col(vec_col).cast("array<double>")), 1
-            ).alias("cell"),
-        ).withColumn("c_nrm", norm("cv"))
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double(F.col(vec_col)).alias("qv"),
-            assign_probe(F.col(vec_col).cast("array<double>")).alias("probe_cells"),
-        )
-    q = q.withColumn("q_nrm", norm("qv")).select(
-        "query_id", "qv", "q_nrm", F.explode("probe_cells").alias("cell")
-    )
+    c = _ivf_corpus_cells(corpus, centroids, id_col, vec_col)
+    q = _ivf_probes(queries, centroids, id_col, vec_col, n_probe)
     return _ivf_score_and_rank(c, q, k)
 
 
-def _ivf_corpus_cells_exact(
+def _ivf_corpus_cells(
     corpus: DataFrame,
     centroids: list[list[float]],
     id_col: str,
     vec_col: str,
     meta_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """The exact-assigner corpus relation ``(neighbor_id, cv, cell,
-    c_nrm, *meta_cols)`` — ONE definition shared by the per-run batch
-    path (:func:`ivf_topk`) and the persisted index build
-    (:func:`build_ivf_index`), so the two cannot drift off the
-    bit-identity contract. ``meta_cols`` are filter attributes carried
-    verbatim into the index so FILTERED serving can push predicates
-    into the index scan (:func:`ivf_topk_indexed` ``predicate``)."""
+    """The corpus relation ``(neighbor_id, cv, cell, c_nrm,
+    *meta_cols)`` — ONE definition shared by the per-run batch path
+    (:func:`ivf_topk`) and the persisted index build
+    (:func:`build_ivf_index`), so the two cannot drift apart.
+    ``meta_cols`` are filter attributes carried verbatim into the
+    index so FILTERED serving can push predicates into the index scan
+    (:func:`ivf_topk_indexed` ``predicate``)."""
     return (
         corpus.select(
             F.col(id_col).alias("neighbor_id"),
             as_double(F.col(vec_col)).alias("cv"),
             *[F.col(m) for m in meta_cols],
         )
-        .withColumn("cell", ivf_cell_exact("cv", centroids))
+        .withColumn("cell", nearest_cells(F.col("cv"), centroids).cells[0])
         .withColumn("c_nrm", norm("cv"))
+    )
+
+
+def _ivf_probes(
+    queries: DataFrame,
+    centroids: list[list[float]],
+    id_col: str,
+    vec_col: str,
+    n_probe: int,
+) -> DataFrame:
+    """The query relation: one row per (query, probed cell) with
+    ``(query_id, qv, q_nrm, cell)`` — shared by :func:`ivf_topk` and
+    :func:`ivf_topk_indexed`."""
+    return (
+        queries.select(
+            F.col(id_col).alias("query_id"),
+            as_double(F.col(vec_col)).alias("qv"),
+        )
+        .withColumn("probe_cells", nearest_cells(F.col("qv"), centroids, n_probe).cells)
+        .withColumn("q_nrm", norm("qv"))
+        .select("query_id", "qv", "q_nrm", F.explode("probe_cells").alias("cell"))
     )
 
 
 def _ivf_score_and_rank(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
     """Probe join + cosine + per-query top-k — the ONE scoring block
     both IVF paths share (same rounding, same tie-break), for the same
-    no-drift reason as :func:`_ivf_corpus_cells_exact`. ``c`` carries
+    no-drift reason as :func:`_ivf_corpus_cells`. ``c`` carries
     (neighbor_id, cv, cell, c_nrm); ``q`` carries one row per
     (query, probe cell) with (query_id, qv, q_nrm, cell)."""
     scored = c.join(F.broadcast(q), on="cell").where(
@@ -706,7 +670,7 @@ def _ivf_score_and_rank(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 # IVF index lifecycle: build -> serve -> append -> drift -> re-center.
 # The quantizer manifest is the version contract that keeps the verbs
-# honest: every index carries the sha of the EXACT centroid literals it
+# honest: every index carries the sha of the EXACT centroid set it
 # was assigned with, so an append under re-fitted centroids (silent
 # re-celling), an append with a different stored-meta schema (silent
 # mixed-schema cells whose pushed predicates drop appended rows), or a
@@ -806,8 +770,8 @@ def build_ivf_index(
 ) -> None:
     """Persist the IVF index as a CELL-PARTITIONED parquet table —
     the serving-path form of :func:`ivf_topk`. Each corpus vector is
-    assigned its nearest-centroid cell (the exact codegen assigner,
-    the SAME relation definition the batch path scores from) and
+    assigned its nearest-centroid cell (:func:`nearest_cells`, the
+    SAME relation definition the batch path scores from) and
     written under ``cell=<id>/``; its L2 norm is precomputed and
     stored alongside (an index precomputes what every query would
     otherwise recompute). At 100 TB the build is one assignment pass +
@@ -828,7 +792,7 @@ def build_ivf_index(
     planning time.
     """
     (
-        _ivf_corpus_cells_exact(corpus, centroids, id_col, vec_col, tuple(meta_cols))
+        _ivf_corpus_cells(corpus, centroids, id_col, vec_col, tuple(meta_cols))
         .repartition("cell")
         .write.mode("overwrite")
         .partitionBy("cell")
@@ -881,9 +845,7 @@ def ivf_index_append(
     served results are value-identical, pinned in tests."""
     _require_manifest(path, centroids, tuple(meta_cols), "ivf_index_append")
     (
-        _ivf_corpus_cells_exact(
-            new_vectors, centroids, id_col, vec_col, tuple(meta_cols)
-        )
+        _ivf_corpus_cells(new_vectors, centroids, id_col, vec_col, tuple(meta_cols))
         .repartition("cell")
         .write.mode("append")
         .partitionBy("cell")
@@ -920,19 +882,18 @@ def quantizer_drift(
     per ingest batch at 100 TB."""
     from ecommerce_dataengineering_project_spark.functions.scalars import round_half_up
 
+    # dist² to the ASSIGNED centroid from the assigner's own best
+    # score: score = dot − ½|c|², so dist² = |v|² − 2·score — one
+    # extra fold (|v|², the same zip_with fold the oracle uses) plus
+    # the score the cell was chosen by.
     v = corpus.select(
         F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v")
-    ).withColumn("cell", ivf_cell_exact("v", centroids))
-    # dist² to the ASSIGNED centroid via the same per-cell fold scores
-    # the assigner ranks on: score = dot − ½|c|², so
-    # dist² = |v|² − 2·score_assigned — one extra fold (|v|²) plus the
-    # best score recovered from the identical struct array.
-    dist = (
-        dot("v", "v")  # |v|² as the same zip_with fold the oracle uses
-        - 2.0 * F.expr(_assigned_score_sql("v", centroids))
-    )
+    ).withColumn("a", nearest_cells(F.col("v"), centroids))
     return (
-        v.withColumn("dist2", dist)
+        v.select(
+            F.col("a.cells")[0].alias("cell"),
+            (dot("v", "v") - 2.0 * F.col("a.score")).alias("dist2"),
+        )
         .groupBy("cell")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
@@ -1059,9 +1020,7 @@ def _reapply_centroids(
     import shutil
 
     idx = spark.read.parquet(path)
-    re = idx.withColumn(
-        "new_cell", cell_assign(F.col(vec_col), new_cents, vec_col)
-    )
+    re = idx.withColumn("new_cell", nearest_cells(F.col(vec_col), new_cents).cells[0])
     movers = re.where(F.col("new_cell") != F.col("cell"))
     pair_counts = movers.groupBy("cell", "new_cell").count().collect()
     moved = sum(r["count"] for r in pair_counts)
@@ -1151,18 +1110,6 @@ def ivf_split_cell(
     return new_cents, _reapply_centroids(spark, path, man, new_cents, vec_col)
 
 
-def _assigned_score_sql(vec: str, centroids: list[list[float]]) -> str:
-    """``max(dot(v,c) − ½|c|²)`` over the centroid set — the assigned
-    cell's score, as one SQL expression. The struct scores are stored
-    NEGATED (min == best, ties to the lower cell — _cell_structs), so
-    the best score is −array_min over the same array the assigner
-    sorts: bit-identical arithmetic to the assignment itself."""
-    return (
-        f"-array_min(transform(array({_cell_structs(vec, centroids)}),"
-        " s -> s.negs))"
-    )
-
-
 def ivf_topk_indexed(
     spark,
     queries: DataFrame,
@@ -1210,17 +1157,10 @@ def ivf_topk_indexed(
             f"probes with sha {centroid_sha(centroids)}; after a re-center, "
             "serving must adopt the re-centered centroid set"
         )
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double(F.col(vec_col)).alias("qv"),
-        )
-        .withColumn("probe_cells", ivf_probes_exact("qv", centroids, n_probe))
-        .withColumn("q_nrm", norm("qv"))
-        .select("query_id", "qv", "q_nrm", F.explode("probe_cells").alias("cell"))
-        .localCheckpoint(eager=True)  # probe assignment runs ONCE, not
-        # once per consumer (the collect below + the serving join)
-    )
+    # probe assignment runs ONCE, not once per consumer (the collect
+    # below + the serving join)
+    q = _ivf_probes(queries, centroids, id_col, vec_col, n_probe)
+    q = q.localCheckpoint(eager=True)
     probed = sorted(r["cell"] for r in q.select("cell").distinct().collect())
     cand = spark.read.parquet(index_path).where(F.col("cell").isin(probed))
     if predicate is not None:
@@ -1251,14 +1191,7 @@ def _lsh_table_assigner(
     @F.pandas_udf(ArrayType(IntegerType()))
     def table_keys(vecs: pd.Series) -> pd.Series:
         X = np.stack(vecs.to_numpy())  # (batch, dim)
-        # Dimension-ascending accumulation, NOT a BLAS matmul: BLAS may
-        # reassociate/FMA the sum, and a plane dot within ~1e-13 of zero
-        # would then flip a sign bit vs the sequential LIST_REDUCE fold
-        # the SQL oracle runs — same bit-exactness discipline as the
-        # exact-cosine path in dedup.py.
-        S = np.zeros((len(X), P.shape[0]), dtype=np.float64)
-        for d in range(X.shape[1]):
-            S += np.outer(X[:, d], P[:, d])
+        S = _fold_dots(X, P)  # sign bits must match the oracle's fold
         bits = (S >= 0).astype(np.int64)  # (batch, tables*planes)
         contrib = (bits * weights).reshape(len(X), n_tables, planes_per_table)
         buckets = contrib.sum(axis=2)  # (batch, tables)
@@ -1423,9 +1356,14 @@ def pq_code_expr(vec: str, books: list[list[list[float]]]) -> Column:
     """Packed PQ code for a named array<double> column: per subspace
     the argmin code (ties to the LOWER id via struct min ordering —
     the same (d ASC, code ASC) order the oracle's ROW_NUMBER uses),
-    packed little-endian base-K into one BIGINT. Flat expression per
-    subspace/code for the same nested-HOF-capture reason as
-    _cell_structs."""
+    packed little-endian base-K into one BIGINT.
+
+    Deliberately ONE flat expression per subspace/code, not a
+    transform(sequence(..), j -> ..) over a 2-D codebook literal: the
+    compact form captures the outer lambda variable inside a nested
+    HOF, and when two sides scan the same source, Spark 4.1.2's
+    relation deduplication mis-rebinds the captured attribute
+    (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND at execution, reproduced)."""
     d0 = len(books[0][0])
     terms = []
     for mi, book in enumerate(books):

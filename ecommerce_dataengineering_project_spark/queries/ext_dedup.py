@@ -261,22 +261,11 @@ def q_semantic_dedup_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The measured 100 TB SemDeDup configuration, registered whole
     (VERDICT r12 item 3): shard on the natural corpus partition
     (`label`) AND constant-occupancy cells (n/SEM_OCCUPANCY, so
-    intra-cell pair work is n·occupancy = linear) AND the Arrow-batched
-    BLAS matmul assigner (`max_codegen_doubles=1` forces the same path
-    `cell_assign` auto-takes past the literal budget at real cell
-    counts). This is the `prod100tb` arm of
-    tools/profile_semdedup_scale.py — 1.9× across the sf0.1→sf1 decade
-    vs the registry shape's 10.5× (SCALE.md) — now carrying its own
-    oracle: the DuckDB fold-argmax assignment is ARGMAX-EQUAL to the
-    BLAS matmul argmax (test-pinned, ADVICE r13). Both score the same
-    mathematical dot−½‖c‖² values, but numpy's pairwise-sum /
-    BLAS-reordered accumulation is NOT bit-identical to a sequential
-    fold — agreement holds because no fixture vector's top-two cell
-    scores sit within FP discrepancy of each other, a margin
-    tests/test_exactness_windows.py asserts per decade (so a fixture
-    regen or BLAS change near a tie fails a named precondition, not an
-    opaque driver hash). Keep-set equality vs the codegen anchor is
-    pinned in tests/test_similarity.py."""
+    intra-cell pair work is n·occupancy = linear). This is the
+    `prod100tb` arm of tools/profile_semdedup_scale.py — 1.9× across
+    the sf0.1→sf1 decade vs the registry shape's 10.5× (SCALE.md).
+    The assigner is the same bit-exact fold as every other semantic
+    arm, so its DuckDB oracle is the fold argmax itself."""
     from ecommerce_dataengineering_project_spark.operators.dedup import semantic_dedup
     from ecommerce_dataengineering_project_spark.operators.similarity import (
         seeded_centroids,
@@ -290,7 +279,6 @@ def q_semantic_dedup_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         _SEM_PROD_CENTROIDS[sf_dir],
         threshold=COSINE_THRESHOLD,
-        max_codegen_doubles=1,
         shard_col="label",
     )
 
@@ -657,14 +645,9 @@ ORACLES["semantic_dedup_sharded"] = f"""
     LEFT JOIN (SELECT DISTINCT id_b FROM pairs) d ON d.id_b = a.vec_id
 """
 
-# The 100 TB composition (shard + constant-occupancy cells + Arrow
-# assigner): same shard-scoped pair/keep SQL as the sharded anchor —
-# only the cell count changes — because the BLAS matmul assignment is
-# argmax-equal to this fold-argmax (test-pinned; both compute
-# dot − ½‖c‖², but BLAS accumulation order differs, so agreement
-# rests on the per-decade top-1/top-2 margin guard in
-# tests/test_exactness_windows.py plus the keep-set pin against the
-# codegen anchor in tests/test_similarity.py).
+# The 100 TB composition (shard + constant-occupancy cells): same
+# shard-scoped pair/keep SQL as the sharded anchor — only the cell
+# count changes.
 ORACLES["semantic_dedup_prod"] = f"""
     WITH {_COS},
     {_SEM_ASSIGN_PROD},

@@ -123,10 +123,11 @@ def _ivf_index_fingerprint(
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with seeded data-point centroids and the exact (codegen
-    fold) assigner — every stage reproducible in SQL, so unlike the
-    trained-k-means variant this one is fully oracle-checked. The
-    trained path stays available via fit_ivf_centroids(fitter=...)."""
+    """IVF with seeded data-point centroids — the assigner is
+    bit-identical to a SQL fold, so every stage is reproducible in SQL
+    and, unlike the trained-k-means variant, this one is fully
+    oracle-checked. The trained path stays available via
+    fit_ivf_centroids(fitter=...)."""
     from ecommerce_dataengineering_project_spark.operators.similarity import seeded_centroids
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -140,7 +141,6 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=N_CELLS,
         n_probe=N_PROBE,
         centroids=_IVF_CENTROIDS[sf_dir],
-        assigner="exact",
     )
 
 

@@ -662,7 +662,7 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     it drifting RIGHT NOW"). Per (1-day window, event_type): add-one
     smoothed KL of the bucketed value histogram against the corpus
     baseline distribution, fitted once batch-side (8+1 scalars riding
-    the plan as literals — the centroid pattern).
+    the plan as literals, like the LSH planes).
 
     Scale shape: ONE streaming aggregation (the window/key groupBy
     with 8 conditional counts — bucket counts as columns, not rows,

@@ -172,17 +172,16 @@ def test_approx_topk_domain_within_tracked_budget(decade):
 
 
 def test_prod_semdedup_assignment_margin(decade):
-    # semantic_dedup_prod's oracle window (ADVICE r13): the BLAS matmul
-    # assigner and the fold-argmax oracle compute the same mathematical
-    # dot − ½‖c‖² scores but with DIFFERENT accumulation orders (numpy
-    # pairwise-sum / BLAS reordering vs a sequential fold), so only
-    # ARGMAX agreement holds — and only while no vector's top-two cell
-    # scores sit within the FP discrepancy (~n·eps·|partials| ≈ 1e-12
-    # for 64 dims). Assert a 1000x-headroom margin per decade so a
-    # fixture regen or BLAS change near a tie fails HERE with a named
-    # precondition, not as an opaque driver hash mismatch. Bit-identical
-    # centroid pairs are excluded: both engines then score the two
-    # cells equal within themselves and tie-break to the smaller cell.
+    # semantic_dedup_prod's assignment margin: the engine's assigner
+    # accumulates dot − ½‖c‖² in the same sequential order as the
+    # fold-argmax oracle, so the two agree bit-for-bit at any margin.
+    # This pins that the prod fixture also has no near-ties: no
+    # vector's top-two cell scores sit within the FP discrepancy of a
+    # reordered sum (~n·eps·|partials| ≈ 1e-12 for 64 dims), so its
+    # cells do not hinge on accumulation order. Assert a 1000x-headroom
+    # margin per decade so a fixture regen near a tie fails HERE with a
+    # named precondition. Bit-identical centroid pairs are excluded:
+    # they score equal in any order and tie-break to the smaller cell.
     from ecommerce_dataengineering_project_spark.operators.similarity import (
         SEED_MOD,
         SEED_MULT,
@@ -229,6 +228,5 @@ def test_prod_semdedup_assignment_margin(decade):
     assert min_margin is not None and min_margin > 1e-9, (
         f"{decade}: minimum top-1/top-2 prod-cell score margin "
         f"{min_margin} is inside the FP-discrepancy danger zone — the "
-        "BLAS-vs-fold argmax equivalence behind semantic_dedup_prod's "
-        "oracle is no longer guaranteed"
+        "prod cells now hinge on summation order"
     )

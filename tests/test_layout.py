@@ -253,7 +253,7 @@ def test_meta_partitioned_index_prunes_filter_at_planning_time(spark, sf_dir, tm
     from pyspark.sql import functions as F
 
     from ecommerce_dataengineering_project_spark.operators.similarity import (
-        _ivf_corpus_cells_exact,
+        _ivf_corpus_cells,
         ivf_topk_indexed,
     )
     from ecommerce_dataengineering_project_spark.queries.ext_similarity import (
@@ -270,7 +270,7 @@ def test_meta_partitioned_index_prunes_filter_at_planning_time(spark, sf_dir, tm
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivf_by_label")
     (
-        _ivf_corpus_cells_exact(emb, cents, "vec_id", "embedding", ("label",))
+        _ivf_corpus_cells(emb, cents, "vec_id", "embedding", ("label",))
         .repartition("cell")
         .write.mode("overwrite")
         .partitionBy("label", "cell")

@@ -52,8 +52,12 @@ _BNLJ_OK = {
 # the declared §2j / multimodal / ANN-assigner surface. Never
 # row-at-a-time BatchEvalPython.
 _PYTHON_OK = {
-    "semantic_dedup_prod",  # the forced Arrow BLAS assigner IS the arm
     "ann_lsh_topk",
+    "ann_ivf_topk",  # nearest-centroid assigner (pandas UDF) on both sides
+    "ivf_quantizer_drift",  # nearest-centroid assigner scores every vector
+    "ivf_recenter",  # the after-drift report's nearest-centroid assigner
+    "ivf_split_hot_cell",  # the after-drift report's nearest-centroid assigner
+    "semantic_dedup_incremental",  # assigner builds the history cell index
     "pandas_udf_score",
     "grouped_pandas_stats",
     "multimodal_decode",

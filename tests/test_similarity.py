@@ -158,8 +158,8 @@ def test_ivf_exact_assigner_survives_relation_dedup(spark, sf_dir):
     must work: a transform(sequence(..))-over-2D-literal formulation
     of the assigner captured an outer lambda variable inside a nested
     HOF and hit INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND when Spark 4.1.2
-    deduplicated the twin scans. The flat per-cell form is immune —
-    this pins it."""
+    deduplicated the twin scans. This pins that the assigner on both
+    sides survives it."""
     from pyspark.sql import functions as F
 
     from ecommerce_dataengineering_project_spark.operators.similarity import (
@@ -170,9 +170,7 @@ def test_ivf_exact_assigner_survives_relation_dedup(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     qs = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 5)
-    out = ivf_topk(
-        qs, emb, 64, k=10, centroids=seeded_centroids(emb, 16), assigner="exact"
-    )
+    out = ivf_topk(qs, emb, 64, k=10, centroids=seeded_centroids(emb, 16))
     assert out.count() == 50
 
 
@@ -323,69 +321,132 @@ def test_semantic_dedup_cluster_scoped(spark):
     assert split_out == {0: True, 1: True}
 
 
-def test_semantic_dedup_arrow_assigner_past_clamp(spark):
-    """Past the codegen-literal budget the assigner must switch to the
-    Arrow-batched matmul path automatically: same keep decisions, plan
-    free of the giant centroid literal (VERDICT r7 item 3)."""
-    from ecommerce_dataengineering_project_spark.operators.dedup import semantic_dedup
+def _duckdb_fold_cells(vecs, cents, n_probe):
+    """The oracles' assignment rule in DuckDB: score = LIST_REDUCE fold
+    of v·c minus the folded ½|c|², cells ordered (s DESC, cell ASC).
+    Returns {vec_id: (probe list, best score)}."""
+    import duckdb
 
-    c0 = [1.0, 0.0, 0.0, 0.0]
-    c1 = [0.0, 1.0, 0.0, 0.0]
-    rows = [
-        (0, c0),
-        (1, c1),
-        (2, [0.99, 0.01, 0.0, 0.0]),
-        (3, [0.01, 0.99, 0.0, 0.0]),
-        (4, [0.0, 0.0, 1.0, 0.0]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    exact = semantic_dedup(emb, [c0, c1], threshold=0.9)
-    # force the Arrow path with a tiny budget: identical decisions
-    arrow = semantic_dedup(emb, [c0, c1], threshold=0.9, max_codegen_doubles=1)
-    assert sorted(map(tuple, exact.collect())) == sorted(map(tuple, arrow.collect()))
-    # The dispatch pin moved to semantic_cell_index (the identical
-    # cell_assign call semantic_dedup routes through): since r15,
-    # semantic_dedup checkpoints its assignment, so the assigner nodes
-    # live in the checkpointed lineage, not the result's executed plan.
+    con = duckdb.connect()
+    con.execute("CREATE TABLE e (vec_id BIGINT, v DOUBLE[])")
+    con.execute("CREATE TABLE c (cell INTEGER, cv DOUBLE[])")
+    con.executemany("INSERT INTO e VALUES (?, ?)", [list(r) for r in vecs])
+    con.executemany("INSERT INTO c VALUES (?, ?)", [[j, c] for j, c in enumerate(cents)])
+    rows = con.execute(
+        f"""
+        WITH s AS (
+            SELECT e.vec_id, c.cell,
+                   LIST_REDUCE(LIST_TRANSFORM(LIST_ZIP(e.v, c.cv), x -> x[1] * x[2]),
+                               (x, y) -> x + y)
+                   - LIST_REDUCE(LIST_TRANSFORM(c.cv, x -> x * x), (x, y) -> x + y) / 2.0
+                   AS s
+            FROM e CROSS JOIN c
+        )
+        SELECT vec_id, LIST(cell ORDER BY s DESC, cell ASC)[1:{n_probe}], MAX(s)
+        FROM s GROUP BY vec_id
+        """
+    ).fetchall()
+    return {r[0]: (list(r[1]), r[2]) for r in rows}
+
+
+def _engine_cells(spark, vecs, cents, n_probe):
+    """{vec_id: (probe list, best score)} from the engine's assigner
+    over (vec_id, array<double>) rows."""
+    from pyspark.sql import functions as F
+
+    from ecommerce_dataengineering_project_spark.operators.similarity import (
+        nearest_cells,
+    )
+
+    df = spark.createDataFrame(vecs, "vec_id bigint, v array<double>")
+    rows = df.select("vec_id", nearest_cells(F.col("v"), cents, n_probe).alias("a"))
+    return {r.vec_id: (list(r.a.cells), r.a.score) for r in rows.collect()}
+
+
+@pytest.mark.parametrize("n_probe", [1, 3])
+def test_nearest_cells_ties_go_to_lower_cell(spark, n_probe):
+    """Equal scores go to the LOWER cell id, for the nearest cell and
+    for the order of the probe list — the oracles' fold-argmax rule
+    (ORDER BY s DESC, cell ASC)."""
+    orth = [[1.0, 0.0], [0.0, 1.0]]  # v = [1, 1] scores 0.5 on both
+    twins = [[0.0, 1.0], [1.0, 0.0], [1.0, 0.0]]  # cells 1, 2 bit-identical
+    for cents, vecs, want in (
+        (orth, [(0, [1.0, 1.0]), (1, [0.5, 0.5])], {0: [0, 1], 1: [0, 1]}),
+        (twins, [(0, [2.0, 0.5]), (1, [0.0, 3.0])], {0: [1, 2, 0], 1: [0, 1, 2]}),
+    ):
+        got = _engine_cells(spark, vecs, cents, n_probe)
+        ref = _duckdb_fold_cells(vecs, cents, n_probe)
+        for vid, cells in want.items():
+            assert got[vid] == ref[vid]
+            assert got[vid][0] == cells[:n_probe]
+
+
+@pytest.mark.parametrize("sizing", ["ivf", "sqrt", "occupancy"])
+def test_nearest_cells_equal_duckdb_fold_argmax(spark, sf_dir, sizing):
+    """On fixture embeddings, each vector's cell, 4-probe list and best
+    score equal a DuckDB LIST_REDUCE fold argmax bit-for-bit, for the
+    cell counts the registered arms use (IVF's 16, SemDeDup's sqrt(n)
+    and the prod configuration's n/occupancy)."""
+    import duckdb
+
+    from ecommerce_dataengineering_project_spark.operators.similarity import (
+        seeded_centroids,
+        suggest_n_cells,
+    )
+    from ecommerce_dataengineering_project_spark.queries.ext_dedup import (
+        SEM_CELL_CLAMP,
+        SEM_OCCUPANCY,
+    )
+    from ecommerce_dataengineering_project_spark.queries.ext_similarity import N_CELLS
+    from ecommerce_dataengineering_project_spark.sources.readers import load_table
+
+    vecs = duckdb.sql(
+        f"SELECT vec_id, CAST(embedding AS DOUBLE[]) "
+        f"FROM read_parquet('{sf_dir}/embeddings.parquet')"
+    ).fetchall()
+    n = len(vecs)
+    n_cells = {
+        "ivf": N_CELLS,
+        "sqrt": suggest_n_cells(n, *SEM_CELL_CLAMP),
+        "occupancy": max(SEM_CELL_CLAMP[0], n // SEM_OCCUPANCY),
+    }[sizing]
+    cents = seeded_centroids(load_table(spark, sf_dir, "embeddings"), n_cells)
+    got = _engine_cells(spark, vecs, cents, 4)
+    ref = _duckdb_fold_cells(vecs, cents, 4)
+    assert len(got) == n
+    assert got == ref
+
+
+def test_assigner_plan_size_independent_of_cell_count(spark):
+    """More than 4096 x 64 centroid doubles leave semantic_cell_index's
+    plan free of centroid literals, and the plan's size does not
+    depend on the cell count: the centroids ride in the assigner's
+    UDF closure, not in the plan."""
+    import random
+    import re
+
     from ecommerce_dataengineering_project_spark.operators.dedup import (
         semantic_cell_index,
+        semantic_dedup,
     )
-
-    plan = (
-        semantic_cell_index(emb, [c0, c1], max_codegen_doubles=1)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "ArrowEvalPython" in plan and "array_min" not in plan
-    ep = (
-        semantic_cell_index(emb, [c0, c1])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "ArrowEvalPython" not in ep  # small literals stay codegen
-    # a genuinely past-clamp centroid set keeps the plan O(1)-sized
-    import random
 
     random.seed(7)
     dim = 64
     big = [[random.uniform(-1, 1) for _ in range(dim)] for _ in range(4097)]
-    vecs = [(i, [float(x) for x in big[i % 17]]) for i in range(40)]
-    emb2 = spark.createDataFrame(vecs, "vec_id bigint, embedding array<double>")
-    out = semantic_dedup(emb2, big, threshold=0.99)
-    plan2 = (
-        semantic_cell_index(emb2, big)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    emb = spark.createDataFrame(
+        [(i, big[i % 17]) for i in range(40)], "vec_id bigint, embedding array<double>"
     )
-    assert "ArrowEvalPython" in plan2
-    assert len(plan2) < 200_000, len(plan2)  # no 4097x64-double literal
-    # and the dedup result's own plan stays literal-free too
-    assert len(out._jdf.queryExecution().executedPlan().toString()) < 200_000
-    got = {r.vec_id: r.keep for r in out.collect()}
+
+    def plan(cents):
+        p = semantic_cell_index(emb, cents)._jdf.queryExecution().executedPlan().toString()
+        return re.sub(r"#\d+", "#", p)  # expression ids differ run to run
+
+    big_plan = plan(big)
+    assert "ArrowEvalPython" in big_plan
+    assert not any(repr(x) in big_plan for x in big[0])
+    assert len(big_plan) == len(plan(big[:2]))
     # rows sharing the identical vector dedup to the smallest id
+    got = {r.vec_id: r.keep for r in semantic_dedup(emb, big, threshold=0.99).collect()}
     assert all(got[i] == (i < 17) for i in range(40))
 
 
@@ -793,51 +854,6 @@ def test_benchmark_contamination_refuses_string_ids(spark):
     assert [(r["vec_id"], r["nearest_eval_id"], r["is_contaminated"]) for r in rows] == [
         ("u-1", 1, True)
     ]
-
-
-def test_prod_semdedup_keepset_equals_codegen_anchor(spark, sf_dir):
-    """VERDICT r12 item 3: the measured 100 TB SemDeDup composition
-    (constant-occupancy cells + Arrow BLAS assigner + shard) must keep
-    EXACTLY the rows the oracle-checked codegen fold assigner keeps,
-    given the same centroid family — assignment is argmax over
-    identical dot − ½‖c‖² scores, so the keep-set is bit-equal, on
-    fixture data, not just constructed rows."""
-    from ecommerce_dataengineering_project_spark.operators.dedup import semantic_dedup
-    from ecommerce_dataengineering_project_spark.operators.similarity import (
-        seeded_centroids,
-    )
-    from ecommerce_dataengineering_project_spark.queries.ext_dedup import (
-        COSINE_THRESHOLD,
-        SEM_CELL_CLAMP,
-        SEM_OCCUPANCY,
-    )
-    from ecommerce_dataengineering_project_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = seeded_centroids(
-        emb, max(SEM_CELL_CLAMP[0], emb.count() // SEM_OCCUPANCY)
-    )
-    kw = dict(threshold=COSINE_THRESHOLD, shard_col="label")
-    codegen = semantic_dedup(emb, cents, **kw)
-    arrow = semantic_dedup(emb, cents, max_codegen_doubles=1, **kw)
-    a = sorted(map(tuple, codegen.collect()))
-    b = sorted(map(tuple, arrow.collect()))
-    assert a == b  # ids, shard, CELL ASSIGNMENT, and keep all bit-equal
-    # and the tiny budget really routes the assigner through Arrow
-    # (pinned on semantic_cell_index — the identical cell_assign call —
-    # since r15's assignment checkpoint hides the node from the dedup
-    # result's executed plan)
-    from ecommerce_dataengineering_project_spark.operators.dedup import (
-        semantic_cell_index,
-    )
-
-    plan = (
-        semantic_cell_index(emb, cents, max_codegen_doubles=1)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "ArrowEvalPython" in plan
 
 
 def test_filtered_topk_pushes_predicate_and_filters_neighbors(spark, sf_dir):

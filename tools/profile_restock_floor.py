@@ -24,9 +24,9 @@ The r8 board's "1.43x normalized regression" was the calibration
 normalization (a pure-codegen JVM kernel) amplifying a ~0.2 s drift of
 the PYTHON framework floor, which the calib kernel cannot track — the
 operator itself never moved off the floor. Same story for
-semantic_dedup (raw best IMPROVED 1.786 -> 1.724 r7 -> r8; the codegen
-cell assigner stays engaged below the 4096x64 clamp at every fixture
-scale: 44 cells x 64 dims at sf0.1).
+semantic_dedup (raw best IMPROVED 1.786 -> 1.724 r7 -> r8, measured
+when its cell assigner was a pure-codegen fold; it is now an Arrow
+pandas UDF).
 
 Usage:  python tools/profile_restock_floor.py  [sf_dir]
 """

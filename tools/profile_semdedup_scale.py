@@ -3,20 +3,17 @@ decade (VERDICT r11 item 3).
 
 Three arms, interleaved per scale so machine drift cancels:
 
-- ``registry``  — the oracle-checked shape: sqrt(n) cells, codegen
-  fold assigner. n^1.5 by design (measured 10.8x across the decade in
-  r11); both the assigner (n*cells*dim) and the intra-cell pairing
-  (n^2/cells) scale as n^1.5.
+- ``registry``  — the oracle-checked shape: sqrt(n) cells. n^1.5 by
+  design (measured 10.8x across the decade in r11); both the assigner
+  (n*cells*dim) and the intra-cell pairing (n^2/cells) scale as n^1.5.
 - ``sharded``   — the registry shape + shard_col (label): cuts ONLY
   the pair term by S, so at fixture n (assigner-dominated) it times
   ~equal; its value is the BOUND (n per invocation) when shards grow
   with the corpus, not the constant at fixed S.
-- ``prod100tb`` — constant-occupancy cells (cells = n/OCCUPANCY) with
-  the Arrow-batched BLAS matmul assigner forced (max_codegen_doubles=1
-  — the same auto-crossover path cell_assign takes past the literal
-  budget). Pair work becomes n*occupancy = LINEAR; the assigner is an
-  n x cells BLAS matmul whose flops grow n^2/occupancy but sit far
-  under the fold's interpreted cost at any fixture scale — and at true
+- ``prod100tb`` — constant-occupancy cells (cells = n/OCCUPANCY), the
+  prod configuration's cell count. Pair work becomes n*occupancy =
+  LINEAR; the assigner's n x cells x dim multiply-adds grow
+  n^2/occupancy but stay small at any fixture scale — and at true
   100 TB the assigner runs hierarchically (assign to sqrt(cells)
   super-cells first), which production SemDeDup deployments pair with
   per-language sharding anyway. Recall note: constant occupancy means
@@ -74,7 +71,7 @@ def main() -> None:
                 emb, cents_sqrt, threshold=COSINE_THRESHOLD, shard_col="label"
             ),
             "prod100tb": lambda: semantic_dedup(
-                emb, cents_occ, threshold=COSINE_THRESHOLD, max_codegen_doubles=1
+                emb, cents_occ, threshold=COSINE_THRESHOLD
             ),
         }
         samples: dict[str, list[float]] = {k: [] for k in arms}
