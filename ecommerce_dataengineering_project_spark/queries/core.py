@@ -391,20 +391,16 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ms-truncates — the same pitfall the streaming bronze path guards).
     The oracle is the source table itself: a value-identical round trip
     is the whole claim."""
-    import os
-
     from ecommerce_dataengineering_project_spark.sources.readers import (
         read_json_lines,
     )
     from ecommerce_dataengineering_project_spark.sources.writers import (
         write_json_lines,
     )
-    from ecommerce_dataengineering_project_spark.streaming.harness import TMP_ROOT
+    from ecommerce_dataengineering_project_spark.streaming.harness import scratch_dir
 
     ev = load_table(spark, sf_dir, "events")
-    path = os.path.join(
-        TMP_ROOT, "jsonl", f"events_{sf_dir.rstrip('/').rsplit('/', 1)[-1]}"
-    )
+    path = scratch_dir("jsonl/events", sf_dir)
     write_json_lines(ev.repartition(4), path)
     fmt = {"timestampFormat": "yyyy-MM-dd HH:mm:ss.SSSSSS"}
     return read_json_lines(spark, path, ev.schema, options=fmt)
@@ -415,15 +411,11 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     events written as ORC, read back, returned verbatim — timestamps
     are µs-native in ORC so no format plumbing is needed (contrast
     jsonl_roundtrip). The oracle is the source table itself."""
-    import os
-
     from ecommerce_dataengineering_project_spark.sources.writers import write_orc
-    from ecommerce_dataengineering_project_spark.streaming.harness import TMP_ROOT
+    from ecommerce_dataengineering_project_spark.streaming.harness import scratch_dir
 
     ev = load_table(spark, sf_dir, "events")
-    path = os.path.join(
-        TMP_ROOT, "orc", f"events_{sf_dir.rstrip('/').rsplit('/', 1)[-1]}"
-    )
+    path = scratch_dir("orc/events", sf_dir)
     write_orc(ev.repartition(4), path)
     from ecommerce_dataengineering_project_spark.sources.readers import normalize_ntz
 

@@ -14,6 +14,7 @@ the oracle runs the literally-same expression string.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,7 +27,7 @@ from ecommerce_dataengineering_project_spark.operators.zorder import (
 )
 from ecommerce_dataengineering_project_spark.sources.readers import load_table
 from ecommerce_dataengineering_project_spark.sources.txlog import TxTable, recreate
-from ecommerce_dataengineering_project_spark.streaming.harness import TMP_ROOT
+from ecommerce_dataengineering_project_spark.streaming.harness import scratch_dir
 
 N_RANGE_COMMITS = 4
 
@@ -73,17 +74,14 @@ def _cents_oracle_sql(
 """
 
 
-def _sf_name(sf_dir: str) -> str:
-    return sf_dir.rstrip("/").rsplit("/", 1)[-1]
-
-
 def _range_committed_orders(spark: SparkSession, sf_dir: str) -> tuple[TxTable, int]:
     """Stage orders as N_RANGE_COMMITS transaction-log commits split by
     o_orderkey range, so each commit's files carry DISJOINT key ranges
     in their manifest stats — the layout a streaming ingest keyed on a
-    monotone id produces naturally. Reused across calls per process
-    (the fixtures are immutable)."""
-    root = os.path.join(TMP_ROOT, "txlog", f"orders_ranged_{_sf_name(sf_dir)}")
+    monotone id produces naturally. Reused across calls while the
+    input's own directory holds all N_RANGE_COMMITS versions (the
+    fixtures are immutable)."""
+    root = scratch_dir("txlog/orders_ranged", sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     max_key = orders.agg(F.max("o_orderkey")).collect()[0][0]
     table = TxTable(root)
@@ -202,7 +200,7 @@ def _zopt_orders(spark: SparkSession, sf_dir: str) -> TxTable:
     5 versions == fully staged."""
     from ecommerce_dataengineering_project_spark.operators.zorder import optimize_zorder
 
-    root = os.path.join(TMP_ROOT, "txlog", f"orders_zopt_{_sf_name(sf_dir)}")
+    root = scratch_dir("txlog/orders_zopt", sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     table = TxTable(root)
     if len(table.versions()) != N_RANGE_COMMITS + 1:
@@ -288,7 +286,7 @@ def _bloom_committed_orders(spark: SparkSession, sf_dir: str) -> TxTable:
     file's [min, max] on o_custkey spans the whole domain and range
     pruning keeps everything: exactly the layout bloom indexes exist
     for. Staged once per process (the fixtures are immutable)."""
-    root = os.path.join(TMP_ROOT, "txlog", f"orders_bloom_{_sf_name(sf_dir)}")
+    root = scratch_dir("txlog/orders_bloom", sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     table = TxTable(root)
     if len(table.versions()) != N_BLOOM_COMMITS:
@@ -348,11 +346,11 @@ def _bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         write_bucketed_table,
     )
 
-    key = _sf_name(sf_dir).replace(".", "_")
+    base = scratch_dir("bucketed", sf_dir)
+    key = re.sub(r"\W", "_", os.path.basename(base))
     t_orders, t_lineitem = f"bkt_orders_{key}", f"bkt_lineitem_{key}"
     cat = spark.catalog
     if not (cat.tableExists(t_orders) and cat.tableExists(t_lineitem)):
-        base = os.path.join(TMP_ROOT, "bucketed", key)
         write_bucketed_table(
             load_table(spark, sf_dir, "orders").select(
                 "o_orderkey", "o_orderpriority"
@@ -422,7 +420,7 @@ def _cdf_committed_orders(spark: SparkSession, sf_dir: str) -> TxTable:
     appends odd ones, v3 is a file-scoped MERGE that deletes keys
     ending in 3 and re-prices keys ending in 7 (+1000.0). Reused per
     (process, sf) — the fixtures are immutable."""
-    root = os.path.join(TMP_ROOT, "txlog", f"orders_cdf_{_sf_name(sf_dir)}")
+    root = scratch_dir("txlog/orders_cdf", sf_dir)
     table = TxTable(root)
     if len(table.versions()) != 3:
         table = recreate(root)
@@ -551,7 +549,7 @@ def q_txlog_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     scope the rewrite to that commit's files, every other file carries
     verbatim. The oracle is the plain anti-predicate — a delete's
     result must equal filtering the original data."""
-    root = os.path.join(TMP_ROOT, "txlog", f"orders_del_{_sf_name(sf_dir)}")
+    root = scratch_dir("txlog/orders_del", sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     max_key = orders.agg(F.max("o_orderkey")).collect()[0][0]
     q = max_key // N_RANGE_COMMITS + 1
@@ -592,8 +590,8 @@ def q_txlog_expect_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     constraint names they failed. The query returns the quarantine
     content; the oracle derives the same rows + tags from the base
     table with plain SQL."""
-    main_root = os.path.join(TMP_ROOT, "txlog", f"orders_dlq_m_{_sf_name(sf_dir)}")
-    q_root = os.path.join(TMP_ROOT, "txlog", f"orders_dlq_q_{_sf_name(sf_dir)}")
+    main_root = scratch_dir("txlog/orders_dlq_m", sf_dir)
+    q_root = scratch_dir("txlog/orders_dlq_q", sf_dir)
     main, dlq = TxTable(main_root), TxTable(q_root)
     if len(main.versions()) < 3 or len(dlq.versions()) < 1:
         orders = load_table(spark, sf_dir, "orders")
@@ -635,7 +633,7 @@ def q_txlog_convert_in_place(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning must not change results."""
     from ecommerce_dataengineering_project_spark.sources.txlog import convert_to_txlog
 
-    root = os.path.join(TMP_ROOT, "txlog", f"orders_conv_{_sf_name(sf_dir)}")
+    root = scratch_dir("txlog/orders_conv", sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     max_key = orders.agg(F.max("o_orderkey")).collect()[0][0]
     hi = max_key // 4
@@ -671,7 +669,7 @@ def q_txlog_time_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet min/max). Oracle: the plain timestamp predicate."""
     import datetime as dt
 
-    root = os.path.join(TMP_ROOT, "txlog", f"events_tspruned_{_sf_name(sf_dir)}")
+    root = scratch_dir("txlog/events_tspruned", sf_dir)
     ev = load_table(spark, sf_dir, "events")
     b = ev.agg(F.min("ts").alias("mn"), F.max("ts").alias("mx")).collect()[0]
     span_us = (b.mx - b.mn) // dt.timedelta(microseconds=1)
@@ -724,9 +722,7 @@ def q_mv_routed_daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         name="sales_by_day_flag",
         dims=("purchase_date", "l_returnflag"),
         measures={"sales": ("sum+count", F.col("amount_cents"))},
-        path=os.path.join(
-            TMP_ROOT, "mv", f"sales_by_day_flag_{sf_dir.rstrip('/').rsplit('/', 1)[-1]}"
-        ),
+        path=scratch_dir("mv/sales_by_day_flag", sf_dir),
     )
     routed = route(
         spark,
@@ -778,7 +774,7 @@ def q_mv_route_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             name=name,
             dims=dims,
             measures={"sales": ("sum+count", F.col("amount_cents"))},
-            path=os.path.join(TMP_ROOT, "mv", f"{name}_{_sf_name(sf_dir)}"),
+            path=scratch_dir(f"mv/{name}", sf_dir),
         )
         for name, dims in (
             ("sales_fine", ("purchase_date", "l_returnflag", "l_linestatus")),
@@ -830,7 +826,7 @@ def q_athena_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     table = recreate(
-        os.path.join(TMP_ROOT, "txlog", f"manifest_{_sf_name(sf_dir)}")
+        scratch_dir("txlog/manifest", sf_dir)
     )
     table.append(o.where(F.col("o_orderkey") % 2 == 0))
     table.append(o.where(F.col("o_orderkey") % 2 == 1))
@@ -862,7 +858,7 @@ def q_txlog_auto_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value"
     )
     table = recreate(
-        os.path.join(TMP_ROOT, "txlog", f"autocompact_{_sf_name(sf_dir)}")
+        scratch_dir("txlog/autocompact", sf_dir)
     )
     for b in range(8):
         table.append(e.where(F.col("event_id") % 8 == b).repartition(4))
@@ -902,7 +898,7 @@ def q_txlog_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = recreate(os.path.join(TMP_ROOT, "txlog", f"dv_{_sf_name(sf_dir)}"))
+    table = recreate(scratch_dir("txlog/dv", sf_dir))
     table.append(o.repartition(4))
     table.delete_where_dv(spark, "o_orderkey % 97 = 0")
     return table.read(spark).groupBy("o_orderstatus").agg(
@@ -940,7 +936,7 @@ def q_txlog_update_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     table = recreate(
-        os.path.join(TMP_ROOT, "txlog", f"updv_{_sf_name(sf_dir)}")
+        scratch_dir("txlog/updv", sf_dir)
     )
     table.append(o.repartition(4))
     table.update_where_dv(
@@ -985,7 +981,7 @@ def q_txlog_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = recreate(os.path.join(TMP_ROOT, "txlog", f"rename_{_sf_name(sf_dir)}"))
+    table = recreate(scratch_dir("txlog/rename", sf_dir))
     table.append(o.where(F.col("o_orderkey") % 2 == 0).repartition(4))
     table.rename_column("o_totalprice", "price")
     table.drop_column("o_orderstatus")

@@ -838,8 +838,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
         build_ivf_index,
         seeded_centroids,
     )
-    from ecommerce_dataengineering_project_spark.queries.ext_scale import _sf_name
-    from ecommerce_dataengineering_project_spark.streaming.harness import TMP_ROOT
+    from ecommerce_dataengineering_project_spark.streaming.harness import scratch_dir
 
     emb = load_table(spark, sf_dir, "embeddings")
     if sf_dir not in _IVF_CENTROIDS:
@@ -849,7 +848,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
             emb, _IVF_CENTROIDS[sf_dir], IVF_INDEX_META
         )
     fp = _IVF_INDEX_FP[sf_dir]
-    path = os.path.join(TMP_ROOT, "ivf_index", f"{_sf_name(sf_dir)}_{fp}")
+    path = os.path.join(scratch_dir("ivf_index", sf_dir), fp)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         build_ivf_index(
             emb, _IVF_CENTROIDS[sf_dir], path, meta_cols=IVF_INDEX_META

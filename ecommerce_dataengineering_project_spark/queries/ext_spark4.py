@@ -384,15 +384,13 @@ def q_sdp_pipeline_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     MV it reads, so the run exercises deferred resolution). Output is
     the daily mart, oracle-checked against daily_sales' base SQL.
     """
-    import os
-
     from pyspark import pipelines as pl
 
     from ecommerce_dataengineering_project_spark.functions.scalars import (
         round_half_up,
     )
     from ecommerce_dataengineering_project_spark.plans.sdp_local import run_pipeline
-    from ecommerce_dataengineering_project_spark.streaming.harness import TMP_ROOT
+    from ecommerce_dataengineering_project_spark.streaming.harness import scratch_dir
 
     def define() -> None:
         @pl.materialized_view(name="daily_sales_sdp")
@@ -417,9 +415,7 @@ def q_sdp_pipeline_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
 
-    root = os.path.join(
-        TMP_ROOT, "sdp", f"daily_{sf_dir.rstrip('/').rsplit('/', 1)[-1]}"
-    )
+    root = scratch_dir("sdp/daily", sf_dir)
     result = run_pipeline(spark, define, root)
     # declaration order was daily, src, fct — execution order must be
     # dependency order (flows are named after their datasets)
@@ -640,9 +636,7 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-robin exchange only fires when the scan is narrower than the
     session — at lake scale the scan already carries the
     parallelism."""
-    import os
-
-    from ecommerce_dataengineering_project_spark.streaming.harness import TMP_ROOT
+    from ecommerce_dataengineering_project_spark.streaming.harness import scratch_dir
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -654,9 +648,7 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
     if ev.rdd.getNumPartitions() < par:
         ev = ev.repartition(par)
-    path = os.path.join(
-        TMP_ROOT, "xml", f"events_{sf_dir.rstrip('/').rsplit('/', 1)[-1]}"
-    )
+    path = scratch_dir("xml/events", sf_dir)
     (
         ev.write.format("xml")
         .option("rowTag", "event")

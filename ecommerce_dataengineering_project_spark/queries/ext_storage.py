@@ -19,14 +19,10 @@ from pyspark.sql import functions as F
 
 from ecommerce_dataengineering_project_spark.sources.readers import load_table
 from ecommerce_dataengineering_project_spark.sources.txlog import recreate
-from ecommerce_dataengineering_project_spark.streaming.harness import TMP_ROOT
+from ecommerce_dataengineering_project_spark.streaming.harness import scratch_dir
 
 CUTOFF = "1998-01-01"
 BIN_MOD = 10  # every 10th document becomes a standalone file
-
-
-def _sf_name(sf_dir: str) -> str:
-    return sf_dir.rstrip("/").rsplit("/", 1)[-1]
 
 
 def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -35,7 +31,7 @@ def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first commit's rows even though the table has moved on. The
     oracle recomputes the first commit's predicate directly."""
     orders = load_table(spark, sf_dir, "orders")
-    table = recreate(os.path.join(TMP_ROOT, "txlog", f"orders_{_sf_name(sf_dir)}"))
+    table = recreate(scratch_dir("txlog/orders", sf_dir))
     table.append(orders.filter(F.col("o_orderdate") < F.lit(CUTOFF)))
     table.append(orders.filter(F.col("o_orderdate") >= F.lit(CUTOFF)))
     return table.read(spark, version=1)
@@ -51,11 +47,10 @@ def q_binary_files_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % BIN_MOD == 0
     )
-    path = os.path.join(TMP_ROOT, "binfiles", f"docs_{_sf_name(sf_dir)}")
+    path = scratch_dir("binfiles/docs", sf_dir)
     # staging one file per doc is file-creation bound (~8 s for 500
     # dirs at sf0.1); the fixtures are immutable, so a completed stage
-    # (_SUCCESS marker) is reused — same contract as the streaming
-    # harness's per-process source cache
+    # (_SUCCESS marker) in this input's own directory is reused
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         docs.select("doc_id", "text").write.mode("overwrite").partitionBy(
             "doc_id"
@@ -221,7 +216,7 @@ def q_datasource_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_quantity").cast("bigint").alias("qty"),
         )
     )
-    path = os.path.join(TMP_ROOT, "jsonl_sink", f"returns_{_sf_name(sf_dir)}")
+    path = scratch_dir("jsonl_sink/returns", sf_dir)
     (
         li.repartition(4)
         .write.format("ecommerce_jsonl_sink")
@@ -317,7 +312,7 @@ def q_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_layout.py). The txlog's manifest-stats skipping is the
     finer-grained sibling; this is the classic directory layout every
     lake starts with."""
-    path = os.path.join(TMP_ROOT, "hivepart", f"events_{_sf_name(sf_dir)}")
+    path = scratch_dir("hivepart/events", sf_dir)
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         ev = load_table(spark, sf_dir, "events").withColumn(
@@ -365,7 +360,7 @@ def q_dpp_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     and prunes the fact scan at RUNTIME with a DynamicPruning
     subquery. The mechanism every 100 TB star join lives on: the
     fact side reads only the matched partitions' files."""
-    path = os.path.join(TMP_ROOT, "hivepart", f"events_{_sf_name(sf_dir)}")
+    path = scratch_dir("hivepart/events", sf_dir)
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         ev = load_table(spark, sf_dir, "events").withColumn(

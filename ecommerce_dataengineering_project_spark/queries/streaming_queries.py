@@ -4,8 +4,10 @@ bounded with availableNow, oracle-checked against batch SQL.
 Each query stages the ``events`` table as an ordered multi-file stream
 (time-partitioned so the watermark never drops an in-order row), runs
 the streaming plan through a checkpointed parquet sink, and returns the
-sink. Because every pipeline is deterministic, batch SQL over the same
-rows is an exact oracle — the strongest possible check of streaming
+sink. Every call restages its input in the query's own directory for
+that input (``harness.scratch_dir``), so no run reads another's files.
+Because every pipeline is deterministic, batch SQL over the same rows
+is an exact oracle — the strongest possible check of streaming
 semantics (window assignment, watermark finalization, state
 transitions).
 
@@ -19,6 +21,7 @@ finalized, so the sink contains exactly the real windows.
 from __future__ import annotations
 
 import datetime as _dt
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,24 +43,17 @@ from ecommerce_dataengineering_project_spark.streaming.event_windows import (
     tumbling_agg,
 )
 from ecommerce_dataengineering_project_spark.streaming.harness import (
-    TMP_ROOT,
     _capture_plan as _harness_capture,
     adaptive_state_partitions,
+    run_bounded_foreach,
     run_bounded_stream,
-    stage_source_tagged,
-    staged_source,
+    scratch_dir,
 )
 from ecommerce_dataengineering_project_spark.streaming.stateful import (
     INITIAL_LEVEL,
     MIN_LEVEL,
     RESTOCK_AMOUNT,
     inventory_restock_stream,
-)
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
 )
 
 # Event-time cut points for the staged micro-batch splits. n_data=3 is
@@ -116,21 +112,13 @@ def _flush_rows(n_flush: int):
     )
 
 
-def _sf_key(sf_dir: str) -> str:
-    return sf_dir.rstrip("/").rsplit("/", 1)[-1]
-
-
 def _events_source(spark: SparkSession, sf_dir: str, n_flush: int, n_data: int = 3):
-    def stage(source_dir: str):
-        tagged = _tagged_events(spark, sf_dir, n_data)
-        stage_source_tagged(
-            tagged, n_data, source_dir, _flush_rows(n_flush) if n_flush else None
-        )
-        return EVENT_SCHEMA
-
-    suffix = "" if n_data == 3 else f"_d{n_data}"
-    return staged_source(
-        spark, f"events_{_sf_key(sf_dir)}_f{n_flush}{suffix}", stage
+    """The harness ``source`` for the events stream: ``n_data``
+    time-ordered batches, then ``n_flush`` flush batches."""
+    return (
+        _tagged_events(spark, sf_dir, n_data),
+        n_data,
+        _flush_rows(n_flush) if n_flush else None,
     )
 
 
@@ -144,41 +132,26 @@ def _events_dup_source(spark: SparkSession, sf_dir: str, n_flush: int = 0):
     original six batches (two replays of the 3-range staging): each
     extra micro-batch paid ~0.5-1 s of addBatch + offset/commit-log
     fsync for no additional semantics."""
-
-    def stage(source_dir: str):
-        ev = _tagged_events(spark, sf_dir, n_data=2)
-        dup = _tagged_events(spark, sf_dir, n_data=1).withColumn(
-            "__batch", F.lit(2)
-        )
-        stage_source_tagged(
-            ev.unionByName(dup),
-            3,
-            source_dir,
-            _flush_rows(n_flush) if n_flush else None,
-        )
-        return EVENT_SCHEMA
-
-    suffix = "_flush" if n_flush else ""
-    return staged_source(
-        spark, f"events_dup3{suffix}_{_sf_key(sf_dir)}", stage
-    )
+    ev = _tagged_events(spark, sf_dir, n_data=2)
+    dup = _tagged_events(spark, sf_dir, n_data=1).withColumn("__batch", F.lit(2))
+    return ev.unionByName(dup), 3, _flush_rows(n_flush) if n_flush else None
 
 
 def q_stream_bronze_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1/P1-P3 end-to-end: events -> JSON 'value' strings (Kafka
     shape) -> streaming from_json parse with drift-tolerant schema ->
     append sink. Stateless, so no flush rows needed."""
-
-    def stage(source_dir: str):
-        # stateless parse: one consolidated micro-batch (r16 — each
-        # extra batch paid a full trigger of addBatch + commit fsync
-        # for a pipeline with no state to carry between batches)
-        kafka = events_to_kafka(_tagged_events(spark, sf_dir, n_data=1), "__batch")
-        stage_source_tagged(kafka, 1, source_dir)
-        return kafka.drop("__batch").schema
-
-    src = staged_source(spark, f"events_kafka_d1_{_sf_key(sf_dir)}", stage)
-    return run_bounded_stream(spark, "bronze_silver", None, parse_events, source=src)
+    # stateless parse: one consolidated micro-batch (r16 — each extra
+    # batch paid a full trigger of addBatch + commit fsync for a
+    # pipeline with no state to carry between batches)
+    kafka = events_to_kafka(_tagged_events(spark, sf_dir, n_data=1), "__batch")
+    return run_bounded_stream(
+        spark,
+        scratch_dir("streams/stream_bronze_silver", sf_dir),
+        None,
+        parse_events,
+        source=(kafka, 1),
+    )
 
 
 def q_stream_tumbling_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,7 +165,11 @@ def q_stream_tumbling_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inside the streaming plan would be pushed down into the scan by
     # Catalyst, and the watermark would never see the flush timestamps.
     return run_bounded_stream(
-        spark, "tumbling_revenue", None, transform, source=src
+        spark,
+        scratch_dir("streams/stream_tumbling_revenue", sf_dir),
+        None,
+        transform,
+        source=src,
     ).where(F.col("event_type") != "__flush")
 
 
@@ -204,7 +181,11 @@ def q_stream_sliding_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
         return sliding_agg(stream, "ts", "1 day", "12 hours", ["event_type"], "value")
 
     return run_bounded_stream(
-        spark, "sliding_activity", None, transform, source=src
+        spark,
+        scratch_dir("streams/stream_sliding_activity", sf_dir),
+        None,
+        transform,
+        source=src,
     ).where(F.col("event_type") != "__flush")
 
 
@@ -216,7 +197,11 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         return session_agg(stream, "ts", "6 hours", ["user_id"], "value")
 
     return run_bounded_stream(
-        spark, "session_windows", None, transform, source=src
+        spark,
+        scratch_dir("streams/stream_session_windows", sf_dir),
+        None,
+        transform,
+        source=src,
     ).where(F.col("user_id") >= 0)
 
 
@@ -237,24 +222,19 @@ def q_stream_inventory_restock(spark: SparkSession, sf_dir: str) -> DataFrame:
     with per-row work measured in microseconds), so it amortizes as
     rows per batch grow — the state machinery, not the data, is the
     cost at test scale."""
-    def stage(source_dir: str):
-        # TWO time-ordered batches (r16, was 3): cross-batch GroupState
-        # carry-over is still exercised across the one boundary, and
-        # the fold is order-deterministic (per-batch (ts, event_id)
-        # sort over time-range batches == the global order), so the
-        # result is identical while one whole trigger's fixed cost
-        # (addBatch + state-store commit wave + log fsyncs) is saved.
-        qty = _tagged_events(spark, sf_dir, n_data=2).select(
-            "event_id",
-            "ts",
-            "user_id",
-            (F.col("event_id") % 3 + 1).cast("int").alias("qty"),
-            "__batch",
-        )
-        stage_source_tagged(qty, 2, source_dir)
-        return qty.drop("__batch").schema
-
-    src = staged_source(spark, f"events_qty_d2_{_sf_key(sf_dir)}", stage)
+    # TWO time-ordered batches (r16, was 3): cross-batch GroupState
+    # carry-over is still exercised across the one boundary, and the
+    # fold is order-deterministic (per-batch (ts, event_id) sort over
+    # time-range batches == the global order), so the result is
+    # identical while one whole trigger's fixed cost (addBatch +
+    # state-store commit wave + log fsyncs) is saved.
+    qty = _tagged_events(spark, sf_dir, n_data=2).select(
+        "event_id",
+        "ts",
+        "user_id",
+        (F.col("event_id") % 3 + 1).cast("int").alias("qty"),
+        "__batch",
+    )
     # Unlike the commit-bound aggregations, the restock scan does real
     # per-group Python work — give it parallelism, not fewer commits
     # (measured sf0.1: 16 partitions ~30% faster than 4 on local[32]),
@@ -262,11 +242,11 @@ def q_stream_inventory_restock(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doesn't pay extra commit waves (adaptive_state_partitions note).
     return run_bounded_stream(
         spark,
-        "inventory_restock",
+        scratch_dir("streams/stream_inventory_restock", sf_dir),
         None,
         inventory_restock_stream,
         state_partitions=adaptive_state_partitions(spark),
-        source=src,
+        source=(qty, 2),
     )
 
 
@@ -284,7 +264,13 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", "ts", "user_id", "event_type", "value"
         )
 
-    return run_bounded_stream(spark, "stream_dedup", None, transform, source=src)
+    return run_bounded_stream(
+        spark,
+        scratch_dir("streams/stream_dedup", sf_dir),
+        None,
+        transform,
+        source=src,
+    )
 
 
 def q_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -307,7 +293,11 @@ def q_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return run_bounded_stream(
-        spark, "stream_dedup_watermarked", None, transform, source=src
+        spark,
+        scratch_dir("streams/stream_dedup_watermarked", sf_dir),
+        None,
+        transform,
+        source=src,
     )
 
 
@@ -345,7 +335,13 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return joined.select("purchase_id", "click_id", F.col("p_user").alias("user_id"))
 
-    return run_bounded_stream(spark, "stream_stream_join", None, transform, source=src)
+    return run_bounded_stream(
+        spark,
+        scratch_dir("streams/stream_stream_join", sf_dir),
+        None,
+        transform,
+        source=src,
+    )
 
 
 def q_stream_upsert_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -357,7 +353,6 @@ def q_stream_upsert_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-time ranges, later batches carry later timestamps and the
     final table is exactly "each user's last event" — which makes the
     whole streaming upsert loop batch-oracle-checkable."""
-    import os
     import shutil
 
     from ecommerce_dataengineering_project_spark.operators.aggregates import (
@@ -366,14 +361,10 @@ def q_stream_upsert_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_dataengineering_project_spark.sources.maintenance import (
         merge_upsert_path,
     )
-    from ecommerce_dataengineering_project_spark.streaming.harness import (
-        TMP_ROOT,
-        run_bounded_foreach,
-    )
 
     src = _events_source(spark, sf_dir, n_flush=0)
-    name = f"upsert_gold_{_sf_key(sf_dir)}"
-    gold_dir = os.path.join(TMP_ROOT, "streams", name, "gold")
+    work_dir = scratch_dir("streams/stream_upsert_gold", sf_dir)
+    gold_dir = os.path.join(work_dir, "gold")
     shutil.rmtree(gold_dir, ignore_errors=True)
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
@@ -390,7 +381,7 @@ def q_stream_upsert_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merge_upsert_path(spark, gold_dir, latest, ["user_id"])
 
-    run_bounded_foreach(spark, name, None, lambda s: s, upsert, source=src)
+    run_bounded_foreach(spark, work_dir, None, lambda s: s, upsert, source=src)
     return spark.read.parquet(gold_dir)
 
 
@@ -407,56 +398,36 @@ def q_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCD2 build — which is exactly what the oracle checks. This is the
     Delta-style `MERGE`-maintained dimension loop on the parquet
     stand-in."""
-    import os
     import shutil
 
     from ecommerce_dataengineering_project_spark.operators.scd import scd2_apply
-    from ecommerce_dataengineering_project_spark.streaming.harness import (
-        TMP_ROOT,
-        run_bounded_foreach,
-    )
     from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DateType,
-        StructField as SF,
-        StructType as ST,
-    )
 
-    name = f"scd2_dim_{_sf_key(sf_dir)}"
-    dim_dir = os.path.join(TMP_ROOT, "streams", name, "dim")
+    work_dir = scratch_dir("streams/stream_scd2_dim", sf_dir)
+    dim_dir = os.path.join(work_dir, "dim")
     shutil.rmtree(dim_dir, ignore_errors=True)
 
-    def stage(source_dir: str):
-        orders = load_table(spark, sf_dir, "orders")
-        w = Window.partitionBy("o_custkey", F.to_date("o_orderdate")).orderBy(
-            F.col("o_orderkey").asc()
+    orders = load_table(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_custkey", F.to_date("o_orderdate")).orderBy(
+        F.col("o_orderkey").asc()
+    )
+    upd = (
+        orders.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .select(
+            F.col("o_custkey").alias("c_custkey"),
+            F.col("o_orderpriority").alias("segment"),
+            F.to_date("o_orderdate").alias("effective_from"),
         )
-        upd = (
-            orders.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .select(
-                F.col("o_custkey").alias("c_custkey"),
-                F.col("o_orderpriority").alias("segment"),
-                F.to_date("o_orderdate").alias("effective_from"),
-            )
-        )
-        y97 = F.lit("1997-01-01").cast("date")
-        y99 = F.lit("1999-01-01").cast("date")
-        tag = (
-            F.when(F.col("effective_from") < y97, 0)
-            .when(F.col("effective_from") < y99, 1)
-            .otherwise(2)
-        )
-        stage_source_tagged(upd.withColumn("__batch", tag.cast("int")), 3, source_dir)
-        return ST(
-            [
-                SF("c_custkey", LongType()),
-                SF("segment", StringType()),
-                SF("effective_from", DateType()),
-            ]
-        )
-
-    src = staged_source(spark, f"scd2_upd_{_sf_key(sf_dir)}", stage)
+    )
+    y97 = F.lit("1997-01-01").cast("date")
+    y99 = F.lit("1999-01-01").cast("date")
+    tag = (
+        F.when(F.col("effective_from") < y97, 0)
+        .when(F.col("effective_from") < y99, 1)
+        .otherwise(2)
+    )
+    src = (upd.withColumn("__batch", tag.cast("int")), 3)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if os.path.isdir(dim_dir):
@@ -486,7 +457,7 @@ def q_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(stage, dim_dir)
         shutil.rmtree(old, ignore_errors=True)
 
-    run_bounded_foreach(spark, name, None, lambda s: s, apply_batch, source=src)
+    run_bounded_foreach(spark, work_dir, None, lambda s: s, apply_batch, source=src)
     return spark.read.parquet(dim_dir)
 
 
@@ -518,7 +489,13 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", "user_id", "event_type", "value", "mktsegment", "nation_name"
         )
 
-    return run_bounded_stream(spark, "static_enrich", None, transform, source=src)
+    return run_bounded_stream(
+        spark,
+        scratch_dir("streams/stream_static_enrich", sf_dir),
+        None,
+        transform,
+        source=src,
+    )
 
 
 def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -538,24 +515,20 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_quarantine,
     )
 
-    def stage(source_dir: str):
-        # stateless corrupt-capture parse: one consolidated batch (r16)
-        tagged = _tagged_events(spark, sf_dir, n_data=1)
-        data_cols = [c for c in tagged.columns if c not in ("__batch", "event_id")]
-        kafka = tagged.select(
-            "event_id",
-            F.when(
-                F.col("event_id") % 7 == 0,
-                F.concat(F.lit("corrupt:"), F.col("event_id").cast("string")),
-            )
-            .otherwise(F.to_json(F.struct(*data_cols), EVENT_JSON_OPTIONS))
-            .alias("value"),
-            "__batch",
+    # stateless corrupt-capture parse: one consolidated batch (r16)
+    tagged = _tagged_events(spark, sf_dir, n_data=1)
+    data_cols = [c for c in tagged.columns if c not in ("__batch", "event_id")]
+    kafka = tagged.select(
+        "event_id",
+        F.when(
+            F.col("event_id") % 7 == 0,
+            F.concat(F.lit("corrupt:"), F.col("event_id").cast("string")),
         )
-        stage_source_tagged(kafka, 1, source_dir)
-        return kafka.drop("__batch").schema
-
-    src = staged_source(spark, f"events_quarantine_d1_{_sf_key(sf_dir)}", stage)
+        .otherwise(F.to_json(F.struct(*data_cols), EVENT_JSON_OPTIONS))
+        .alias("value"),
+        "__batch",
+    )
+    src = (kafka, 1)
     parse_schema = StructType(
         [f for f in EVENT_SCHEMA.fields if f.name != "event_id"]
     )
@@ -563,7 +536,13 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     def transform(stream: DataFrame) -> DataFrame:
         return parse_quarantine(stream, parse_schema, options=EVENT_JSON_OPTIONS)
 
-    return run_bounded_stream(spark, "quarantine", None, transform, source=src)
+    return run_bounded_stream(
+        spark,
+        scratch_dir("streams/stream_quarantine", sf_dir),
+        None,
+        transform,
+        source=src,
+    )
 
 
 DRIFT_BUCKETS = 8
@@ -605,7 +584,6 @@ def drift_baseline(spark: SparkSession, sf_dir: str) -> list[float]:
     """
     import hashlib
     import json
-    import os
 
     ev = load_table(spark, sf_dir, "events")
     rows = (
@@ -623,10 +601,8 @@ def drift_baseline(spark: SparkSession, sf_dir: str) -> list[float]:
     ).hexdigest()[:12]
     key = (sf_dir, fp)
     if key not in _DRIFT_BASELINE:
-        from ecommerce_dataengineering_project_spark.queries.ext_scale import _sf_name
-
-        art_dir = os.path.join(TMP_ROOT, "drift_baseline")
-        art = os.path.join(art_dir, f"{_sf_name(sf_dir)}_{fp}.json")
+        art_dir = scratch_dir("drift_baseline", sf_dir)
+        art = os.path.join(art_dir, f"baseline_{fp}.json")
         if os.path.exists(art):
             with open(art) as f:
                 q = json.load(f)["q"]
@@ -708,7 +684,11 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return run_bounded_stream(
-        spark, "drift_monitor", None, transform, source=src
+        spark,
+        scratch_dir("streams/stream_drift_monitor", sf_dir),
+        None,
+        transform,
+        source=src,
     ).where(F.col("event_type") != "__flush")
 
 
@@ -941,17 +921,12 @@ def q_stream_txlog_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks against the source table; version count == batch count is
     pinned in tests/test_txlog.py's streaming twin below the query
     layer (each append is one snapshot)."""
-    import os
 
     from ecommerce_dataengineering_project_spark.sources.txlog import recreate
-    from ecommerce_dataengineering_project_spark.streaming.harness import (
-        TMP_ROOT,
-        run_bounded_foreach,
-    )
 
     src = _events_source(spark, sf_dir, n_flush=0)
-    name = f"txlog_append_{_sf_key(sf_dir)}"
-    table = recreate(os.path.join(TMP_ROOT, "streams", name, "table"))
+    work_dir = scratch_dir("streams/stream_txlog_append", sf_dir)
+    table = recreate(os.path.join(work_dir, "table"))
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select("event_id", "user_id", "ts", "event_type", "value")
@@ -960,9 +935,9 @@ def q_stream_txlog_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         # idempotent exactly-once: foreachBatch is at-least-once, so a
         # retried batch must SKIP, not double-append — the manifest's
         # SetTransaction watermark (append_txn) detects the replay
-        table.append_txn(batch, name, batch_id)
+        table.append_txn(batch, "stream_txlog_append", batch_id)
 
-    run_bounded_foreach(spark, name, None, lambda s: s, commit, source=src)
+    run_bounded_foreach(spark, work_dir, None, lambda s: s, commit, source=src)
     return table.read(spark)
 
 
@@ -995,14 +970,12 @@ def q_stream_generator_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovery path a crashed ingest job takes. Generation is
     integer-hash deterministic, so the final sink is hash-checked
     against DuckDB's RANGE()."""
-    import os
     import shutil
 
     from ecommerce_dataengineering_project_spark.sources import pyds
-    from ecommerce_dataengineering_project_spark.streaming.harness import TMP_ROOT
 
     pyds.register(spark)
-    base = os.path.join(TMP_ROOT, "streams", f"gen_ingest_{_sf_key(sf_dir)}")
+    base = scratch_dir("streams/stream_generator_ingest", sf_dir)
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     shutil.rmtree(base, ignore_errors=True)
 
@@ -1029,7 +1002,7 @@ def q_stream_generator_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination(120)
-        _harness_capture("stream_generator_ingest", q)
+        _harness_capture(base, q)
         rows_committed += sum(p.numInputRows for p in q.recentProgress)
         if rows_committed >= GEN_STREAM_ROWS:
             break
@@ -1070,7 +1043,6 @@ def q_stream_socket_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-hash deterministic, so DuckDB reproduces it from RANGE()
     and the sink hash-checks end-to-end THROUGH the TCP boundary."""
     import json
-    import os
 
     from pyspark.sql.types import (
         LongType,
@@ -1107,7 +1079,7 @@ def q_stream_socket_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("kind", StringType()),
         ]
     )
-    base = os.path.join(TMP_ROOT, "streams", f"socket_ingest_{_sf_key(sf_dir)}")
+    base = scratch_dir("streams/stream_socket_ingest", sf_dir)
     server = LineServer(lines)
     try:
         return run_socket_ingest(
@@ -1152,22 +1124,19 @@ def q_stream_txlog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds events split across three append commits; the bounded drain
     lands every committed row in a parquet sink, hash-checked against
     the plain events fixture."""
-    import os
     import shutil
 
     from ecommerce_dataengineering_project_spark.sources import pyds_txlog
     from ecommerce_dataengineering_project_spark.sources.readers import load_table
-    from ecommerce_dataengineering_project_spark.sources.txlog import TxTable, recreate
+    from ecommerce_dataengineering_project_spark.sources.txlog import recreate
 
-    base = os.path.join(TMP_ROOT, "streams", f"txsrc_{_sf_key(sf_dir)}")
+    base = scratch_dir("streams/stream_txlog_source", sf_dir)
     root = os.path.join(base, "table")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
-    table = TxTable(root)
+    table = recreate(root)
     ev = load_table(spark, sf_dir, "events")
-    if len(table.versions()) != 3:
-        table = recreate(root)
-        for i in range(3):
-            table.append(ev.where(F.col("event_id") % 3 == i))
+    for i in range(3):
+        table.append(ev.where(F.col("event_id") % 3 == i))
     pyds_txlog.register(spark)
     shutil.rmtree(sink, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
@@ -1180,7 +1149,7 @@ def q_stream_txlog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination(120)
-    _harness_capture("stream_txlog_source", q)
+    _harness_capture(base, q)
     return spark.read.schema(stream.schema).parquet(sink)
 
 
@@ -1202,9 +1171,9 @@ def q_stream_dedup_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     spills to local disk, changelog-checkpointed) where the default
     HDFS-backed provider keeps every key on the executor heap. Same
     double-replay source, same exactly-once contract, same oracle: the
-    provider must be invisible in the results. The provider conf is
-    captured into the checkpoint at first start, so it is scoped to
-    this query's run and restored after."""
+    provider must be invisible in the results. The provider conf is set
+    on this run's session only and captured into its checkpoint at
+    first start."""
 
     src = _events_dup_source(spark, sf_dir)
 
@@ -1213,18 +1182,14 @@ def q_stream_dedup_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", "ts", "user_id", "event_type", "value"
         )
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        return run_bounded_stream(
-            spark, "stream_dedup_rocksdb", None, transform, source=src
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    return run_bounded_stream(
+        spark,
+        scratch_dir("streams/stream_dedup_rocksdb", sf_dir),
+        None,
+        transform,
+        source=src,
+        extra_confs={"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER},
+    )
 
 
 QUERIES["stream_dedup_rocksdb"] = q_stream_dedup_rocksdb
@@ -1249,11 +1214,9 @@ def q_statestore_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     def transform(stream: DataFrame) -> DataFrame:
         return stream.dropDuplicates(["event_id"]).select("event_id")
 
-    run_bounded_stream(spark, "statestore_inspect", None, transform, source=src)
-    from ecommerce_dataengineering_project_spark.streaming.harness import _stream_dirs
-
-    ckpt = _stream_dirs("statestore_inspect")[2]
-    state = spark.read.format("statestore").load(ckpt)
+    work_dir = scratch_dir("streams/statestore_inspect", sf_dir)
+    run_bounded_stream(spark, work_dir, None, transform, source=src)
+    state = spark.read.format("statestore").load(os.path.join(work_dir, "checkpoint"))
     return state.select(F.col("key.event_id").alias("event_id"))
 
 
@@ -1278,18 +1241,13 @@ def q_stream_fanout_two_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH arms at once: per-type counts from the raw table joined to
     counts and sums re-aggregated from the partials, all oracle-checked
     against the base events table."""
-    import os
 
     from ecommerce_dataengineering_project_spark.sources.txlog import recreate
-    from ecommerce_dataengineering_project_spark.streaming.harness import (
-        TMP_ROOT,
-        run_bounded_foreach,
-    )
 
     src = _events_source(spark, sf_dir, n_flush=0)
-    name = f"fanout_{_sf_key(sf_dir)}"
-    raw = recreate(os.path.join(TMP_ROOT, "streams", name, "raw"))
-    agg = recreate(os.path.join(TMP_ROOT, "streams", name, "agg"))
+    work_dir = scratch_dir("streams/stream_fanout_two_tables", sf_dir)
+    raw = recreate(os.path.join(work_dir, "raw"))
+    agg = recreate(os.path.join(work_dir, "agg"))
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         detail = batch_df.select("event_id", "user_id", "event_type", "value")
@@ -1301,10 +1259,10 @@ def q_stream_fanout_two_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "partial_cents"
             ),
         )
-        raw.append_txn(detail, f"{name}_raw", batch_id)
-        agg.append_txn(partials, f"{name}_agg", batch_id)
+        raw.append_txn(detail, "fanout_raw", batch_id)
+        agg.append_txn(partials, "fanout_agg", batch_id)
 
-    run_bounded_foreach(spark, name, None, lambda s: s, commit, source=src)
+    run_bounded_foreach(spark, work_dir, None, lambda s: s, commit, source=src)
     from_raw = raw.read(spark).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_raw")
     )
@@ -1371,7 +1329,11 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return run_bounded_stream(
-        spark, "stream_stream_left_join", None, transform, source=src
+        spark,
+        scratch_dir("streams/stream_stream_left_join", sf_dir),
+        None,
+        transform,
+        source=src,
     )
 
 
@@ -1436,7 +1398,11 @@ def q_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return run_bounded_stream(
-        spark, "stream_stream_full_outer", None, transform, source=src
+        spark,
+        scratch_dir("streams/stream_stream_full_outer", sf_dir),
+        None,
+        transform,
+        source=src,
     )
 
 
@@ -1485,7 +1451,11 @@ def q_stream_dedup_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return run_bounded_stream(
-        spark, "stream_dedup_then_window", None, transform, source=src
+        spark,
+        scratch_dir("streams/stream_dedup_then_window", sf_dir),
+        None,
+        transform,
+        source=src,
     )
 
 
@@ -1538,7 +1508,7 @@ def q_stream_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 25-40% on local[8] — adaptive_state_partitions reproduces both)
     return run_bounded_stream(
         spark,
-        "timer_sessions",
+        scratch_dir("streams/stream_timer_sessions", sf_dir),
         None,
         transform,
         state_partitions=adaptive_state_partitions(spark),
@@ -1600,20 +1570,17 @@ def q_stream_idle_timer_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_dataengineering_project_spark.streaming.stateful import idle_flush_stream
 
     src = _events_source(spark, sf_dir, n_flush=2)
-    # noDataMicroBatches OFF: shouldRunAnotherBatch is unconditionally
-    # true under ProcessingTimeTimeout, so availableNow would schedule
-    # empty micro-batches forever. With it off, timers fire in the
-    # next DATA batch a key sits out — which is exactly the islands
+    # The harness runs with noDataMicroBatches OFF, so timers fire in
+    # the next DATA batch a key sits out — exactly the islands
     # semantics the oracle re-derives (the flush batches give every
     # final run its firing batch).
     return run_bounded_stream(
         spark,
-        "idle_timer_flush",
+        scratch_dir("streams/stream_idle_timer_flush", sf_dir),
         None,
         idle_flush_stream,
         state_partitions=adaptive_state_partitions(spark),
         source=src,
-        extra_confs={"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
     )
 
 
@@ -1654,7 +1621,6 @@ ORACLES["stream_idle_timer_flush"] = """
 # (1/3/5 -> batch 0/1/2) — deterministic boundaries both engines can
 # derive, so the sequential accept-loop is exactly SQL-replayable.
 STREAM_SEM_BATCHES = 3
-_SEM_BOOT_STAGED: set[str] = set()  # per-process, like _SOURCE_CACHE
 
 
 def q_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1724,7 +1690,7 @@ def q_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SEM_INC_CENTROIDS[sf_dir] = seeded_centroids(history, n_cells)
     return run_semantic_dedup_stream(
         spark,
-        f"sem_dedup_{_sf_key(sf_dir)}",
+        scratch_dir("streams/stream_semantic_dedup", sf_dir),
         history,
         emb.where(F.col("vec_id") % 2 != 0),
         F.expr("cast((vec_id % 6) div 2 as int)"),
@@ -1736,7 +1702,7 @@ def q_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def run_semantic_dedup_stream(
     spark: SparkSession,
-    key: str,
+    work_dir: str,
     history: DataFrame,
     new_vectors: DataFrame,
     batch_tag,
@@ -1747,57 +1713,30 @@ def run_semantic_dedup_stream(
     """The ingest-dedup micro-batch loop, parameterized so the
     registered fixture AND the production-condition profiler
     (tools/profile_semstream_scale.py: FIXED batches, growing history)
-    drive the identical code path. ``key`` names the stream dirs and
-    the per-process staging memos; ``batch_tag`` is an int Column
-    splitting ``new_vectors`` into the ordered ingest epochs."""
-    import os
+    drive the identical code path. ``work_dir`` holds the run's stream
+    dirs and decision log; ``batch_tag`` is an int Column splitting
+    ``new_vectors`` into the ordered ingest epochs."""
     import shutil
-
-    from pyspark.sql.types import ArrayType, FloatType
 
     from ecommerce_dataengineering_project_spark.operators.dedup import (
         semantic_cell_index,
         semantic_dedup_incremental,
     )
-    from ecommerce_dataengineering_project_spark.streaming.harness import (
-        run_bounded_foreach,
-    )
 
-    base = os.path.join(TMP_ROOT, "streams", key)
-    dec_dir = os.path.join(base, "decisions")
+    dec_dir = os.path.join(work_dir, "decisions")
     shutil.rmtree(dec_dir, ignore_errors=True)
-    # The bootstrap epoch is a pure function of the (immutable) fixture
-    # + centroids: compute it ONCE per process like staged_source does
-    # for stream inputs, then per run just copy the few files into the
-    # fresh log dir — repeat serves skip the Spark job entirely.
-    boot_dir = os.path.join(TMP_ROOT, "streams", "sources", f"{key}_boot")
-    if key not in _SEM_BOOT_STAGED:
-        semantic_cell_index(history, cents).select(
-            F.col("vid").alias("vec_id"),
-            "cell",
-            F.lit(0).cast("bigint").alias("n_history_hits"),
-            F.lit(0).cast("bigint").alias("n_batch_hits"),
-            F.lit(True).alias("keep"),
-            "v",
-            "nrm",
-        ).coalesce(4).write.mode("overwrite").parquet(boot_dir)
-        _SEM_BOOT_STAGED.add(key)
-    os.makedirs(dec_dir, exist_ok=True)
-    shutil.copytree(boot_dir, os.path.join(dec_dir, "ingest_batch=-1"))
-
-    def stage(source_dir: str):
-        tagged = new_vectors.select("vec_id", "embedding").withColumn(
-            "__batch", batch_tag
-        )
-        stage_source_tagged(tagged, n_batches, source_dir)
-        return StructType(
-            [
-                StructField("vec_id", LongType()),
-                StructField("embedding", ArrayType(FloatType())),
-            ]
-        )
-
-    src = staged_source(spark, f"{key}_batches", stage)
+    # the bootstrap epoch: the accepted history, written into this
+    # run's log
+    semantic_cell_index(history, cents).select(
+        F.col("vid").alias("vec_id"),
+        "cell",
+        F.lit(0).cast("bigint").alias("n_history_hits"),
+        F.lit(0).cast("bigint").alias("n_batch_hits"),
+        F.lit(True).alias("keep"),
+        "v",
+        "nrm",
+    ).coalesce(4).write.parquet(os.path.join(dec_dir, "ingest_batch=-1"))
+    tagged = new_vectors.select("vec_id", "embedding").withColumn("__batch", batch_tag)
 
     # Explicit log schema: the per-batch index read must NOT infer its
     # schema from leaf files — inference opens parquet footers before
@@ -1841,7 +1780,9 @@ def run_semantic_dedup_stream(
             os.path.join(dec_dir, f"ingest_batch={batch_id}")
         )
 
-    run_bounded_foreach(spark, key, None, lambda s: s, apply, source=src)
+    run_bounded_foreach(
+        spark, work_dir, None, lambda s: s, apply, source=(tagged, n_batches)
+    )
     return spark.read.schema(log_schema).parquet(dec_dir).where(F.col("ingest_batch") >= 0).select(
         "vec_id", "cell", "n_history_hits", "n_batch_hits", "keep", "ingest_batch"
     )

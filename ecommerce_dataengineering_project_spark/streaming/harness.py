@@ -11,15 +11,25 @@ For deterministic execution the engine runs the *same* dataflow bounded:
 - trigger: ``availableNow`` — processes everything, then stops (T5's
   ``awaitTermination(120)`` without the wall-clock dependence).
 - sink: checkpointed parquet append (K3's shape: append mode +
-  ``checkpointLocation``; partitioning is the caller's choice).
+  ``checkpointLocation``; partitioning is the caller's choice), or a
+  ``foreachBatch`` function.
+
+Like the reference's consumer, each bounded query owns its source, sink
+and checkpoint: they live under a ``work_dir`` the caller supplies
+(``scratch_dir`` derives one per query and input), every run restages
+its input there, and nothing is cached between runs. Each query runs in
+a child of the caller's session (``spark.newSession()``, starting from
+the caller's SQL confs), and its streaming confs are set on that child
+alone, so the caller's session is never modified and two bounded
+queries can run at once.
 
 Watermark flushing: in append mode a windowed aggregation only emits a
 window after the watermark passes its end, and the watermark advances
-*between* micro-batches. A bounded run therefore stages a final
-``flush`` file whose single far-future row pushes the watermark past
-every real window in the last batch; the flush row's own window is
-dropped by the caller (it is deterministic and known). File order is
-pinned via mtime — the file stream source processes oldest-first.
+*between* micro-batches. A bounded run therefore stages trailing
+``flush`` files whose far-future rows push the watermark past every
+real window; the flush rows' own windows are dropped by the caller
+(they are deterministic and known). File order is pinned via mtime —
+the file stream source processes oldest-first.
 
 At 100 TB none of this harness changes the query: swap the staged file
 source for ``readStream.format("kafka")`` and ``availableNow`` for a
@@ -29,16 +39,18 @@ processing-time trigger and the same plan runs unbounded.
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TMP_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp")
 
-# Last executed micro-batch plan per bounded run, keyed by harness run
-# name. Streaming transforms can't be plan-audited without executing
+# Last executed micro-batch plan per bounded run, keyed by the run's
+# work_dir. Streaming transforms can't be plan-audited without executing
 # (building the DataFrame runs the bounded job), so the harness records
 # the plan it actually executed and tests/test_plan_hygiene.py sweeps
 # these for CartesianProduct / row-at-a-time-Python regressions exactly
@@ -46,64 +58,168 @@ TMP_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.
 LAST_PLAN: dict[str, str] = {}
 
 
-def _capture_plan(name: str, q) -> None:
+def _capture_plan(key: str, q) -> None:
     try:
         plan = q._jsq.explainInternal(False)
     except Exception:  # no batch executed (empty source) — nothing to audit
         return
     if "No physical plan" not in plan:
-        LAST_PLAN[name] = plan
+        LAST_PLAN[key] = plan
 
 
-def _stream_dirs(name: str) -> tuple[str, str, str]:
-    base = os.path.join(TMP_ROOT, "streams", name)
-    return (
-        os.path.join(base, "source"),
-        os.path.join(base, "sink"),
-        os.path.join(base, "checkpoint"),
-    )
+def scratch_dir(name: str, sf_dir: str) -> str:
+    """The scratch directory of ``name`` (a query, or a relative path
+    such as ``streams/stream_dedup``) over the input at ``sf_dir``:
+    ``.tmp/<name>/<basename>-<hash>``. The short hash of the input's
+    absolute path keeps two inputs that share a basename
+    (``A/sf0.01``, ``B/sf0.01``) in separate directories."""
+    path = os.path.abspath(sf_dir)
+    tag = hashlib.sha1(path.encode()).hexdigest()[:8]
+    return os.path.join(TMP_ROOT, name, f"{os.path.basename(path)}-{tag}")
 
 
-def stage_source(
-    batches: list[DataFrame],
+def stage_source_tagged(
+    tagged: DataFrame,
+    n_batches: int,
     source_dir: str,
+    flush_rows=None,
 ) -> None:
-    """Write each batch DataFrame as ONE parquet file in ``source_dir``,
-    with strictly increasing mtimes so the file stream source replays
-    them in order (oldest-first), one micro-batch per file.
+    """Single-scan staging: ``tagged`` carries an integer ``__batch``
+    column (0..n_batches-1); one partitioned write splits it into the
+    ordered micro-batch files, one parquet file per batch, with strictly
+    increasing mtimes so the file stream source replays them in order
+    (oldest-first). The partition column is dropped from the data files
+    by the partitioned write, so the staged schema is exactly the batch
+    schema. ``flush_rows`` (a pyarrow Table) is appended as one trailing
+    single-file batch per row, written driver-side — a Spark job per
+    1-row flush file would cost more than the whole stream.
 
-    All batches go through a single partitioned write job (a per-batch
-    job would pay Spark job-launch overhead once per micro-batch — it
-    dominated the harness wall-clock). The partition column is dropped
-    from the data files by the partitioned write, so the staged schema
-    is exactly the batch schema.
+    Flush contract (ADVICE r15): with the harness default
+    ``noDataMicroBatches.enabled=false``, a watermark advance takes
+    effect one micro-batch later, so a watermark-dependent stream must
+    stage AT LEAST TWO flush batches — the first carries the far-future
+    timestamps, the second is the batch in which the advanced watermark
+    finalizes the last real windows/timers/outer-nulls. A single flush
+    row would silently drop those final emissions; the assert below
+    makes that a loud staging-time error instead.
     """
-    from pyspark.sql import functions as F
+    import pyarrow.parquet as pq
+
+    if flush_rows is not None and flush_rows.num_rows < 2:
+        raise ValueError(
+            "flush_rows must stage >= 2 rows (one batch each): with "
+            "no-data micro-batches disabled, a watermark advance lands "
+            "one batch later, so a single flush batch never finalizes "
+            "the last real emissions"
+        )
 
     shutil.rmtree(source_dir, ignore_errors=True)
     os.makedirs(source_dir, exist_ok=True)
-    union = None
-    for i, df in enumerate(batches):
-        tagged = df.withColumn("__batch", F.lit(i))
-        union = tagged if union is None else union.unionByName(tagged)
     staging = os.path.join(source_dir, "_stage")
-    union.coalesce(1).write.partitionBy("__batch").mode("overwrite").parquet(staging)
+    tagged.coalesce(1).write.partitionBy("__batch").mode("overwrite").parquet(staging)
     now = time.time() - 3600.0
-    for i in range(len(batches)):
+    for i in range(n_batches):
         [part] = glob.glob(os.path.join(staging, f"__batch={i}", "part-*.parquet"))
         dest = os.path.join(source_dir, f"batch-{i:05d}.parquet")
         shutil.move(part, dest)
         os.utime(dest, (now + i, now + i))
     shutil.rmtree(staging)
+    if flush_rows is not None:
+        for j in range(flush_rows.num_rows):
+            dest = os.path.join(source_dir, f"batch-{n_batches + j:05d}.parquet")
+            pq.write_table(flush_rows.slice(j, 1), dest)
+            os.utime(dest, (now + n_batches + j, now + n_batches + j))
+
+
+def _tag_batches(batches: list[DataFrame]) -> tuple[DataFrame, int]:
+    """One DataFrame for ``stage_source_tagged``: each batch tagged with
+    its index, so all batches stage in one partitioned write (a
+    per-batch job would pay Spark job-launch overhead once per
+    micro-batch)."""
+    union = None
+    for i, df in enumerate(batches):
+        tagged = df.withColumn("__batch", F.lit(i))
+        union = tagged if union is None else union.unionByName(tagged)
+    return union, len(batches)
+
+
+def _run(
+    spark: SparkSession,
+    work_dir: str,
+    batches: list[DataFrame] | None,
+    source: tuple | None,
+    transform,
+    sink,
+    state_partitions: int = 4,
+    extra_confs: dict[str, str] | None = None,
+) -> DataFrame:
+    """The one start path: stage, read the stream in a child session,
+    start ``sink(writer)``, await, record the plan. Returns the
+    transformed streaming DataFrame."""
+    tagged, n_batches, *flush = source if source is not None else _tag_batches(batches)
+    source_dir = os.path.join(work_dir, "source")
+    ckpt_dir = os.path.join(work_dir, "checkpoint")
+    stage_source_tagged(tagged, n_batches, source_dir, *flush)
+    shutil.rmtree(ckpt_dir, ignore_errors=True)
+
+    # Stateful operators keep one state-store instance per shuffle partition
+    # PER micro-batch; a bounded local run with the batch engine's
+    # partitioning pays ~hundreds of state commits for no parallelism gain.
+    # The partition count is captured in the checkpoint at first start — on
+    # a cluster, size it to executor count before first start.
+    #
+    # noDataMicroBatches OFF by default (r15 measurement: the trailing
+    # no-data batch costs a full ~0.9 s trigger — addBatch + offset/
+    # commit-log fsyncs — per bounded run): in this harness the final
+    # watermark advance is performed by the staged far-future FLUSH ROWS, so
+    # every real window/timer/outer-null emission lands in a data batch (the
+    # flush batch sees a watermark already past every real event), and the
+    # no-data batch that availableNow would append can only emit flush-key
+    # rows the callers provably filter (or evict state nobody reads). It
+    # also keeps the proc-time timer arm finite:
+    # FlatMapGroupsWithStateExec.shouldRunAnotherBatch is unconditionally
+    # true under ProcessingTimeTimeout, so availableNow would schedule empty
+    # batches forever. An unbounded production run keeps the default:
+    # there, wall-clock finalization between arrivals is exactly what
+    # no-data batches are for. Callers can re-enable per run via
+    # extra_confs.
+    #
+    # newSession() starts from the builder's confs only, so the caller's
+    # runtime SQL confs (a session time zone, say) are copied in first.
+    child = spark.newSession()
+    inherited = {k: v for k, v in spark.conf.getAll.items() if spark.conf.isModifiable(k)}
+    confs = {
+        **inherited,
+        "spark.sql.shuffle.partitions": str(state_partitions),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+        **(extra_confs or {}),
+    }
+    for k, v in confs.items():
+        child.conf.set(k, v)
+    stream = (
+        child.readStream.schema(tagged.drop("__batch").schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(source_dir)
+    )
+    out = transform(stream)
+    q = (
+        sink(out.writeStream)
+        .option("checkpointLocation", ckpt_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    _capture_plan(work_dir, q)
+    return out
 
 
 def run_bounded_foreach(
     spark: SparkSession,
-    name: str,
+    work_dir: str,
     batches: list[DataFrame] | None,
     transform,
     batch_fn,
-    source: tuple[str, object] | None = None,
+    source: tuple | None = None,
 ) -> None:
     """Bounded streaming run into a ``foreachBatch`` sink — the
     production pattern for sinks Structured Streaming can't write
@@ -112,28 +228,12 @@ def run_bounded_foreach(
     BATCH DataFrame, so any batch operator (e.g.
     sources.maintenance.merge_upsert) becomes a streaming sink;
     exactly-once comes from the checkpoint + an idempotent batch_fn.
+    Input, staging and session are as in ``run_bounded_stream``.
     """
-    source_dir, _, ckpt_dir = _stream_dirs(name)
-    if source is not None:
-        source_dir, schema = source
-    else:
-        stage_source(batches, source_dir)
-        schema = batches[0].schema
-    shutil.rmtree(ckpt_dir, ignore_errors=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+    _run(
+        spark, work_dir, batches, source, transform,
+        lambda w: w.foreachBatch(batch_fn),
     )
-    q = (
-        transform(stream)
-        .writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _capture_plan(name, q)
 
 
 def rate_source(spark: SparkSession, rows_per_second: int = 2) -> DataFrame:
@@ -178,157 +278,45 @@ def adaptive_state_partitions(spark: SparkSession, cap: int = 16) -> int:
     return min(cap, max(4, spark.sparkContext.defaultParallelism))
 
 
-_SOURCE_CACHE: dict[str, object] = {}
-
-
-def staged_source(spark: SparkSession, key: str, stage_fn) -> tuple[str, object]:
-    """Stage a named source once per process and reuse it: several
-    bounded queries over the same input stream (e.g. the three window
-    shapes over events) share one staging job. ``stage_fn(source_dir)``
-    writes the files and returns the row schema."""
-    source_dir = os.path.join(TMP_ROOT, "streams", "sources", key)
-    if key not in _SOURCE_CACHE:
-        _SOURCE_CACHE[key] = stage_fn(source_dir)
-    return source_dir, _SOURCE_CACHE[key]
-
-
-def stage_source_tagged(
-    tagged: DataFrame,
-    n_batches: int,
-    source_dir: str,
-    flush_rows=None,
-    batch_col: str = "__batch",
-) -> None:
-    """Single-scan staging: ``tagged`` carries an integer batch-id
-    column (0..n_batches-1); one partitioned write splits it into the
-    ordered micro-batch files. ``flush_rows`` (a pyarrow Table) is
-    appended as one trailing single-file batch per row, written
-    driver-side — a Spark job per 1-row flush file would cost more than
-    the whole stream.
-
-    Flush contract (ADVICE r15): with the harness default
-    ``noDataMicroBatches.enabled=false``, a watermark advance takes
-    effect one micro-batch later, so a watermark-dependent stream must
-    stage AT LEAST TWO flush batches — the first carries the far-future
-    timestamps, the second is the batch in which the advanced watermark
-    finalizes the last real windows/timers/outer-nulls. A single flush
-    row would silently drop those final emissions; the assert below
-    makes that a loud staging-time error instead.
-    """
-    import pyarrow.parquet as pq
-
-    if flush_rows is not None and flush_rows.num_rows < 2:
-        raise ValueError(
-            "flush_rows must stage >= 2 rows (one batch each): with "
-            "no-data micro-batches disabled, a watermark advance lands "
-            "one batch later, so a single flush batch never finalizes "
-            "the last real emissions"
-        )
-
-    shutil.rmtree(source_dir, ignore_errors=True)
-    os.makedirs(source_dir, exist_ok=True)
-    staging = os.path.join(source_dir, "_stage")
-    tagged.coalesce(1).write.partitionBy(batch_col).mode("overwrite").parquet(staging)
-    now = time.time() - 3600.0
-    for i in range(n_batches):
-        [part] = glob.glob(os.path.join(staging, f"{batch_col}={i}", "part-*.parquet"))
-        dest = os.path.join(source_dir, f"batch-{i:05d}.parquet")
-        shutil.move(part, dest)
-        os.utime(dest, (now + i, now + i))
-    shutil.rmtree(staging)
-    if flush_rows is not None:
-        for j in range(flush_rows.num_rows):
-            dest = os.path.join(source_dir, f"batch-{n_batches + j:05d}.parquet")
-            pq.write_table(flush_rows.slice(j, 1), dest)
-            os.utime(dest, (now + n_batches + j, now + n_batches + j))
-
-
 def run_bounded_stream(
     spark: SparkSession,
-    name: str,
+    work_dir: str,
     batches: list[DataFrame] | None,
     transform,
     output_mode: str = "append",
     partition_by: list[str] | None = None,
     state_partitions: int = 4,
-    source: tuple[str, object] | None = None,
+    source: tuple | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Stage ``batches`` as an ordered file stream (or reuse a
-    ``staged_source`` result passed as ``source``), run ``transform``
-    (streaming DataFrame -> streaming DataFrame) with an availableNow
-    trigger into a checkpointed parquet sink, and return the sink as a
-    batch DataFrame.
+    """Run ``transform`` (streaming DataFrame -> streaming DataFrame)
+    over a bounded file stream with an availableNow trigger into a
+    checkpointed parquet sink, and return the sink as a batch DataFrame
+    of the caller's session.
 
-    The checkpoint is recreated per run so re-runs are idempotent (a
-    retained checkpoint would mark the staged files already-consumed and
-    no-op — the production behavior, wrong for a test harness).
+    The input is either ``batches`` (one micro-batch per DataFrame) or
+    ``source = (tagged, n_batches[, flush_rows])``, the arguments of
+    ``stage_source_tagged``. The caller owns ``work_dir``: every run
+    restages the input in ``<work_dir>/source`` and recreates
+    ``<work_dir>/sink`` and ``<work_dir>/checkpoint`` (a retained
+    checkpoint would mark the staged files already-consumed and no-op —
+    the production behavior, wrong for a bounded replay). Nothing
+    outside ``work_dir`` is written or cleared.
+
+    The query runs in a child session that starts from the caller's SQL
+    confs; ``state_partitions``, ``noDataMicroBatches.enabled=false``
+    and ``extra_confs`` (e.g. a state-store provider) are set on the
+    child only, and the query captures them at start.
     """
-    source_dir, sink_dir, ckpt_dir = _stream_dirs(name)
-    if source is not None:
-        source_dir, schema = source
-    else:
-        stage_source(batches, source_dir)
-        schema = batches[0].schema
+    sink_dir = os.path.join(work_dir, "sink")
     shutil.rmtree(sink_dir, ignore_errors=True)
-    shutil.rmtree(ckpt_dir, ignore_errors=True)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+    def sink(writer):
+        writer = writer.outputMode(output_mode).format("parquet").option("path", sink_dir)
+        return writer.partitionBy(*partition_by) if partition_by else writer
+
+    out = _run(
+        spark, work_dir, batches, source, transform, sink,
+        state_partitions, extra_confs,
     )
-    out = transform(stream)
-    writer = (
-        out.writeStream.outputMode(output_mode)
-        .format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-    )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    # Stateful operators keep one state-store instance per shuffle
-    # partition PER micro-batch; a bounded local run with the batch
-    # engine's partitioning pays ~hundreds of state commits for no
-    # parallelism gain. The partition count is captured in the
-    # checkpoint at first start, so it is scoped here, not session-wide
-    # — on a cluster, size it to executor count before first start.
-    # extra_confs: per-run session confs captured by the query at
-    # start (same scoping discipline as the partition count) — e.g.
-    # the proc-time timer arm must turn no-data micro-batches OFF:
-    # FlatMapGroupsWithStateExec.shouldRunAnotherBatch is
-    # unconditionally true under ProcessingTimeTimeout, so availableNow
-    # would schedule empty batches forever.
-    #
-    # noDataMicroBatches OFF by default (r15 measurement: the trailing
-    # no-data batch costs a full ~0.9 s trigger — addBatch + offset/
-    # commit-log fsyncs — per bounded run): in this harness the final
-    # watermark advance is performed by the staged far-future FLUSH
-    # ROWS, so every real window/timer/outer-null emission lands in a
-    # data batch (the flush batch sees a watermark already past every
-    # real event), and the no-data batch that availableNow would
-    # append can only emit flush-key rows the callers provably filter
-    # (or evict state nobody reads). An unbounded production run keeps
-    # the default: there, wall-clock finalization between arrivals is
-    # exactly what no-data batches are for. Callers can re-enable per
-    # run via extra_confs.
-    confs = {
-        "spark.sql.shuffle.partitions": str(state_partitions),
-        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
-    }
-    confs.update(extra_confs or {})
-    prevs = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        q = writer.start()
-        q.awaitTermination()
-        _capture_plan(name, q)
-    finally:
-        for k, p in prevs.items():
-            if p is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, p)
     return spark.read.schema(out.schema).parquet(sink_dir)

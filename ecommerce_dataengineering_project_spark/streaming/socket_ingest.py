@@ -152,5 +152,5 @@ def run_socket_ingest(
         q.awaitTermination(30)
         from ecommerce_dataengineering_project_spark.streaming.harness import _capture_plan
 
-        _capture_plan("socket_ingest", q)
+        _capture_plan(sink_dir, q)
     return spark.read.schema(out.schema).parquet(sink_dir)

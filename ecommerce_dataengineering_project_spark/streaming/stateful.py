@@ -15,7 +15,7 @@ batches, never row-at-a-time Python.
 
 Ordering contract: rows are processed in (ts, event_id) order *within*
 each micro-batch. Cross-batch order is the file/offset replay order,
-which the bounded harness pins (harness.stage_source mtimes). This is
+which the bounded harness pins (harness.stage_source_tagged mtimes). This is
 the same contract the reference's single-threaded producer loop has.
 """
 

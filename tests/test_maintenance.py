@@ -251,7 +251,10 @@ def test_streaming_upsert_via_foreach_batch(spark, clean_table):
     """Streaming MERGE: micro-batches of purchase updates upserted
     into a gold table via foreachBatch + merge_upsert. Later batches
     win; re-keyed rows replace, new keys insert."""
-    from ecommerce_dataengineering_project_spark.streaming.harness import run_bounded_foreach
+    from ecommerce_dataengineering_project_spark.streaming.harness import (
+        TMP_ROOT,
+        run_bounded_foreach,
+    )
 
     t = clean_table("t_stream_upsert")
     spark.createDataFrame(
@@ -265,7 +268,10 @@ def test_streaming_upsert_via_foreach_batch(spark, clean_table):
     def upsert(batch_df, batch_id):
         merge_upsert(spark, t, batch_df, ["k"])
 
-    run_bounded_foreach(spark, "stream_upsert_test", batches, lambda s: s, upsert)
+    run_bounded_foreach(
+        spark, os.path.join(TMP_ROOT, "streams", "stream_upsert_test"), batches,
+        lambda s: s, upsert,
+    )
     rows = {r.k: r.v for r in spark.table(t).collect()}
     assert rows == {"a": 1, "b": 20, "c": 300, "d": 400}
     spark.sql(f"DROP TABLE {t}")

@@ -156,7 +156,7 @@ def test_streaming_bronze_to_silver(spark, tmp_path):
     bronze = generate_bronze_purchases(spark, n=60, seed=7)
     out = run_bounded_stream(
         spark,
-        "medallion_bronze_silver_test",
+        str(tmp_path),
         [bronze],
         bronze_to_silver,
         partition_by=["product_id"],  # K3's silver layout
@@ -186,28 +186,25 @@ def test_restock_tws_api(spark, sf_dir):
 
     from ecommerce_dataengineering_project_spark.queries.streaming_queries import (
         QUERIES,
-        _sf_key,
         _tagged_events,
     )
     from ecommerce_dataengineering_project_spark.streaming.harness import (
         run_bounded_stream,
-        stage_source_tagged,
-        staged_source,
+        scratch_dir,
     )
     from ecommerce_dataengineering_project_spark.streaming.stateful import inventory_restock_tws
 
-    def stage(source_dir):
-        qty = _tagged_events(spark, sf_dir).select(
-            "event_id", "ts", "user_id",
-            (F.col("event_id") % 3 + 1).cast("int").alias("qty"), "__batch",
-        )
-        stage_source_tagged(qty, 3, source_dir)
-        return qty.drop("__batch").schema
-
-    src = staged_source(spark, f"events_qty_{_sf_key(sf_dir)}", stage)
+    qty = _tagged_events(spark, sf_dir).select(
+        "event_id", "ts", "user_id",
+        (F.col("event_id") % 3 + 1).cast("int").alias("qty"), "__batch",
+    )
     try:
         tws = run_bounded_stream(
-            spark, "restock_tws_test", None, inventory_restock_tws, source=src
+            spark,
+            scratch_dir("streams/restock_tws_test", sf_dir),
+            None,
+            inventory_restock_tws,
+            source=(qty, 3),
         )
         got = sorted(map(tuple, tws.collect()))
     except ImportError:

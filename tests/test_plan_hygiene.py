@@ -18,6 +18,8 @@ S5).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from ecommerce_dataengineering_project_spark.queries import registry
@@ -123,6 +125,9 @@ def test_stream_plan_hygiene(spark, sf_dir, name):
     _QUERIES[name](spark, sf_dir)
     assert harness.LAST_PLAN, f"{name}: no executed micro-batch plan captured"
     for run, plan in harness.LAST_PLAN.items():
+        # runs are keyed by their work dir, which must be the query's
+        # own scratch dir, never a path relative to the caller's cwd
+        assert run.startswith(harness.TMP_ROOT + os.sep), f"{name}: work dir {run}"
         assert "CartesianProduct" not in plan, f"{name}/{run}: cross product"
         assert (
             "BatchEvalPython" not in plan

@@ -2,12 +2,14 @@
 stream_dedup_rocksdb / statestore_inspect).
 
 Oracle parity runs registry-wide; these pin what parity can't: the
-RocksDB provider actually engages (and the conf is restored), state
+RocksDB provider actually engages (and the caller's conf is untouched), state
 time travel across micro-batches via the batchId option, and that
 state is partition-distributed rather than driver-held.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import functions as F
 
@@ -17,14 +19,18 @@ from ecommerce_dataengineering_project_spark.queries.streaming_queries import (
     q_stream_dedup,
     q_stream_dedup_rocksdb,
 )
-from ecommerce_dataengineering_project_spark.streaming.harness import _stream_dirs
+from ecommerce_dataengineering_project_spark.streaming.harness import scratch_dir
+
+
+def _checkpoint(query: str, sf_dir: str) -> str:
+    return os.path.join(scratch_dir(f"streams/{query}", sf_dir), "checkpoint")
 
 
 def test_rocksdb_results_match_default_provider(spark, sf_dir):
     key = "spark.sql.streaming.stateStore.providerClass"
     before = spark.conf.get(key, None)
     rock = {tuple(r) for r in q_stream_dedup_rocksdb(spark, sf_dir).collect()}
-    assert spark.conf.get(key, None) == before  # scoped, restored
+    assert spark.conf.get(key, None) == before  # set on the run's session only
     hdfs = {tuple(r) for r in q_stream_dedup(spark, sf_dir).collect()}
     assert rock == hdfs and len(rock) > 0
 
@@ -33,7 +39,7 @@ def test_rocksdb_provider_actually_engaged(spark, sf_dir):
     """The checkpoint's offset metadata records the provider class —
     proof the run used RocksDB rather than silently falling back."""
     q_stream_dedup_rocksdb(spark, sf_dir)
-    ckpt = _stream_dirs("stream_dedup_rocksdb")[2]
+    ckpt = _checkpoint("stream_dedup_rocksdb", sf_dir)
     import glob
     import json
 
@@ -48,7 +54,7 @@ def test_state_time_travel_across_batches(spark, sf_dir):
     """batchId=N reads the state AS OF micro-batch N: dedup state only
     grows across the replayed batches."""
     q_statestore_inspect(spark, sf_dir)
-    ckpt = _stream_dirs("statestore_inspect")[2]
+    ckpt = _checkpoint("statestore_inspect", sf_dir)
     latest = spark.read.format("statestore").load(ckpt)
     n_latest = latest.count()
     early = (
@@ -62,7 +68,7 @@ def test_state_time_travel_across_batches(spark, sf_dir):
 
 def test_state_is_partition_distributed(spark, sf_dir):
     q_statestore_inspect(spark, sf_dir)
-    ckpt = _stream_dirs("statestore_inspect")[2]
+    ckpt = _checkpoint("statestore_inspect", sf_dir)
     st = spark.read.format("statestore").load(ckpt)
     parts = {r.partition_id for r in st.select("partition_id").distinct().collect()}
     assert len(parts) > 1  # state sharded across store instances
@@ -77,7 +83,7 @@ def test_join_state_readable_per_side(spark, sf_dir):
     )
 
     q_stream_stream_join(spark, sf_dir)
-    ckpt = _stream_dirs("stream_stream_join")[2]
+    ckpt = _checkpoint("stream_stream_join", sf_dir)
     left = (
         spark.read.format("statestore").option("joinSide", "left").load(ckpt)
     )
@@ -101,7 +107,7 @@ def test_window_agg_state_keys_are_windows(spark, sf_dir):
     )
 
     emitted = q_stream_dedup_then_window(spark, sf_dir)
-    ckpt = _stream_dirs("stream_dedup_then_window")[2]
+    ckpt = _checkpoint("stream_dedup_then_window", sf_dir)
     agg_state = (
         spark.read.format("statestore").option("operatorId", 0).load(ckpt)
     )

@@ -70,10 +70,10 @@ def test_drift_baseline_memoized_by_content(spark, sf_dir):
     import json
     import os
 
-    from ecommerce_dataengineering_project_spark.streaming.harness import TMP_ROOT
+    from ecommerce_dataengineering_project_spark.streaming.harness import scratch_dir
 
     fp = keys[0][1]
-    arts = glob.glob(os.path.join(TMP_ROOT, "drift_baseline", f"*_{fp}.json"))
+    arts = glob.glob(os.path.join(scratch_dir("drift_baseline", sf_dir), f"*_{fp}.json"))
     assert len(arts) == 1
     with open(arts[0]) as f:
         art = json.load(f)

@@ -25,11 +25,10 @@ from ecommerce_dataengineering_project_spark.operators.dedup import (
 )
 from ecommerce_dataengineering_project_spark.queries.streaming_queries import (
     STREAM_SEM_BATCHES,
-    _sf_key,
     q_stream_semantic_dedup,
 )
 from ecommerce_dataengineering_project_spark.sources.readers import load_table
-from ecommerce_dataengineering_project_spark.streaming.harness import TMP_ROOT
+from ecommerce_dataengineering_project_spark.streaming.harness import scratch_dir
 
 
 def _rows(df):
@@ -74,7 +73,7 @@ def test_each_epoch_recomputes_identically_from_log_prefix(spark, sf_dir):
     q_stream_semantic_dedup(spark, sf_dir)  # materialize the log
     cents = _SEM_INC_CENTROIDS[sf_dir]
     dec_dir = os.path.join(
-        TMP_ROOT, "streams", f"sem_dedup_{_sf_key(sf_dir)}", "decisions"
+        scratch_dir("streams/stream_semantic_dedup", sf_dir), "decisions"
     )
     log = spark.read.parquet(dec_dir)
     emb = load_table(spark, sf_dir, "embeddings")

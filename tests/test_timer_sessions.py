@@ -8,6 +8,7 @@ and cooperate with the inline gap-split on one state shape.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,7 +21,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ecommerce_dataengineering_project_spark.streaming.harness import run_bounded_stream
+from ecommerce_dataengineering_project_spark.streaming.harness import (
+    TMP_ROOT,
+    run_bounded_stream,
+)
 from ecommerce_dataengineering_project_spark.streaming.stateful import (
     timer_sessions_stream,
 )
@@ -69,7 +73,7 @@ def sessions(spark):
     ]
     out = run_bounded_stream(
         spark,
-        "timer_sessions_unit",
+        os.path.join(TMP_ROOT, "streams", "timer_sessions_unit"),
         batches,
         lambda s: timer_sessions_stream(s, gap="6 hours", watermark="1 hour"),
     )
@@ -161,7 +165,7 @@ def test_random_batch_splits_match_the_model(spark):
         ]
         out = run_bounded_stream(
             spark,
-            f"timer_sessions_prop_{seed}",
+            os.path.join(TMP_ROOT, "streams", f"timer_sessions_prop_{seed}"),
             batches,
             lambda s: timer_sessions_stream(s, gap="6 hours", watermark="1 hour"),
         ).where(F.col("user_id") >= 0)
@@ -227,7 +231,7 @@ def _run_idle(spark, name, batches):
     from ecommerce_dataengineering_project_spark.streaming.stateful import idle_flush_stream
 
     out = run_bounded_stream(
-        spark, name, batches, idle_flush_stream,
+        spark, os.path.join(TMP_ROOT, "streams", name), batches, idle_flush_stream,
         state_partitions=4, extra_confs=_IDLE_CONFS,
     )
     return sorted(map(tuple, out.collect()))

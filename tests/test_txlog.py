@@ -135,13 +135,13 @@ def test_stream_txlog_append_one_version_per_batch(spark):
 
     from ecommerce_dataengineering_project_spark.queries.streaming_queries import (
         q_stream_txlog_append,
-        _sf_key,
     )
+    from ecommerce_dataengineering_project_spark.streaming.harness import scratch_dir
     from ecommerce_dataengineering_project_spark.sources.txlog import TxTable
 
     sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
     final = q_stream_txlog_append(spark, sf_dir)
-    root = os.path.join(TMP_ROOT, "streams", f"txlog_append_{_sf_key(sf_dir)}", "table")
+    root = os.path.join(scratch_dir("streams/stream_txlog_append", sf_dir), "table")
     table = TxTable(root)
     assert table.versions() == [1, 2, 3]
     counts = [table.read(spark, v).count() for v in table.versions()]

@@ -2,7 +2,8 @@
 """The applyInPandasWithState framework-floor profile for
 stream_inventory_restock (VERDICT r7/r8 bench watch item).
 
-Runs THREE bounded streams over the identical staged 3-batch source:
+Runs THREE bounded streams over the identical 3-batch source (each
+run restages it, so every arm's time includes the same staging job):
 
   identity    — stateless pass-through (micro-batch harness floor)
   noop_state  — pass-through applyInPandasWithState (no scan, no
@@ -47,8 +48,7 @@ from ecommerce_dataengineering_project_spark import get_spark
 from ecommerce_dataengineering_project_spark.queries import streaming_queries as sq
 from ecommerce_dataengineering_project_spark.streaming.harness import (
     run_bounded_stream,
-    stage_source_tagged,
-    staged_source,
+    scratch_dir,
 )
 from ecommerce_dataengineering_project_spark.streaming.stateful import (
     inventory_restock_stream,
@@ -78,18 +78,13 @@ def main() -> None:
     spark = get_spark(master="local[32]")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def stage(source_dir):
-        qty = sq._tagged_events(spark, sf).select(
-            "event_id",
-            "ts",
-            "user_id",
-            (F.col("event_id") % 3 + 1).cast("int").alias("qty"),
-            "__batch",
-        )
-        stage_source_tagged(qty, 3, source_dir)
-        return qty.drop("__batch").schema
-
-    src = staged_source(spark, f"events_qty_{sq._sf_key(sf)}", stage)
+    qty = sq._tagged_events(spark, sf).select(
+        "event_id",
+        "ts",
+        "user_id",
+        (F.col("event_id") % 3 + 1).cast("int").alias("qty"),
+        "__batch",
+    )
 
     arms = {
         "identity": lambda st: st.select("event_id", "user_id", "qty"),
@@ -104,11 +99,11 @@ def main() -> None:
             t0 = time.perf_counter()
             run_bounded_stream(
                 spark,
-                f"floorprof_{tag}",
+                scratch_dir(f"streams/floorprof_{tag}", sf),
                 None,
                 fn,
                 state_partitions=16,
-                source=src,
+                source=(qty, 3),
             ).count()
             runs.append(round(time.perf_counter() - t0, 2))
         # drop the first (cold) run from the median, like bench warmup

@@ -4,9 +4,10 @@ actually experiences (epochs are sized by ingest rate; the corpus
 grows underneath). The registered fixture instead grows the batches
 with the decade and so inherits the batch-side n^1.5 envelope by
 construction (SCALE.md); THIS measurement isolates the history dial
-for the full streaming loop — bootstrap copy, per-epoch index view,
-probe join, epoch write, availableNow machinery — not just the batch
-operator (whose flat history dial r13 measured at 1.94 -> 1.89 s).
+for the full streaming loop — bootstrap epoch write (it scales with
+history), staging, per-epoch index view, probe join, epoch write,
+availableNow machinery — not just the batch operator (whose flat
+history dial r13 measured at 1.94 -> 1.89 s).
 
 Both arms ride the generated sf1 table (tools/gen_sf1.py) so the
 batch vectors are IDENTICAL: odd vec_ids < 1500 split into 3 epochs
@@ -41,6 +42,7 @@ from ecommerce_dataengineering_project_spark.operators.similarity import (  # no
 from ecommerce_dataengineering_project_spark.queries.streaming_queries import (  # noqa: E402
     run_semantic_dedup_stream,
 )
+from ecommerce_dataengineering_project_spark.streaming.harness import scratch_dir  # noqa: E402
 
 SF1 = "/root/repo/.tmp/testdata/sf1"
 
@@ -64,16 +66,17 @@ def main() -> None:
         arms[label] = (hist, cents)
 
     bests: dict[str, float] = {}
-    for label, (hist, cents) in arms.items():  # warm: staging + boot
+    for label, (hist, cents) in arms.items():  # warm
         run_semantic_dedup_stream(
-            spark, f"semscale_{label}", hist, odds, tag, 3, cents, COSINE_THRESHOLD
+            spark, scratch_dir(f"streams/semscale_{label}", SF1), hist, odds, tag, 3,
+            cents, COSINE_THRESHOLD,
         ).count()
     for _ in range(repeats):
         for label, (hist, cents) in arms.items():  # interleaved
             t0 = time.perf_counter()
             run_semantic_dedup_stream(
-                spark, f"semscale_{label}", hist, odds, tag, 3, cents,
-                COSINE_THRESHOLD,
+                spark, scratch_dir(f"streams/semscale_{label}", SF1), hist, odds, tag,
+                3, cents, COSINE_THRESHOLD,
             ).count()
             bests[label] = min(bests.get(label, 1e9), time.perf_counter() - t0)
     for label, b in bests.items():
