@@ -1,7 +1,8 @@
 """Customer-analytics operators over the orders/lineitem tables.
 
-The reference's analytical layer stops at daily revenue + anomaly
-flags (anomaly_detection.py:25-43); these are the next three queries
+``fct_purchases`` is the reference's gold model over lineitem. The
+reference's analytical layer stops at daily revenue + anomaly
+flags (anomaly_detection.py:25-43); the rest are the next three queries
 an e-commerce warehouse grows immediately after that — segmentation
 (RFM), affinity (market-basket pair counts), and trend smoothing
 (exponentially decayed revenue). All three are classic one-to-two
@@ -17,9 +18,30 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ecommerce_dataengineering_project_spark.functions.revenue import final_amount
 from ecommerce_dataengineering_project_spark.functions.scalars import round_half_up
 
 N_TILES = 5
+
+
+def lineitem_amount() -> Column:
+    """Gold-model revenue over lineitem's columns (purchase semantics:
+    price=l_extendedprice, quantity=l_quantity,
+    member_discount=l_discount, supplement_price=l_tax)."""
+    return final_amount("l_extendedprice", "l_quantity", "l_discount", "l_tax")
+
+
+def fct_purchases(lineitem: DataFrame) -> DataFrame:
+    """The gold-model projection (fct_purchases.sql:30-47) of lineitem:
+    one row per line item, no shuffle."""
+    return lineitem.select(
+        F.col("l_orderkey").cast("string").alias("transaction_id"),
+        F.col("l_linenumber").alias("line_number"),
+        F.col("l_partkey").cast("string").alias("product_id"),
+        F.to_date("l_shipdate").alias("purchase_date"),
+        lineitem_amount().alias("final_amount"),
+        (F.col("l_returnflag") == F.lit("R")).alias("is_member"),
+    )
 
 
 def rfm_segments(

@@ -268,6 +268,35 @@ class DagRun:
         return {t: s["state"] for t, s in self.state.items()}
 
 
+def run_concurrently(*fns: Callable[[], object]) -> None:
+    """Run every ``fn`` at once, each in its own thread, and return when
+    all have ended; then raise the first failure, in argument order.
+
+    The threads are ``pyspark.InheritableThread``s, so the Spark jobs
+    they submit carry the caller's local properties (job group,
+    description, scheduler pool) and a ``cancelJobGroup`` reaches them.
+    Waiting for every thread before raising means no writer outlives
+    the call, so a retry never races a write still in flight."""
+    from pyspark import InheritableThread
+
+    errors: list[BaseException | None] = [None] * len(fns)
+
+    def call(i: int) -> None:
+        try:
+            fns[i]()
+        except BaseException as exc:  # re-raised in the caller
+            errors[i] = exc
+
+    threads = [InheritableThread(call, args=(i,)) for i in range(len(fns))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for exc in errors:
+        if exc is not None:
+            raise exc
+
+
 def sales_pipeline_dag(
     spark, sf_dir: str, out_root: str, run_token: str = "r1"
 ) -> Dag:
@@ -278,21 +307,28 @@ def sales_pipeline_dag(
     ``out_root``; re-running a half-finished run_id only executes the
     tasks that have not succeeded.
 
-    What each task reads and writes (``<run>`` is ``run=<run_token>``):
+    What each task reads and writes (``<run>`` is ``run=<run_token>``;
+    N is ``spark.sparkContext.defaultParallelism``):
 
-    - ``produce_sales_stream`` reads ``sf_dir``'s events and writes them
-      Kafka-shaped (one JSON ``value`` per event) to
-      ``bronze_events/<run>``;
+    - ``produce_sales_stream`` reads ``sf_dir``'s events, hash-partitions
+      them by ``user_id`` into N partitions, as a keyed Kafka producer
+      assigns a topic's partitions, and writes them Kafka-shaped (one
+      JSON ``value`` per event) to ``bronze_events/<run>``: up to N
+      files, each user's events in one of them;
     - ``run_streaming_consumer`` reads ``bronze_events/<run>`` as an
       ``availableNow`` stream and sinks it once into
       ``silver_purchases/<run>``, checkpointed in
-      ``checkpoints/run_streaming_consumer/<run>``;
-    - ``delta_to_iceberg`` reads ``silver_purchases/<run>`` and appends
-      it to the ``gold_tx`` txlog, which every run shares;
-    - ``run_dbt_transformation`` reads ``sf_dir``'s lineitem and writes
-      ``fct_purchases`` and ``daily_sales``;
+      ``checkpoints/run_streaming_consumer/<run>``; its one micro-batch
+      parses the N bronze files in N tasks and writes N silver files;
+    - ``delta_to_iceberg`` reads ``silver_purchases/<run>`` in N tasks
+      and appends it to the ``gold_tx`` txlog, which every run shares,
+      as N data files;
+    - ``run_dbt_transformation`` reads ``sf_dir``'s lineitem once and
+      writes ``fct_purchases`` and ``daily_sales`` concurrently, from
+      two threads that carry the caller's job group; it returns or
+      raises only after both writes have ended;
     - ``run_anomaly_detection_model`` reads ``daily_sales`` and writes
-      the flagged days to ``anomalies``.
+      the flagged days to ``anomalies`` as one file.
 
     Keying bronze, silver and the checkpoint by run token lets a later
     run over the same ``out_root`` promote only its own rows, while a
@@ -302,8 +338,14 @@ def sales_pipeline_dag(
     from pyspark.sql import functions as F
 
     from ecommerce_dataengineering_project_spark.ml.daily_anomaly import score_daily_sales
-    from ecommerce_dataengineering_project_spark.operators.aggregates import DAILY_SALES_SCHEMA
-    from ecommerce_dataengineering_project_spark.queries.core import q_daily_sales, q_fct_purchases
+    from ecommerce_dataengineering_project_spark.operators.aggregates import (
+        DAILY_SALES_SCHEMA,
+        daily_sales,
+    )
+    from ecommerce_dataengineering_project_spark.operators.commerce import (
+        fct_purchases,
+        lineitem_amount,
+    )
     from ecommerce_dataengineering_project_spark.sources.readers import load_table
     from ecommerce_dataengineering_project_spark.sources.txlog import TxTable
     from ecommerce_dataengineering_project_spark.streaming.bronze_silver import (
@@ -319,9 +361,13 @@ def sales_pipeline_dag(
     daily = os.path.join(out_root, "daily_sales")
 
     def produce():  # the bounded stand-in for generator.producer
-        events_to_kafka(load_table(spark, sf_dir, "events")).write.mode(
-            "overwrite"
-        ).parquet(bronze)
+        # keyed by user, as the reference's topic is partitioned: one
+        # bronze file per partition, so the stream hop, silver and the
+        # promote each run in N tasks, not in one per input row group
+        events = load_table(spark, sf_dir, "events").repartition(
+            spark.sparkContext.defaultParallelism, "user_id"
+        )
+        events_to_kafka(events).write.mode("overwrite").parquet(bronze)
 
     def stream():  # streaming_consumer's bronze->silver hop, bounded
         stream_events_to_silver(
@@ -348,16 +394,18 @@ def sales_pipeline_dag(
         )
 
     def transform():  # the dbt hop: fct_purchases + daily_sales
-        q_fct_purchases(spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(out_root, "fct_purchases")
+        li = load_table(spark, sf_dir, "lineitem")
+        fct = fct_purchases(li)
+        days = daily_sales(li, ts_col="l_shipdate", amount=lineitem_amount(), id_col="l_orderkey")
+        run_concurrently(
+            lambda: fct.write.mode("overwrite").parquet(os.path.join(out_root, "fct_purchases")),
+            lambda: days.write.mode("overwrite").parquet(daily),
         )
-        q_daily_sales(spark, sf_dir).write.mode("overwrite").parquet(daily)
 
     def anomaly():  # ml/anomaly_detection.py
         days = spark.read.schema(DAILY_SALES_SCHEMA).parquet(daily).toPandas()
-        spark.createDataFrame(score_daily_sales(days)).where(F.col("is_anomaly")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_root, "anomalies"))
+        flagged = spark.createDataFrame(score_daily_sales(days)).where(F.col("is_anomaly"))
+        flagged.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_root, "anomalies"))
 
     dag.add(Task("start"))
     dag.add(Task("produce_sales_stream", produce))

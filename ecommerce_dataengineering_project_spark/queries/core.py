@@ -19,7 +19,7 @@ from datetime import timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ecommerce_dataengineering_project_spark.functions.revenue import final_amount, total_purchase
+from ecommerce_dataengineering_project_spark.functions.revenue import total_purchase
 from ecommerce_dataengineering_project_spark.functions.scalars import (
     round_half_up,
     stable_id,
@@ -31,6 +31,7 @@ from ecommerce_dataengineering_project_spark.operators.aggregates import (
     high_watermark,
     incremental_filter,
 )
+from ecommerce_dataengineering_project_spark.operators.commerce import fct_purchases, lineitem_amount
 from ecommerce_dataengineering_project_spark.operators.joins import asof_join, broadcast_enrich
 from ecommerce_dataengineering_project_spark.operators.windows import (
     running_sum,
@@ -39,11 +40,8 @@ from ecommerce_dataengineering_project_spark.operators.windows import (
 )
 from ecommerce_dataengineering_project_spark.sources.readers import load_table
 
-# Column mapping lineitem -> purchase semantics (SURVEY §2b).
-def _amount():
-    return final_amount("l_extendedprice", "l_quantity", "l_discount", "l_tax")
-
-
+# Column mapping lineitem -> purchase semantics (SURVEY §2b); the
+# Column form is operators.commerce.lineitem_amount.
 _AMOUNT_SQL = "l_extendedprice*l_quantity*(1-l_discount)+l_tax"
 _REVENUE_SQL = "l_extendedprice*(1-l_discount)"
 
@@ -57,22 +55,14 @@ def q_daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     return daily_sales(
         load_table(spark, sf_dir, "lineitem"),
         ts_col="l_shipdate",
-        amount=_amount(),
+        amount=lineitem_amount(),
         id_col="l_orderkey",
     )
 
 
 def q_fct_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gold-model projection (P5/P6/P7/P10, fct_purchases.sql:30-47)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.select(
-        F.col("l_orderkey").cast("string").alias("transaction_id"),
-        F.col("l_linenumber").alias("line_number"),
-        F.col("l_partkey").cast("string").alias("product_id"),
-        F.to_date("l_shipdate").alias("purchase_date"),
-        _amount().alias("final_amount"),
-        (F.col("l_returnflag") == F.lit("R")).alias("is_member"),
-    )
+    return fct_purchases(load_table(spark, sf_dir, "lineitem"))
 
 
 def q_total_purchase_producer(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -421,3 +421,147 @@ def test_refresh_anomalies_equal_the_anomaly_query(spark, sf_dir, refresh):
     days = spark.read.parquet(os.path.join(out, "daily_sales")).count()
     assert got == want
     assert 0 < len(got) < days
+
+
+def _same_rows(a, b) -> bool:
+    """``a`` and ``b`` hold the same rows as multisets."""
+    return a.count() == b.count() and a.exceptAll(b).count() == 0 == b.exceptAll(a).count()
+
+
+def test_produce_keys_bronze_by_user(spark, sf_dir, tmp_path):
+    """Produce hash-partitions the events by user, as a keyed Kafka
+    producer does: from a one-row-group events file it writes one
+    non-empty bronze file per partition that holds a user, each user's
+    events in one file, and the stream hop carries every row to silver
+    exactly once."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from ecommerce_dataengineering_project_spark.plans.orchestrator import sales_pipeline_dag
+    from ecommerce_dataengineering_project_spark.sources.readers import load_table
+    from ecommerce_dataengineering_project_spark.streaming.bronze_silver import EVENT_SCHEMA
+
+    src = tmp_path / "sf"
+    src.mkdir()
+    table = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    pq.write_table(table, src / "events.parquet", row_group_size=table.num_rows)
+    assert pq.ParquetFile(src / "events.parquet").metadata.num_row_groups == 1
+
+    out = str(tmp_path / "out")
+    dag = sales_pipeline_dag(spark, str(src), out, run_token="r1")
+    dag.tasks["produce_sales_stream"].fn()
+    dag.tasks["run_streaming_consumer"].fn()
+
+    bronze = os.path.join(out, "bronze_events", "run=r1")
+    files = sorted(f for f in os.listdir(bronze) if f.endswith(".parquet"))
+    users = len(set(table.column("user_id").to_pylist()))
+    assert len(files) == min(spark.sparkContext.defaultParallelism, users) > 1
+    assert all(pq.ParquetFile(os.path.join(bronze, f)).metadata.num_rows > 0 for f in files)
+    users_per_file = [
+        {json.loads(v)["user_id"] for v in pq.read_table(os.path.join(bronze, f))["value"].to_pylist()}
+        for f in files
+    ]
+    assert sum(map(len, users_per_file)) == len(set().union(*users_per_file)) == users
+
+    silver = spark.read.schema(EVENT_SCHEMA).parquet(os.path.join(out, "silver_purchases", "run=r1"))
+    events = load_table(spark, str(src), "events").select(*EVENT_SCHEMA.fieldNames())
+    assert silver.count() == table.num_rows
+    assert _same_rows(silver, events)
+
+
+def test_failed_gold_write_waits_for_its_sibling_then_retries(
+    spark, sf_dir, refresh, tmp_path, monkeypatch
+):
+    """The two gold writes run at once. When the fct_purchases write
+    fails, the attempt ends only after the daily_sales write has
+    returned, with no writer thread still alive, and the retry writes
+    the same gold tables a clean refresh does."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from ecommerce_dataengineering_project_spark.plans.orchestrator import (
+        UP_FOR_RETRY,
+        sales_pipeline_dag,
+    )
+
+    real_parquet = DataFrameWriter.parquet
+    writers: list[threading.Thread] = []
+    fct_tries: list[int] = []
+    daily_returned: list[float] = []
+
+    def parquet(self, path, *args, **kwargs):
+        writers.append(threading.current_thread())
+        table = os.path.basename(path)
+        if table == "fct_purchases":
+            fct_tries.append(1)
+            if len(fct_tries) == 1:
+                raise OSError("gold volume unavailable")
+        real_parquet(self, path, *args, **kwargs)
+        if table == "daily_sales":
+            time.sleep(0.2)  # the sibling has long failed by now
+            daily_returned.append(time.time())
+
+    alive_at_retry: list[list[threading.Thread]] = []
+    real_append = DagRun._append
+
+    def append(self, tid, try_number, state, *args, **kwargs):
+        if state == UP_FOR_RETRY:
+            alive_at_retry.append([t for t in writers if t.is_alive()])
+        real_append(self, tid, try_number, state, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(DagRun, "_append", append)
+    out = str(tmp_path / "out")
+    dag = sales_pipeline_dag(spark, sf_dir, out)
+    for tid, task in dag.tasks.items():  # transform reads only sf_dir
+        if tid != "run_dbt_transformation":
+            task.fn = None
+    assert dag.tasks["run_dbt_transformation"].retries == 1
+    run = DagRun(dag, "r1", str(tmp_path / "state"))
+    assert set(run.run().values()) == {SUCCESS}
+
+    lines = [r for r in _log(run) if r["task"] == "run_dbt_transformation"]
+    assert [(r["try"], r["state"]) for r in lines] == [
+        (1, "running"), (1, UP_FOR_RETRY), (2, "running"), (2, SUCCESS),
+    ]
+    failed = lines[1]
+    assert (failed["error_type"], failed["message"]) == ("OSError", "gold volume unavailable")
+    assert failed["end"] >= daily_returned[0]
+    assert alive_at_retry == [[]]
+    assert threading.main_thread() not in writers and not any(t.is_alive() for t in writers)
+    assert len(fct_tries) == len(daily_returned) == 2
+
+    monkeypatch.undo()
+    _, clean, _, _ = refresh
+    for table in ("fct_purchases", "daily_sales"):
+        got = spark.read.parquet(os.path.join(out, table))
+        assert _same_rows(got, spark.read.parquet(os.path.join(clean, table))), table
+
+
+def test_gold_writes_run_in_the_callers_job_group(spark, sf_dir, tmp_path):
+    """Every job the transform submits, from either writer thread,
+    carries the job group set on the thread that runs the task."""
+    from ecommerce_dataengineering_project_spark.plans.orchestrator import sales_pipeline_dag
+
+    sc = spark.sparkContext
+    dag = sales_pipeline_dag(spark, sf_dir, str(tmp_path / "out"))
+
+    def marker_job(group: str) -> int:
+        sc.setJobGroup(group, group)
+        sc.parallelize([0], 1).count()
+        (job,) = sc.statusTracker().getJobIdsForGroup(group)
+        return job
+
+    try:
+        before = marker_job("gold-writes-before")
+        sc.setJobGroup("gold-writes", "run_dbt_transformation")
+        dag.tasks["run_dbt_transformation"].fn()
+        after = marker_job("gold-writes-after")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    grouped = set(sc.statusTracker().getJobIdsForGroup("gold-writes"))
+    assert len(grouped) >= 2  # at least one job per write
+    assert grouped == set(range(before + 1, after))
