@@ -136,32 +136,18 @@ def optimize_zorder(
     # would not fire) — the version and manifest below are the same
     # read the rewrite is built from, so any concurrent commit makes
     # the publish CAS raise.
-    vs = table.versions()
-    version = vs[-1] + 1
-    man = table._manifest(vs[-1])
+    v, man = table._latest()
     # merge_schema: after additive evolution the snapshot's files may
     # carry different column sets — a single-footer schema would drop
     # evolved columns from the rewrite while the manifest still
     # records them
     clustered = zorder_layout(
-        table.read(spark, version=vs[-1], merge_schema=True),
+        table.read(spark, version=v, merge_schema=True),
         x_sql, y_sql, n_files, bits,
     )
-    files, stats = table._write_commit_data(clustered, version, man)
+    # the rewrite writes PHYSICAL names, so the column mapping carries;
+    # compact() is the purge path
+    files, stats = table._write_commit_data(clustered, v + 1, man)
     return table._publish(
-        version,
-        files,
-        f"optimize-zorder:{x_sql},{y_sql}",
-        stats,
-        man.get("txn", {}),
-        man.get("schema"),  # a layout rewrite never changes the schema
-        # blooms are per-FILE and every file was just rewritten, so the
-        # old index is legitimately dropped (re-add via append's
-        # bloom_cols on the next indexed write); constraints are
-        # table-level and carry — the data is unchanged, no revalidation
-        constraints=man.get("constraints", {}),
-        # the rewrite wrote PHYSICAL names (write-path translation), so
-        # the column mapping carries — compact() is the purge path
-        colmap=man.get("colmap", {}),
-        dropped=man.get("dropped", []),
+        v + 1, files, f"optimize-zorder:{x_sql},{y_sql}", stats, base=man
     )

@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import json
 import os
-import threading
 import time
 import traceback
 from collections.abc import Callable
@@ -198,12 +197,16 @@ class DagRun:
         """One try, bounded by execution_timeout. The task runs in a
         worker thread so the timeout is enforceable without signals
         (a timed-out worker is abandoned, as Airflow abandons a
-        SIGKILLed subprocess)."""
+        SIGKILLed subprocess). The worker is a
+        ``pyspark.InheritableThread``, so its Spark jobs carry the
+        caller's job group, description and pool."""
         if task.fn is None:
             return
         if task.execution_timeout_s is None:
             task.fn()
             return
+        from pyspark import InheritableThread
+
         result: dict = {}
 
         def target():
@@ -213,7 +216,7 @@ class DagRun:
             except BaseException as exc:  # propagate into the caller
                 result["exc"] = exc
 
-        t = threading.Thread(target=target, daemon=True)
+        t = InheritableThread(target, daemon=True)
         t.start()
         t.join(task.execution_timeout_s)
         if t.is_alive():

@@ -913,7 +913,7 @@ ORACLES["stream_scd2_dim"] = _COMMERCE_ORACLES["scd2_customer_dim"]
 def q_stream_txlog_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K3/K4 with a REAL atomic commit per micro-batch: each batch of
     the bounded event replay appends to the parquet transaction log
-    (sources/txlog.py) — manifest-rename publication closes the
+    (sources/txlog.py) — publishing the manifest by hard link closes the
     non-atomicity window `merge_upsert_path` documents, giving the
     exactly-Delta-shaped streaming loop (data files first, atomic log
     entry second, readers only ever see committed snapshots). The

@@ -27,7 +27,6 @@ twin over the same manifest mechanics.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -36,23 +35,10 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-_LOG_DIR = "_txlog"
-
-
-def _versions(root: str) -> list[int]:
-    log = os.path.join(root, _LOG_DIR)
-    if not os.path.isdir(log):
-        return []
-    return sorted(
-        int(f[1:-5])
-        for f in os.listdir(log)
-        if f.startswith("v") and f.endswith(".json")
-    )
-
-
-def _manifest(root: str, v: int) -> dict:
-    with open(os.path.join(root, _LOG_DIR, f"v{v}.json")) as fh:
-        return json.load(fh)
+from ecommerce_dataengineering_project_spark.sources.txlog import (
+    log_versions,
+    read_manifest,
+)
 
 
 def _purges_mapping(root: str, v: int, man_v: dict, cache: dict) -> bool:
@@ -75,7 +61,7 @@ def _purges_mapping(root: str, v: int, man_v: dict, cache: dict) -> bool:
     prev_man = cache.get(v - 1)
     if prev_man is None and v - 1 > 0:
         try:
-            prev_man = _manifest(root, v - 1)
+            prev_man = read_manifest(root, v - 1)
             cache[v - 1] = prev_man
         except FileNotFoundError:
             prev_man = None  # expired: assume it was mapped
@@ -99,10 +85,10 @@ class TxLogStreamDataSource(DataSource):
 
     def schema(self) -> str:
         root = self.options["path"]
-        vs = _versions(root)
+        vs = log_versions(root)
         if not vs:
             raise FileNotFoundError(f"no commits in {root}")
-        schema = _manifest(root, vs[-1]).get("schema") or []
+        schema = read_manifest(root, vs[-1]).get("schema") or []
         if not schema:
             raise ValueError(
                 f"{root}: table has no recorded schema — stream sources "
@@ -128,8 +114,8 @@ class TxLogStreamReader(DataSourceStreamReader):
         # column mapping at STREAM START: files hold physical names,
         # the declared schema logical ones — read() renames per batch.
         # A mid-stream mapping change is refused in partitions().
-        vs = _versions(self.root)
-        man = _manifest(self.root, vs[-1]) if vs else {}
+        vs = log_versions(self.root)
+        man = read_manifest(self.root, vs[-1]) if vs else {}
         self.colmap = man.get("colmap", {})
         self.dropped = set(man.get("dropped", []))
         # mapping-change guard applies only to commits LANDING after
@@ -155,7 +141,7 @@ class TxLogStreamReader(DataSourceStreamReader):
         return {"version": self.start_version}
 
     def latestOffset(self):
-        vs = _versions(self.root)
+        vs = log_versions(self.root)
         return {"version": vs[-1] if vs else 0}
 
     def partitions(self, start, end):
@@ -172,9 +158,9 @@ class TxLogStreamReader(DataSourceStreamReader):
             # emitted, history replays under the current mapping like
             # Delta's latest-schema reads.
             era_start = None
-            for v in reversed(_versions(self.root)):
+            for v in reversed(log_versions(self.root)):
                 try:
-                    m = _manifest(self.root, v)
+                    m = read_manifest(self.root, v)
                 except FileNotFoundError:
                     # expired region: era boundary unknowable past it —
                     # the earliest retained consistent version stands
@@ -194,7 +180,7 @@ class TxLogStreamReader(DataSourceStreamReader):
                     "schema; restart with a fresh checkpoint"
                 )
         try:
-            mans = {lo: _manifest(self.root, lo)} if lo > 0 else {}
+            mans = {lo: read_manifest(self.root, lo)} if lo > 0 else {}
         except FileNotFoundError:
             raise ValueError(
                 f"txlog_stream: checkpointed offset v{lo} was expired "
@@ -202,9 +188,9 @@ class TxLogStreamReader(DataSourceStreamReader):
                 "fresh checkpoint or option('startingVersion', <retained>)"
             ) from None
         prev = set(mans[lo]["files"]) if lo > 0 else set()
-        window = [v for v in _versions(self.root) if lo < v <= hi]
+        window = [v for v in log_versions(self.root) if lo < v <= hi]
         for v in window:
-            mans[v] = _manifest(self.root, v)
+            mans[v] = read_manifest(self.root, v)
         # Physical-regime floor: the newest commit whose full rewrite
         # purged a non-empty column mapping (_purges_mapping) — files
         # from EARLIER commits speak a naming the start-time mapping
@@ -224,12 +210,12 @@ class TxLogStreamReader(DataSourceStreamReader):
         # the replay path.
         if self._log_regime_floor is None:
             floor = 0
-            for v in _versions(self.root):
+            for v in log_versions(self.root):
                 if v <= hi:
                     continue
                 if v not in mans:
                     try:
-                        mans[v] = _manifest(self.root, v)
+                        mans[v] = read_manifest(self.root, v)
                     except FileNotFoundError:
                         # expired between the listing and the read: we
                         # can no longer prove it was NOT a purge, and
@@ -271,7 +257,7 @@ class TxLogStreamReader(DataSourceStreamReader):
                 prev_dv = mans[v - 1].get("dv", {})
             elif v > 1:
                 try:
-                    prev_dv = _manifest(self.root, v - 1).get("dv", {})
+                    prev_dv = read_manifest(self.root, v - 1).get("dv", {})
                 except FileNotFoundError:
                     # expired predecessor: compare against this
                     # commit's own dv (no observable change)

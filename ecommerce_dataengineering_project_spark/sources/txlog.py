@@ -20,6 +20,19 @@ Design (a deliberately tiny Delta-log shape):
   put-if-absent store). A crash between data write and publish leaves
   an *unreferenced* data dir, invisible to every reader.
 
+Every commit is the previous manifest plus what that commit changes
+(Delta's "previous snapshot + actions" rule), decided in one place,
+``TxTable._publish``:
+- file-keyed fields (``stats``, ``bloom``, ``dv``) keep the previous
+  manifest's entries for the files still listed, then take the
+  commit's own entries. Rewritten files lose theirs with the file; a
+  metadata-only commit lists the same files, so its deletion vectors
+  carry (dropping them would resurrect every DV-deleted row);
+- table-level fields (``txn``, ``schema``, ``constraints``, ``colmap``,
+  ``dropped``) keep the previous value unless the commit sets a new
+  one. A full rewrite that writes logical names as physical
+  (``overwrite``, ``compact``) sets an empty column mapping.
+
 At 100 TB the manifest would list lake-relative paths exactly as here;
 only the listing itself would move into the engine's catalog. Readers
 pass explicit file lists to ``spark.read.parquet`` so partition pruning
@@ -40,6 +53,28 @@ from pyspark.sql import DataFrame, SparkSession
 from ecommerce_dataengineering_project_spark.sources.readers import normalize_ntz
 
 _LOG_DIR = "_txlog"
+
+
+def log_versions(root: str) -> list[int]:
+    """The committed versions of the table at ``root``, ascending
+    (``[]`` when it has no log)."""
+    log = os.path.join(root, _LOG_DIR)
+    if not os.path.isdir(log):
+        return []
+    return sorted(
+        int(f[1:-5])
+        for f in os.listdir(log)
+        if f.startswith("v") and f.endswith(".json")
+    )
+
+
+def manifest_path(root: str, version: int) -> str:
+    return os.path.join(root, _LOG_DIR, f"v{version}.json")
+
+
+def read_manifest(root: str, version: int) -> dict:
+    with open(manifest_path(root, version)) as fh:
+        return json.load(fh)
 
 
 def _norm_time_bound(b):
@@ -158,16 +193,29 @@ class TxTable:
 
     # ------------------------------------------------------------- log
     def versions(self) -> list[int]:
-        log = os.path.join(self.root, _LOG_DIR)
-        return sorted(
-            int(f[1:-5])
-            for f in os.listdir(log)
-            if f.startswith("v") and f.endswith(".json")
-        )
+        return log_versions(self.root)
 
     def _manifest(self, version: int) -> dict:
-        with open(os.path.join(self.root, _LOG_DIR, f"v{version}.json")) as fh:
-            return json.load(fh)
+        return read_manifest(self.root, version)
+
+    def _head(self) -> tuple[int, dict]:
+        """``(latest version, its manifest)``, or ``(0, {})`` for an
+        empty log."""
+        vs = self.versions()
+        return (vs[-1], self._manifest(vs[-1])) if vs else (0, {})
+
+    def _latest(self) -> tuple[int, dict]:
+        """``(latest version, its manifest)``; raises on an empty log."""
+        v, man = self._head()
+        if not v:
+            raise FileNotFoundError(f"no commits in {self.root}")
+        return v, man
+
+    def _snapshot(self, version: int | None) -> tuple[int, dict]:
+        """The pinned ``version`` and its manifest, or the latest."""
+        if version is None:
+            return self._latest()
+        return version, self._manifest(version)
 
     def _publish(
         self,
@@ -175,6 +223,8 @@ class TxTable:
         files: list[str],
         action: str,
         stats: dict[str, dict] | None = None,
+        *,
+        base: dict | None = None,
         txn: dict[str, int] | None = None,
         schema: list | None = None,
         bloom: dict[str, dict] | None = None,
@@ -183,68 +233,75 @@ class TxTable:
         colmap: dict[str, str] | None = None,
         dropped: list[str] | None = None,
     ) -> int:
-        """Atomic commit: manifest written to a temp name, then hard-
-        linked into the log. The link is the commit point AND the
-        conflict check in one syscall — ``os.rename`` would silently
-        overwrite a concurrent winner (check-then-rename has a TOCTOU
-        window), while ``os.link`` fails with EEXIST, giving true
-        compare-and-swap on the version number."""
-        log = os.path.join(self.root, _LOG_DIR)
-        final = os.path.join(log, f"v{version}.json")
+        """Atomic commit of ``base`` (the manifest this commit builds
+        on; none for a table's first) carried forward by the module's
+        rule, with this commit's ``files`` and changed fields.
+
+        The manifest is written to a temp name, then hard-linked into
+        the log. The link is the commit point AND the conflict check in
+        one syscall — ``os.rename`` would silently overwrite a
+        concurrent winner (check-then-rename has a TOCTOU window), while
+        ``os.link`` fails with EEXIST, giving true compare-and-swap on
+        the version number."""
+        base = base or {}
+        listed = set(files)
+
+        def carry(key: str, new: dict | None) -> dict:
+            kept = {f: e for f, e in base.get(key, {}).items() if f in listed}
+            return {**kept, **(new or {})}
+
+        def pick(key: str, new, empty):
+            return new if new is not None else base.get(key) or empty
+
+        manifest = {
+            "version": version,
+            "action": action,
+            "files": sorted(files),
+            # per-file column min/max (Delta add-action / Iceberg
+            # manifest stats): lets scan() prune files from the log alone
+            "stats": carry("stats", stats),
+            # Delta SetTransaction twin: per-writer-app highest committed
+            # transaction version, the watermark idempotent streaming
+            # appends dedup against
+            "txn": pick("txn", txn, {}),
+            # Delta metaData twin: the table's recorded schema ([name,
+            # simpleString] pairs) — what writer-side enforcement
+            # validates new commits against
+            "schema": pick("schema", schema, []),
+            # per-file Bloom filter index (Delta/Iceberg bloom column
+            # index twin): point-lookup pruning on high-cardinality
+            # columns where min/max ranges cannot help — see
+            # candidate_files_point
+            "bloom": carry("bloom", bloom),
+            # Delta CHECK-constraint twin ({name: sql_expr}): every writer
+            # path validates its NEW rows against these before publish —
+            # see _validate_constraints
+            "constraints": pick("constraints", constraints, {}),
+            # DELETION VECTORS (Delta DV twin): per-file sorted row
+            # positions deleted WITHOUT rewriting the file — every read
+            # path filters them out positionally via _metadata.row_index
+            # (see _read_files)
+            "dv": carry("dv", dv),
+            # COLUMN MAPPING (Delta columnMapping twin): rename/drop
+            # columns as metadata-only commits, zero files rewritten.
+            # ``colmap`` maps the PHYSICAL name in the parquet files to
+            # the current LOGICAL name (non-identity entries only);
+            # ``dropped`` lists physical names reads must hide
+            "colmap": pick("colmap", colmap, {}),
+            "dropped": pick("dropped", dropped, []),
+        }
+        final = manifest_path(self.root, version)
         # Unique per ATTEMPT (pid alone is not enough: two threads in
         # one process racing the same version would share the tmp path,
         # and the second open() would truncate the first's manifest
         # before its os.link — the CAS winner could publish the loser's
         # file list under its own version).
         tmp = os.path.join(
-            log, f".v{version}.{os.getpid()}.{uuid.uuid4().hex[:8]}.json.tmp"
+            os.path.dirname(final),
+            f".v{version}.{os.getpid()}.{uuid.uuid4().hex[:8]}.json.tmp",
         )
         with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "action": action,
-                    "files": sorted(files),
-                    # per-file column min/max (Delta add-action /
-                    # Iceberg manifest stats): lets scan() prune files
-                    # from the log alone
-                    "stats": stats or {},
-                    # Delta SetTransaction twin: per-writer-app highest
-                    # committed transaction version, the watermark
-                    # idempotent streaming appends dedup against
-                    "txn": txn or {},
-                    # Delta metaData twin: the table's recorded schema
-                    # ([name, simpleString] pairs) — what writer-side
-                    # enforcement validates new commits against
-                    "schema": schema or [],
-                    # per-file Bloom filter index (Delta/Iceberg bloom
-                    # column index twin): point-lookup pruning on
-                    # high-cardinality columns where min/max ranges
-                    # cannot help — see candidate_files_point
-                    "bloom": bloom or {},
-                    # Delta CHECK-constraint twin ({name: sql_expr}):
-                    # every writer path validates its NEW rows against
-                    # these before publish — see _validate_constraints
-                    "constraints": constraints or {},
-                    # DELETION VECTORS (Delta DV twin): per-file sorted
-                    # row positions deleted WITHOUT rewriting the file —
-                    # every read path filters them out positionally via
-                    # _metadata.row_index (see _read_files)
-                    "dv": dv or {},
-                    # COLUMN MAPPING (Delta columnMapping twin): rename/
-                    # drop columns as metadata-only commits, zero files
-                    # rewritten. ``colmap`` maps the PHYSICAL name in
-                    # the parquet files to the current LOGICAL name
-                    # (non-identity entries only); ``dropped`` lists
-                    # physical names reads must hide. Data-coupled like
-                    # dv/stats: every commit must carry them forward
-                    # (tests sweep this), rollback restores the old
-                    # snapshot's, compact() purges by physical rewrite.
-                    "colmap": colmap or {},
-                    "dropped": dropped or [],
-                },
-                fh,
-            )
+            json.dump(manifest, fh)
         try:
             os.link(tmp, final)
         except FileExistsError:
@@ -295,8 +352,7 @@ class TxTable:
 
     def constraints(self) -> dict[str, str]:
         """The table's active CHECK constraints ({name: sql_expr})."""
-        vs = self.versions()
-        return dict(self._manifest(vs[-1]).get("constraints", {})) if vs else {}
+        return dict(self._head()[1].get("constraints", {}))
 
     def add_constraint(self, spark: SparkSession, name: str, expr: str) -> int:
         """Delta ``ALTER TABLE ADD CONSTRAINT name CHECK (expr)``:
@@ -304,10 +360,7 @@ class TxTable:
         data violates is rejected — Delta does the same scan), then
         publishes a metadata-only commit recording it. Every subsequent
         writer path validates its new rows against the recorded set."""
-        vs = self.versions()
-        if not vs:
-            raise FileNotFoundError(f"no commits in {self.root}")
-        man = self._manifest(vs[-1])
+        v, man = self._latest()
         cons = dict(man.get("constraints", {}))
         if name in cons:
             raise ValueError(f"constraint {name!r} already exists")
@@ -315,44 +368,18 @@ class TxTable:
             self._validate_constraints(self.read(spark, merge_schema=True), {name: expr})
         cons[name] = expr
         return self._publish(
-            vs[-1] + 1,
-            man["files"],
-            f"add-constraint:{name}",
-            man.get("stats", {}),
-            man.get("txn", {}),
-            man.get("schema"),
-            bloom=man.get("bloom", {}),
-            constraints=cons,
-            # metadata-only commit: the data snapshot is unchanged, so
-            # the deletion vectors MUST carry (dropping them would
-            # resurrect every DV-deleted row in the new version)
-            dv=man.get("dv", {}),
-            colmap=man.get("colmap", {}),
-            dropped=man.get("dropped", []),
+            v + 1, man["files"], f"add-constraint:{name}", base=man, constraints=cons
         )
 
     def drop_constraint(self, name: str) -> int:
         """Metadata-only commit removing a CHECK constraint."""
-        vs = self.versions()
-        if not vs:
-            raise FileNotFoundError(f"no commits in {self.root}")
-        man = self._manifest(vs[-1])
+        v, man = self._latest()
         cons = dict(man.get("constraints", {}))
         if name not in cons:
             raise KeyError(f"no constraint {name!r}")
         del cons[name]
         return self._publish(
-            vs[-1] + 1,
-            man["files"],
-            f"drop-constraint:{name}",
-            man.get("stats", {}),
-            man.get("txn", {}),
-            man.get("schema"),
-            bloom=man.get("bloom", {}),
-            constraints=cons,
-            dv=man.get("dv", {}),  # metadata-only: DVs carry (see add)
-            colmap=man.get("colmap", {}),
-            dropped=man.get("dropped", []),
+            v + 1, man["files"], f"drop-constraint:{name}", base=man, constraints=cons
         )
 
     # ------------------------------------------------- column mapping
@@ -366,10 +393,7 @@ class TxTable:
         hard-link CAS instead of being silently erased by a re-read."""
         import re as _re
 
-        vs = self.versions()
-        if not vs:
-            raise FileNotFoundError(f"no commits in {self.root}")
-        man = self._manifest(vs[-1])
+        v, man = self._latest()
         schema = man.get("schema") or []
         if not schema:
             raise ValueError(
@@ -388,7 +412,7 @@ class TxTable:
                 f"{offender}: drop them first (their expressions hold "
                 "the name as text)"
             )
-        return vs[-1], man
+        return v, man
 
     def rename_column(self, old: str, new: str) -> int:
         """Delta column-mapping ``RENAME COLUMN``: a metadata-only
@@ -430,14 +454,9 @@ class TxTable:
             v + 1,
             man["files"],
             f"rename-column:{old}->{new}",
-            man.get("stats", {}),
-            man.get("txn", {}),
-            new_schema,
-            bloom=man.get("bloom", {}),
-            constraints=man.get("constraints", {}),
-            dv=man.get("dv", {}),
+            base=man,
+            schema=new_schema,
             colmap=colmap,
-            dropped=man.get("dropped", []),
         )
 
     def drop_column(self, name: str) -> int:
@@ -460,12 +479,8 @@ class TxTable:
             v + 1,
             man["files"],
             f"drop-column:{name}",
-            man.get("stats", {}),
-            man.get("txn", {}),
-            new_schema,
-            bloom=man.get("bloom", {}),
-            constraints=man.get("constraints", {}),
-            dv=man.get("dv", {}),
+            base=man,
+            schema=new_schema,
             colmap=colmap,
             dropped=dropped,
         )
@@ -556,8 +571,7 @@ class TxTable:
         # path). Pass ``{}`` to write LOGICAL names as physical (schema
         # redefinition: overwrite, compact's mapping purge).
         if man is None:
-            vs = self.versions()
-            man = self._manifest(vs[-1]) if vs else {}
+            man = self._head()[1]
         df = self._to_physical(df, man)
         # Per-ATTEMPT staging dir (version + a unique token): two
         # writers racing for the same version can never clobber each
@@ -719,35 +733,58 @@ class TxTable:
         already proved ``df`` satisfies — append_or_quarantine filters
         on the constraint predicates, so re-running the validation
         aggregation would be a redundant full scan of the batch."""
+        return self._append(df, schema_mode, bloom_cols, _pre_validated)
+
+    def append_txn(self, df: DataFrame, app_id: str, txn_version: int) -> int:
+        """Idempotent append — the Delta ``txnAppId``/``txnVersion``
+        (SetTransaction) contract for exactly-once streaming sinks:
+        foreachBatch delivers at-least-once, so a retried micro-batch
+        re-runs its commit; recording the writer app's highest
+        committed transaction version in the manifest lets the replay
+        detect "already committed" and SKIP instead of double-append.
+        Combined with the publish CAS this also closes the
+        concurrent-retry race: if another attempt of the same batch
+        wins the version, the loser re-reads, sees the watermark, and
+        skips."""
+        return self._append(df, watermark=(app_id, txn_version))
+
+    def _append(
+        self,
+        df: DataFrame,
+        schema_mode: str = "merge",
+        bloom_cols: tuple[str, ...] = (),
+        validated: dict[str, str] | None = None,
+        watermark: tuple[str, int] | None = None,
+    ) -> int:
+        """The CAS-retry loop of ``append`` and ``append_txn`` (which
+        passes its ``(app_id, txn_version)`` as ``watermark``)."""
         new_files = new_stats = new_bloom = None
         wrote_under: tuple | None = None
-        validated_against: dict | None = _pre_validated
         for _ in range(8):
-            vs = self.versions()
-            version = (vs[-1] + 1) if vs else 1
-            prev_files, prev_stats, man = [], {}, {}
-            if vs:
-                man = self._manifest(vs[-1])
-                prev_files, prev_stats = man["files"], man.get("stats", {})
+            v, man = self._head()
+            txn = None
+            if watermark is not None:
+                app_id, txn_version = watermark
+                if man.get("txn", {}).get(app_id, -1) >= txn_version:
+                    return v  # this batch already committed: no-op
+                txn = {**man.get("txn", {}), app_id: txn_version}
             schema = self._check_schema(
                 man.get("schema"), self._df_schema(df), schema_mode
             )
             cons = man.get("constraints", {})
-            if cons != validated_against:
+            if cons != validated:
                 self._validate_constraints(df, cons)
-                validated_against = cons
+                validated = cons
             mapping = (man.get("colmap", {}), man.get("dropped", []))
-            if new_files is not None and wrote_under != mapping:
-                # the CAS winner changed the column mapping between our
-                # attempts: the staged files carry STALE physical names.
-                # Restage under the winner's mapping — _to_physical's
-                # clash check turns a genuine name conflict into a loud
-                # error instead of two logicals sharing one physical
-                # slot. The abandoned staging dir is unreferenced by any
-                # manifest; VACUUM collects it.
-                new_files = None
-            if new_files is None:  # write the data exactly once per mapping
-                new_files, new_stats = self._write_commit_data(df, version, man)
+            # Write the data once per column mapping. If the CAS winner
+            # changed the mapping between our attempts, the staged files
+            # carry STALE physical names: restage under the winner's —
+            # _to_physical's clash check turns a genuine name conflict
+            # into a loud error instead of two logicals sharing one
+            # physical slot. The abandoned staging dir is unreferenced
+            # by any manifest; VACUUM collects it.
+            if new_files is None or wrote_under != mapping:
+                new_files, new_stats = self._write_commit_data(df, v + 1, man)
                 wrote_under = mapping
                 new_bloom = (
                     self._file_blooms(
@@ -761,101 +798,38 @@ class TxTable:
                 )
             try:
                 return self._publish(
-                    version,
-                    prev_files + new_files,
-                    "append",
-                    {**prev_stats, **new_stats},
-                    man.get("txn", {}),
-                    schema,
-                    bloom={**man.get("bloom", {}), **new_bloom},
-                    constraints=cons,
-                    dv=man.get("dv", {}),  # untouched files keep their DVs
-                    colmap=man.get("colmap", {}),
-                    dropped=man.get("dropped", []),
+                    v + 1,
+                    man.get("files", []) + new_files,
+                    "append" if watermark is None else "append-txn:%s:%s" % watermark,
+                    new_stats,
+                    base=man,
+                    txn=txn,
+                    schema=schema,
+                    bloom=new_bloom,
                 )
             except ConcurrentCommitError:
                 continue  # rebase on the winner's manifest and retry
-        raise ConcurrentCommitError(
-            "append: lost the version CAS 8 times in a row"
-        )
+        who = "append" if watermark is None else "append_txn(%s, %s)" % watermark
+        raise ConcurrentCommitError(f"{who}: lost the version CAS 8 times in a row")
 
     def overwrite(self, df: DataFrame) -> int:
         """Overwrite REDEFINES the table, schema included (Delta's
         overwriteSchema path) — no compatibility check against the
         prior snapshot's columns."""
-        vs = self.versions()
-        version = (vs[-1] + 1) if vs else 1
-        prev_man = self._manifest(vs[-1]) if vs else {}
-        cons = prev_man.get("constraints", {})
-        self._validate_constraints(df, cons)
+        v, man = self._head()
+        self._validate_constraints(df, man.get("constraints", {}))
         # schema redefinition: the df's names BECOME the physical
         # schema, so the column mapping resets (Delta overwriteSchema)
-        new_files, new_stats = self._write_commit_data(df, version, man={})
+        new_files, new_stats = self._write_commit_data(df, v + 1, man={})
         return self._publish(
-            version, new_files, "overwrite", new_stats,
-            prev_man.get("txn", {}),
-            self._df_schema(df),
-            constraints=cons,
-        )
-
-    def append_txn(self, df: DataFrame, app_id: str, txn_version: int) -> int:
-        """Idempotent append — the Delta ``txnAppId``/``txnVersion``
-        (SetTransaction) contract for exactly-once streaming sinks:
-        foreachBatch delivers at-least-once, so a retried micro-batch
-        re-runs its commit; recording the writer app's highest
-        committed transaction version in the manifest lets the replay
-        detect "already committed" and SKIP instead of double-append.
-        Combined with the publish CAS this also closes the
-        concurrent-retry race: if another attempt of the same batch
-        wins the version, the loser re-reads, sees the watermark, and
-        skips."""
-        files = stats = None
-        wrote_under: tuple | None = None
-        validated_against: dict | None = None
-        for _ in range(8):
-            vs = self.versions()
-            man = self._manifest(vs[-1]) if vs else {}
-            txns = man.get("txn", {})
-            if txns.get(app_id, -1) >= txn_version:
-                return vs[-1]  # this batch already committed: no-op
-            version = (vs[-1] + 1) if vs else 1
-            schema = self._check_schema(
-                man.get("schema"), self._df_schema(df), "merge"
-            )
-            cons = man.get("constraints", {})
-            if cons != validated_against:
-                self._validate_constraints(df, cons)
-                validated_against = cons
-            # write the data ONCE per column-mapping era, like append():
-            # a lost CAS re-runs only the metadata work against the
-            # winner's manifest; the staged files are reused unless the
-            # winner changed the mapping (then _to_physical's clash
-            # check re-arbitrates under the new names)
-            mapping = (man.get("colmap", {}), man.get("dropped", []))
-            if files is not None and wrote_under != mapping:
-                files = None
-            if files is None:
-                files, stats = self._write_commit_data(df, version, man)
-                wrote_under = mapping
-            try:
-                return self._publish(
-                    version,
-                    man.get("files", []) + files,
-                    f"append-txn:{app_id}:{txn_version}",
-                    {**man.get("stats", {}), **stats},
-                    {**txns, app_id: txn_version},
-                    schema,
-                    bloom=man.get("bloom", {}),
-                    constraints=cons,
-                    dv=man.get("dv", {}),
-                    colmap=man.get("colmap", {}),
-                    dropped=man.get("dropped", []),
-                )
-            except ConcurrentCommitError:
-                continue  # lost the CAS: re-read the watermark, retry
-        raise ConcurrentCommitError(
-            f"append_txn({app_id}, {txn_version}): lost the version CAS "
-            "8 times in a row"
+            v + 1,
+            new_files,
+            "overwrite",
+            new_stats,
+            base=man,
+            schema=self._df_schema(df),
+            colmap={},
+            dropped=[],
         )
 
     def merge(
@@ -880,11 +854,7 @@ class TxTable:
         from ecommerce_dataengineering_project_spark.operators.cdc import apply_cdc
         from pyspark.sql import functions as F
 
-        vs = self.versions()
-        if not vs:
-            raise FileNotFoundError(f"no commits in {self.root}")
-        v = vs[-1]
-        man = self._manifest(v)
+        v, man = self._latest()
         key = key_cols[0]
         bounds = changes.agg(
             F.min(key).alias("lo"), F.max(key).alias("hi")
@@ -908,37 +878,15 @@ class TxTable:
         schema = self._check_schema(
             man.get("schema"), self._df_schema(merged), "merge"
         )
-        cons = man.get("constraints", {})
-        self._validate_constraints(merged, cons)
-        version = v + 1
-        new_files, new_stats = self._write_commit_data(merged, version, man)
-        keep_stats = {
-            f: s for f, s in man.get("stats", {}).items() if f not in touched_set
-        }
-        # Carry per-file Bloom indexes for untouched files, exactly like
-        # keep_stats: dropping them keeps results correct (bloom-less
-        # files are conservatively kept by point lookups) but silently
-        # degrades pruning after every MERGE.
-        keep_bloom = {
-            f: b for f, b in man.get("bloom", {}).items() if f not in touched_set
-        }
-        # rewritten files physically exclude their dv rows; their DV
-        # entries die with them, untouched files keep theirs
-        keep_dv = {
-            f: ps for f, ps in man.get("dv", {}).items() if f not in touched_set
-        }
+        self._validate_constraints(merged, man.get("constraints", {}))
+        new_files, new_stats = self._write_commit_data(merged, v + 1, man)
         return self._publish(
-            version,
+            v + 1,
             untouched + new_files,
             f"merge:{','.join(key_cols)}",
-            {**keep_stats, **new_stats},
-            man.get("txn", {}),
-            schema,
-            bloom=keep_bloom,
-            constraints=cons,
-            dv=keep_dv,
-            colmap=man.get("colmap", {}),
-            dropped=man.get("dropped", []),
+            new_stats,
+            base=man,
+            schema=schema,
         )
 
     def append_or_quarantine(
@@ -1007,11 +955,7 @@ class TxTable:
         version (the current one unchanged if no file can match)."""
         from pyspark.sql import functions as F
 
-        vs = self.versions()
-        if not vs:
-            raise FileNotFoundError(f"no commits in {self.root}")
-        v = vs[-1]
-        man = self._manifest(v)
+        v, man = self._latest()
         touched, _ = self.candidate_files(col, lo, hi, version=v)
         if not touched:
             return v  # stats prove nothing matches: metadata-only no-op
@@ -1024,29 +968,9 @@ class TxTable:
         if hi is not None:
             cond = cond & (F.col(col) <= F.lit(hi))
         kept = base.where(~F.coalesce(cond, F.lit(False)))
-        version = v + 1
-        new_files, new_stats = self._write_commit_data(kept, version, man)
-        keep_stats = {
-            f: s for f, s in man.get("stats", {}).items() if f not in touched_set
-        }
-        keep_bloom = {
-            f: b for f, b in man.get("bloom", {}).items() if f not in touched_set
-        }
-        keep_dv = {
-            f: ps for f, ps in man.get("dv", {}).items() if f not in touched_set
-        }
+        new_files, new_stats = self._write_commit_data(kept, v + 1, man)
         return self._publish(
-            version,
-            untouched + new_files,
-            f"delete:{col}",
-            {**keep_stats, **new_stats},
-            man.get("txn", {}),
-            man.get("schema"),
-            bloom=keep_bloom,
-            constraints=man.get("constraints", {}),
-            dv=keep_dv,
-            colmap=man.get("colmap", {}),
-            dropped=man.get("dropped", []),
+            v + 1, untouched + new_files, f"delete:{col}", new_stats, base=man
         )
 
     def shallow_clone(self, target_root: str) -> "TxTable":
@@ -1061,34 +985,20 @@ class TxTable:
         mirror)."""
         if os.path.isdir(os.path.join(target_root, _LOG_DIR)):
             raise FileExistsError(f"{target_root} is already a txlog table")
-        vs = self.versions()
-        if not vs:
-            raise FileNotFoundError(f"no commits in {self.root}")
-        man = self._manifest(vs[-1])
+        v, man = self._latest()
         src = os.path.abspath(self.root)
-        abs_map = {f: os.path.join(src, f) for f in man["files"]}
+        # the source manifest with every file key made absolute
+        rekeyed = {
+            key: {os.path.join(src, f): e for f, e in man.get(key, {}).items()}
+            for key in ("stats", "bloom", "dv")
+        }
         clone = TxTable(target_root)
         clone._publish(
             1,
-            list(abs_map.values()),
-            f"clone:{src}@v{vs[-1]}",
-            {abs_map[f]: s for f, s in man.get("stats", {}).items() if f in abs_map},
-            {},
-            man.get("schema"),
-            bloom={
-                abs_map[f]: b
-                for f, b in man.get("bloom", {}).items()
-                if f in abs_map
-            },
-            constraints=man.get("constraints", {}),
-            dv={
-                abs_map[f]: ps
-                for f, ps in man.get("dv", {}).items()
-                if f in abs_map
-            },
-            # column mapping is keyed by COLUMN name, not file: copies
-            colmap=man.get("colmap", {}),
-            dropped=man.get("dropped", []),
+            [os.path.join(src, f) for f in man["files"]],
+            f"clone:{src}@v{v}",
+            base={**man, **rekeyed},
+            txn={},
         )
         return clone
 
@@ -1097,26 +1007,21 @@ class TxTable:
         is the old snapshot's — history is never rewritten, exactly like
         Delta's RESTORE."""
         old = self._manifest(to_version)
-        vs = self.versions()
-        cur = self._manifest(vs[-1])
+        v, cur = self._latest()
+        # The old snapshot is the base: its files come back with their
+        # stats, blooms and DV state, and its column mapping (which
+        # names those files' physical columns) and schema with them.
+        # Constraints are table metadata, not snapshot data: the
+        # CURRENT rule set stays active across a data restore, like the
+        # txn watermarks. A restore to data predating a constraint may
+        # reintroduce rows new writes would reject — Delta RESTORE has
+        # the same property.
         return self._publish(
-            vs[-1] + 1,
+            v + 1,
             old["files"],
             f"rollback:{to_version}",
-            old.get("stats", {}),
-            cur.get("txn", {}),
-            old.get("schema"),
-            bloom=old.get("bloom", {}),
-            dv=old.get("dv", {}),  # restoring data restores its DV state
-            # the column mapping is data-coupled (it names the restored
-            # files' physical columns), so it restores with the data
-            colmap=old.get("colmap", {}),
-            dropped=old.get("dropped", []),
-            # Constraints are table metadata, not snapshot data: the
-            # CURRENT rule set stays active across a data restore (like
-            # the txn watermarks). A restore to data predating a
-            # constraint may reintroduce rows new writes would reject —
-            # Delta RESTORE has the same property.
+            base=old,
+            txn=cur.get("txn", {}),
             constraints=cur.get("constraints", {}),
         )
 
@@ -1305,20 +1210,19 @@ class TxTable:
 
     @staticmethod
     def _merge_dv(man: dict, hits) -> dict[str, list]:
-        """Fold freshly matched (basename, position) rows into the
-        snapshot's existing dv map (manifest-relative keys, sorted
-        positions)."""
-        by_base: dict[str, list] = {}
+        """The dv entries a DV commit changes: each hit file's existing
+        positions plus its freshly matched (basename, position) rows
+        (manifest-relative keys, sorted positions)."""
+        by_base: dict[str, set] = {}
         for r in hits:
-            by_base.setdefault(r["__fb"], []).append(int(r["__ri"]))
+            by_base.setdefault(r["__fb"], set()).add(int(r["__ri"]))
         base_to_rel = {os.path.basename(f): f for f in man["files"]}
-        merged: dict[str, list] = {
-            f: sorted(ps) for f, ps in man.get("dv", {}).items()
-        }
+        dv = man.get("dv", {})
+        changed: dict[str, list] = {}
         for b, ps in by_base.items():
             rel = base_to_rel[b]
-            merged[rel] = sorted(set(merged.get(rel, [])) | set(ps))
-        return merged
+            changed[rel] = sorted(set(dv.get(rel, [])) | ps)
+        return changed
 
     def delete_where_dv(
         self,
@@ -1345,11 +1249,7 @@ class TxTable:
         dv rows are already filtered, so re-deleting is naturally
         idempotent). NULL predicate rows are kept (SQL DELETE
         semantics)."""
-        vs = self.versions()
-        if not vs:
-            raise FileNotFoundError(f"no commits in {self.root}")
-        v = vs[-1]
-        man = self._manifest(v)
+        v, man = self._latest()
         keyed = self._dv_candidates(spark, predicate, man)
         hits = keyed.select("__fb", "__ri").limit(max_rows + 1).collect()
         if len(hits) > max_rows:
@@ -1359,19 +1259,13 @@ class TxTable:
             )
         if not hits:
             return v  # nothing matches: no commit
-        merged = self._merge_dv(man, hits)
+        # the carried stats now over-cover: conservative, sound
         return self._publish(
             v + 1,
             man["files"],
             f"delete-dv:{len(hits)} rows",
-            man.get("stats", {}),  # stats now over-cover: conservative, sound
-            man.get("txn", {}),
-            man.get("schema"),
-            bloom=man.get("bloom", {}),
-            constraints=man.get("constraints", {}),
-            dv=merged,
-            colmap=man.get("colmap", {}),
-            dropped=man.get("dropped", []),
+            base=man,
+            dv=self._merge_dv(man, hits),
         )
 
     def update_where_dv(
@@ -1394,11 +1288,7 @@ class TxTable:
         delete_where_dv; bulk updates belong on the MERGE path."""
         from pyspark.sql import functions as F
 
-        vs = self.versions()
-        if not vs:
-            raise FileNotFoundError(f"no commits in {self.root}")
-        v = vs[-1]
-        man = self._manifest(v)
+        v, man = self._latest()
         keyed = self._dv_candidates(spark, predicate, man)
         matched = keyed.localCheckpoint(eager=True)  # one scan feeds both arms
         hits = matched.select("__fb", "__ri").limit(max_rows + 1).collect()
@@ -1419,26 +1309,19 @@ class TxTable:
             if col not in orig_types:
                 raise ValueError(f"update_where_dv: unknown column {col!r}")
             post = post.withColumn(col, F.expr(expr).cast(orig_types[col]))
-        cons = man.get("constraints", {})
-        self._validate_constraints(post, cons)
+        self._validate_constraints(post, man.get("constraints", {}))
         schema = self._check_schema(
             man.get("schema"), self._df_schema(post), "merge"
         )
-        version = v + 1
-        new_files, new_stats = self._write_commit_data(post, version, man)
-        merged_dv = self._merge_dv(man, hits)
+        new_files, new_stats = self._write_commit_data(post, v + 1, man)
         return self._publish(
-            version,
+            v + 1,
             man["files"] + new_files,
             f"update-dv:{len(hits)} rows",
-            {**man.get("stats", {}), **new_stats},
-            man.get("txn", {}),
-            schema,
-            bloom=man.get("bloom", {}),
-            constraints=cons,
-            dv=merged_dv,
-            colmap=man.get("colmap", {}),
-            dropped=man.get("dropped", []),
+            new_stats,
+            base=man,
+            schema=schema,
+            dv=self._merge_dv(man, hits),
         )
 
     def read(
@@ -1452,11 +1335,7 @@ class TxTable:
         reconciled at read (parquet ``mergeSchema``) with missing
         columns null-filled — additive evolution exactly like Delta's
         ``mergeSchema`` writes."""
-        vs = self.versions()
-        if not vs:
-            raise FileNotFoundError(f"no commits in {self.root}")
-        v = vs[-1] if version is None else version
-        man = self._manifest(v)
+        v, man = self._snapshot(version)
         if not man["files"]:
             raise FileNotFoundError(f"version {v} of {self.root} lists no files")
         return self._read_files(spark, man, man["files"], merge_schema)
@@ -1491,11 +1370,9 @@ class TxTable:
         rewritten slice, never the table. The per-commit feeds union
         lazily into one plan.
         """
-        vs = self.versions()
-        if not vs:
-            raise FileNotFoundError(f"no commits in {self.root}")
-        to_version = vs[-1] if to_version is None else to_version
-        window = [v for v in vs if from_version < v <= to_version]
+        if to_version is None:
+            to_version, _ = self._latest()
+        window = [v for v in self.versions() if from_version < v <= to_version]
         from pyspark.sql import functions as F
 
         def _empty_feed() -> DataFrame:
@@ -1660,9 +1537,7 @@ class TxTable:
         where a single-sort layout prunes on one column only. Columns
         without stats are conservatively non-pruning, as in
         ``candidate_files``."""
-        vs = self.versions()
-        v = vs[-1] if version is None else version
-        man = self._manifest(v)
+        _, man = self._snapshot(version)
         stats = man.get("stats", {})
         keep = []
         # datetime/date bounds compare against the manifest's naive-UTC
@@ -1712,9 +1587,7 @@ class TxTable:
 
         if value is None:
             raise ValueError("bloom point lookup: value must be non-null")
-        vs = self.versions()
-        v = vs[-1] if version is None else version
-        man = self._manifest(v)
+        _, man = self._snapshot(version)
         col = self._phys_name(man, col)  # stats/blooms keyed physical
         stats, blooms = man.get("stats", {}), man.get("bloom", {})
         # range check against the (possibly ISO-stringified) stats;
@@ -1764,8 +1637,7 @@ class TxTable:
         keep, _total = self.candidate_files_point(col, value, version)
         if not keep:
             return self.read(spark, version).limit(0)
-        vs = self.versions()
-        man = self._manifest(vs[-1] if version is None else version)
+        _, man = self._snapshot(version)
         df = self._read_files(spark, man, keep)
         return df.where(F.col(col) == F.lit(value))
 
@@ -1806,8 +1678,7 @@ class TxTable:
             # provably-empty result: schema from one snapshot file,
             # zero rows, no scan
             return self.read(spark, version).limit(0)
-        vs = self.versions()
-        man = self._manifest(vs[-1] if version is None else version)
+        _, man = self._snapshot(version)
         df = self._read_files(spark, man, keep)
         for col, lo, hi in preds:
             if lo is not None:
@@ -1859,7 +1730,7 @@ def convert_to_txlog(path: str, spark: SparkSession | None = None) -> TxTable:
         )
         schema = TxTable._df_schema(df)
     table = TxTable(path)
-    table._publish(1, files, "convert", stats, {}, schema)
+    table._publish(1, files, "convert", stats, schema=schema)
     return table
 
 
@@ -1946,7 +1817,7 @@ def expire_snapshots(table: TxTable, keep_versions: int = 1) -> list[int]:
         raise ValueError("expire_snapshots: keep_versions must be >= 1")
     expired = vs[:-keep_versions]
     for v in expired:
-        os.remove(os.path.join(table.root, _LOG_DIR, f"v{v}.json"))
+        os.remove(manifest_path(table.root, v))
     return expired
 
 
@@ -1961,9 +1832,7 @@ def history(table: TxTable) -> list[dict]:
     for v in table.versions():
         man = table._manifest(v)
         cur = set(man["files"])
-        mtime = os.path.getmtime(
-            os.path.join(table.root, _LOG_DIR, f"v{v}.json")
-        )
+        mtime = os.path.getmtime(manifest_path(table.root, v))
         out.append(
             {
                 "version": v,
@@ -1982,10 +1851,7 @@ def detail(table: TxTable) -> dict:
     """Delta ``DESCRIBE DETAIL`` twin for the current snapshot: file
     count, total bytes, schema, and the active feature metadata
     (constraints, bloom-indexed columns, txn watermarks)."""
-    vs = table.versions()
-    if not vs:
-        raise FileNotFoundError(f"no commits in {table.root}")
-    man = table._manifest(vs[-1])
+    v, man = table._latest()
     size = 0
     for f in man["files"]:
         try:
@@ -1996,14 +1862,14 @@ def detail(table: TxTable) -> dict:
         {c for per_file in man.get("bloom", {}).values() for c in per_file}
     )
     return {
-        "version": vs[-1],
+        "version": v,
         "num_files": len(man["files"]),
         "size_bytes": size,
         "schema": man.get("schema") or [],
         "constraints": man.get("constraints", {}),
         "bloom_index_columns": bloom_cols,
         "txn_watermarks": man.get("txn", {}),
-        "num_retained_versions": len(vs),
+        "num_retained_versions": len(table.versions()),
         # deletion-vector debt: how many rows reads filter positionally
         # and how many files carry a DV — the compaction (PURGE) signal
         "num_dv_rows": sum(len(ps) for ps in man.get("dv", {}).values()),
@@ -2035,11 +1901,7 @@ def generate_symlink_manifest(table: TxTable, version: int | None = None) -> str
     Returns the manifest path. tests/test_manifest_compact.py proves
     the point by having DuckDB (playing Athena) query the table
     THROUGH the manifest with no knowledge of the log."""
-    vs = table.versions()
-    if not vs:
-        raise FileNotFoundError(f"no commits in {table.root}")
-    v = vs[-1] if version is None else version
-    man = table._manifest(v)
+    v, man = table._snapshot(version)
     # A symlink manifest is just a file list — an external engine
     # reading through it cannot apply deletion vectors, so it would see
     # DV-deleted rows (and stale pre-images after update_where_dv).
@@ -2094,28 +1956,22 @@ def compact(table: TxTable, spark: SparkSession, target_files: int) -> int:
     100 TB otherwise turns every scan into an open/footer-read storm.
     Same concurrency contract as optimize_zorder: a commit racing the
     rewrite makes the version CAS raise, never silently drops rows."""
-    vs = table.versions()
-    if not vs:
-        raise FileNotFoundError(f"no commits in {table.root}")
-    man = table._manifest(vs[-1])
+    v, man = table._latest()
     df = table.read(spark, merge_schema=True).coalesce(max(1, target_files))
-    version = vs[-1] + 1
     # man={}: write the LOGICAL names as the new physical schema — the
     # full rewrite upgrades every file, so compaction doubles as the
     # column-mapping purge too (rename/drop debt gone; see
-    # rename_column) exactly as it purges DVs
-    files, stats = table._write_commit_data(df, version, man={})
-    # read() applied the deletion vectors, so the rewritten files are
-    # dv-free by construction: compaction doubles as DV garbage
-    # collection (Delta's PURGE), dv resets to empty
+    # rename_column) exactly as it purges DVs: read() applied them, so
+    # the rewritten files are dv-free by construction (Delta's PURGE)
+    files, stats = table._write_commit_data(df, v + 1, man={})
     return table._publish(
-        version,
+        v + 1,
         files,
         f"optimize-compact:{target_files}",
         stats,
-        man.get("txn", {}),
-        man.get("schema"),
-        constraints=man.get("constraints", {}),
+        base=man,
+        colmap={},
+        dropped=[],
     )
 
 
@@ -2129,9 +1985,6 @@ def auto_compact(
     snapshot's file count exceeds ``max_files``. Call it after commits
     (a writer-side post-commit hook); a no-op costs one manifest read.
     Returns the new version, or None when below the threshold."""
-    vs = table.versions()
-    if not vs:
-        return None
-    if len(table._manifest(vs[-1])["files"]) <= max_files:
+    if len(table._head()[1].get("files", [])) <= max_files:
         return None
     return compact(table, spark, target_files)

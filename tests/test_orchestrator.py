@@ -565,3 +565,27 @@ def test_gold_writes_run_in_the_callers_job_group(spark, sf_dir, tmp_path):
     grouped = set(sc.statusTracker().getJobIdsForGroup("gold-writes"))
     assert len(grouped) >= 2  # at least one job per write
     assert grouped == set(range(before + 1, after))
+
+
+def test_timed_task_runs_in_the_callers_job_group(spark, tmp_path):
+    """A task with ``execution_timeout_s`` runs in a worker thread; the
+    Spark jobs it submits still carry the job group of the thread that
+    runs the DAG."""
+    sc = spark.sparkContext
+    jobs = []
+
+    def spark_task():
+        sc.parallelize(range(4), 2).count()
+        jobs.extend(sc.statusTracker().getJobIdsForGroup("timed-task"))
+
+    dag = Dag("t")
+    dag.add(Task("count", spark_task, execution_timeout_s=60.0))
+    sc.setJobGroup("timed-task", "timed task")
+    try:
+        states = DagRun(dag, "r1", str(tmp_path)).run()
+        grouped = sc.statusTracker().getJobIdsForGroup("timed-task")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert states == {"count": SUCCESS}
+    assert len(jobs) == 1 and set(grouped) == set(jobs)

@@ -9,7 +9,9 @@ twice (a data-coupled manifest field — blooms, then deletion vectors —
 carried on most commit kinds but dropped on one): any commit kind that
 forgets to forward stats/dv/colmap/constraints surfaces here as a
 wrong row set or schema within a few interleavings, without anyone
-having to enumerate the pair that breaks.
+having to enumerate the pair that breaks. Dropped pruning metadata
+changes no row, so every new manifest's stats and blooms are checked
+directly too (``_assert_metadata_carried``).
 """
 
 from __future__ import annotations
@@ -33,6 +35,26 @@ def _to_df(spark, rows):
     )
 
 
+def _assert_metadata_carried(t, v):
+    """Manifest ``v``'s file-keyed maps name only its files, every file
+    has stats, and a file kept from ``v - 1`` keeps its exact stats and
+    bloom entries."""
+    man = t._manifest(v)
+    files = set(man["files"])
+    for key in ("stats", "bloom", "dv"):
+        assert set(man[key]) <= files, (v, key, sorted(set(man[key]) - files))
+    assert set(man["stats"]) == files, (v, "files without stats")
+    if v == 1:
+        return
+    prev = t._manifest(v - 1)
+    for f in files & set(prev["files"]):
+        for key in ("stats", "bloom"):
+            # compared outside the assert: pytest would otherwise diff
+            # the bloom word lists when reporting a failure
+            kept = man[key].get(f) == prev[key].get(f)
+            assert kept, (v, man["action"], key, f)
+
+
 def test_random_commit_interleavings_match_a_logical_model(spark):
     for seed in (11, 59, 101):
         rng = random.Random(seed)
@@ -49,7 +71,8 @@ def test_random_commit_interleavings_match_a_logical_model(spark):
             return rows
 
         model = fresh(30)
-        t.append(_to_df(spark, model))
+        t.append(_to_df(spark, model), bloom_cols=("k",))
+        _assert_metadata_carried(t, 1)
         history = {1: list(model)}
         txn_seq = 0
 
@@ -59,10 +82,13 @@ def test_random_commit_interleavings_match_a_logical_model(spark):
         ]
         for step in range(12):
             op = rng.choice(ops)
+            before = t.versions()[-1]
             try:
                 if op == "append":
                     rows = fresh(rng.randint(1, 6))
-                    t.append(_to_df(spark, rows))
+                    # every other step indexes k, so bloom-carrying and
+                    # bloom-less files mix in one snapshot
+                    t.append(_to_df(spark, rows), bloom_cols=("k",) if step % 2 else ())
                     model = model + rows
                 elif op == "append_txn":
                     txn_seq += 1
@@ -125,6 +151,8 @@ def test_random_commit_interleavings_match_a_logical_model(spark):
             except ValueError:
                 pass  # legitimate refusal: state must be unchanged
             v = t.versions()[-1]
+            for committed in range(before + 1, v + 1):
+                _assert_metadata_carried(t, committed)
             history[v] = list(model)
             got = sorted(
                 (r.id, r.k, r.v) for r in t.read(spark, merge_schema=True).collect()
