@@ -71,8 +71,3 @@ def stable_id(*cols: str | Column) -> Column:
     across engines).
     """
     return F.sha2(F.concat_ws("\x1f", *[_c(c).cast("string") for c in cols]), 256)
-
-
-def anomaly_flag(pred: str | Column) -> Column:
-    """sklearn ``-1/1`` -> boolean (P11, anomaly_detection.py:52)."""
-    return F.when(_c(pred) == F.lit(-1), F.lit(True)).otherwise(F.lit(False))

@@ -319,7 +319,6 @@ def exact_jaccard_pairs(
     text_col: str = "text",
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
-    sh: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (the verification baseline
     for the sketch pipelines): candidates are pairs sharing >= 1
@@ -343,11 +342,10 @@ def exact_jaccard_pairs(
     shared shingle is hot can be missed. None = fully exact (the
     default baseline).
     """
-    if sh is None:
-        # eager localCheckpoint, not persist(): the result is
-        # returned lazily, so a cache entry could never be
-        # unpersisted by the caller (session-lifetime storage leak)
-        sh = shingles(df, id_col, text_col).localCheckpoint(eager=True)
+    # eager localCheckpoint, not persist(): the result is returned
+    # lazily, so a cache entry could never be unpersisted by the caller
+    # (session-lifetime storage leak)
+    sh = shingles(df, id_col, text_col).localCheckpoint(eager=True)
     if max_doc_freq is None:
         sa = sh.select(F.col(id_col).alias("id_a"), "shingle")
         sb = sh.select(F.col(id_col).alias("id_b"), "shingle")

@@ -1041,14 +1041,15 @@ def _reapply_centroids(
         )
         present = {r["cell"] for r in staged.select("cell").distinct().collect()}
         emptied = sorted(set(affected) - present)
-        # Session-conf set/restore, not a writer option — same PySpark
-        # 4.1.2 constraint sources/maintenance.merge_upsert documents.
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            staged.write.mode("overwrite").partitionBy("cell").parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # Writer option, not a session conf: a path write honours it
+        # (only insertInto ignores it, see maintenance.merge_upsert), so
+        # a concurrent write in the same session keeps its own mode.
+        (
+            staged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("cell")
+            .parquet(path)
+        )
         for c in emptied:  # dynamic overwrite never saw these cells
             shutil.rmtree(os.path.join(path, f"cell={c}"), ignore_errors=True)
     version = man["version"] + 1

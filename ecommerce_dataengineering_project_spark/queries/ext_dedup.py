@@ -32,40 +32,11 @@ JACCARD_THRESHOLD = 0.8
 NGRAM_THRESHOLD = 0.5
 COSINE_THRESHOLD = 0.4
 
-# The shingle relation feeds two queries; persist once per (session,
-# corpus) so the tokenize+hash map work and its cache are shared across
-# them. Keyed on the session too: a DataFrame outliving its (stopped)
-# SparkSession must not be served to a new one. The value keeps a
-# strong reference to the session, so its id can never be recycled
-# onto a different live session.
-_SHINGLE_CACHE: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
-
-
-def _shingles_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ecommerce_dataengineering_project_spark.operators.dedup import shingles
-
-    key = (id(spark), sf_dir)
-    if key not in _SHINGLE_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        _SHINGLE_CACHE[key] = (spark, shingles(docs, "doc_id").persist())
-    return _SHINGLE_CACHE[key][1]
-
-
-# The scored n-gram pair relation likewise feeds two queries (the
-# near-dup report and the cluster collapse); persist once per
-# (session, corpus).
-_PAIRS_CACHE: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
-
-
-def _ngram_pairs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _PAIRS_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        pairs = exact_jaccard_pairs(
-            docs, "doc_id", threshold=NGRAM_THRESHOLD, sh=_shingles_for(spark, sf_dir)
-        ).persist()
-        _PAIRS_CACHE[key] = (spark, pairs)
-    return _PAIRS_CACHE[key][1]
+def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The scored n-gram pair relation behind the near-dup report and
+    every cluster collapse over it."""
+    docs = load_table(spark, sf_dir, "documents")
+    return exact_jaccard_pairs(docs, "doc_id", threshold=NGRAM_THRESHOLD)
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,7 +50,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ngram_pairs_for(spark, sf_dir)
+    return _ngram_pairs(spark, sf_dir)
 
 
 DF_CAP = 50
@@ -96,7 +67,6 @@ def q_dedup_ngram_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         threshold=NGRAM_THRESHOLD,
         max_doc_freq=DF_CAP,
-        sh=_shingles_for(spark, sf_dir),
     )
 
 
@@ -105,7 +75,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard near-dup pair graph (threshold 0.5); every doc labeled
     with its component's minimum doc_id."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = _ngram_pairs_for(spark, sf_dir).select("id_a", "id_b")
+    pairs = _ngram_pairs(spark, sf_dir).select("id_a", "id_b")
     return connected_components(pairs, docs.select("doc_id"))
 
 
@@ -114,7 +84,7 @@ def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternating large-star/small-star algorithm — the scale path for
     chained (high-diameter) near-dup graphs. Same oracle fixpoint."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = _ngram_pairs_for(spark, sf_dir).select("id_a", "id_b")
+    pairs = _ngram_pairs(spark, sf_dir).select("id_a", "id_b")
     return connected_components_star(pairs, docs.select("doc_id"))
 
 
@@ -123,14 +93,14 @@ def q_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep_canonical): near-dup clusters collapse to their single
     highest-quality member (quality_score desc, token_count desc,
     doc_id asc) instead of the arbitrary minimum id — the variant
-    every real corpus reduction wants. Reuses the session-cached
-    n-gram pair relation and the text-stats quality heuristic, both
-    independently oracle-checked."""
+    every real corpus reduction wants. Builds on the n-gram pair
+    relation and the text-stats quality heuristic, both independently
+    oracle-checked."""
     from ecommerce_dataengineering_project_spark.operators.dedup import keep_canonical
     from ecommerce_dataengineering_project_spark.operators.text import with_text_stats
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = _ngram_pairs_for(spark, sf_dir).select("id_a", "id_b")
+    pairs = _ngram_pairs(spark, sf_dir).select("id_a", "id_b")
     clusters = connected_components(pairs, docs.select("doc_id"))
     quality = with_text_stats(docs).select("doc_id", "quality_score", "token_count")
     kept = keep_canonical(
@@ -190,7 +160,20 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # grows — a fixed count would degrade back toward per-cell O(n^2) at
 # 100x (VERDICT r5 #3). The oracle derives the same count in SQL.
 SEM_CELL_CLAMP = (4, 4096)
-_SEM_CENTROIDS: dict[str, list] = {}
+
+
+def sem_centroids(emb: DataFrame) -> list:
+    """The seeded centroids every sqrt(n)-cell semantic arm assigns
+    against: ``suggest_n_cells`` over ``SEM_CELL_CLAMP`` of ``emb``'s
+    row count. Seeded and deterministic, so each call derives the same
+    list from the same rows."""
+    from ecommerce_dataengineering_project_spark.operators.similarity import (
+        seeded_centroids,
+        suggest_n_cells,
+    )
+
+    lo, hi = SEM_CELL_CLAMP
+    return seeded_centroids(emb, suggest_n_cells(emb.count(), min_cells=lo, max_cells=hi))
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -200,19 +183,9 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cluster-scoped dedup oracle-checks bit-for-bit like the
     global-scan variant above it."""
     from ecommerce_dataengineering_project_spark.operators.dedup import semantic_dedup
-    from ecommerce_dataengineering_project_spark.operators.similarity import (
-        seeded_centroids,
-        suggest_n_cells,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _SEM_CENTROIDS:
-        lo, hi = SEM_CELL_CLAMP
-        n_cells = suggest_n_cells(emb.count(), min_cells=lo, max_cells=hi)
-        _SEM_CENTROIDS[sf_dir] = seeded_centroids(emb, n_cells)
-    return semantic_dedup(
-        emb, _SEM_CENTROIDS[sf_dir], threshold=COSINE_THRESHOLD
-    )
+    return semantic_dedup(emb, sem_centroids(emb), threshold=COSINE_THRESHOLD)
 
 
 def q_semantic_dedup_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,36 +198,14 @@ def q_semantic_dedup_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     `semantic_dedup` — the recall delta is exactly the cross-shard
     pairs, which the oracle excludes identically."""
     from ecommerce_dataengineering_project_spark.operators.dedup import semantic_dedup
-    from ecommerce_dataengineering_project_spark.operators.similarity import (
-        seeded_centroids,
-        suggest_n_cells,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _SEM_CENTROIDS:
-        lo, hi = SEM_CELL_CLAMP
-        n_cells = suggest_n_cells(emb.count(), min_cells=lo, max_cells=hi)
-        _SEM_CENTROIDS[sf_dir] = seeded_centroids(emb, n_cells)
     return semantic_dedup(
-        emb,
-        _SEM_CENTROIDS[sf_dir],
-        threshold=COSINE_THRESHOLD,
-        shard_col="label",
+        emb, sem_centroids(emb), threshold=COSINE_THRESHOLD, shard_col="label"
     )
 
 
 SEM_OCCUPANCY = 100  # target vectors per cell in the prod configuration
-
-# Centroid memos (here and _SEM_INC_CENTROIDS below) are keyed by
-# sf_dir PATH alone — deliberately weaker than the content-fingerprint
-# keying of the drift baseline and the IVF index directory (ADVICE
-# r13): these cache driver-side Python lists, not persisted artifacts,
-# so the blast radius of a stale entry is one process whose fixture
-# was mutated in place mid-run — which the fixture tables never are
-# (they are immutable bench inputs, same contract as the pre-existing
-# _SEM_CENTROIDS). Anything that OUTLIVES the process (the IVF index,
-# the drift-baseline artifact) carries the content fingerprint.
-_SEM_PROD_CENTROIDS: dict[str, list] = {}
 
 
 def q_semantic_dedup_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -272,18 +223,13 @@ def q_semantic_dedup_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _SEM_PROD_CENTROIDS:
-        n_cells = max(SEM_CELL_CLAMP[0], emb.count() // SEM_OCCUPANCY)
-        _SEM_PROD_CENTROIDS[sf_dir] = seeded_centroids(emb, n_cells)
+    n_cells = max(SEM_CELL_CLAMP[0], emb.count() // SEM_OCCUPANCY)
     return semantic_dedup(
         emb,
-        _SEM_PROD_CENTROIDS[sf_dir],
+        seeded_centroids(emb, n_cells),
         threshold=COSINE_THRESHOLD,
         shard_col="label",
     )
-
-
-_SEM_INC_CENTROIDS: dict[str, list] = {}
 
 
 def q_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,19 +246,11 @@ def q_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         semantic_cell_index,
         semantic_dedup_incremental,
     )
-    from ecommerce_dataengineering_project_spark.operators.similarity import (
-        seeded_centroids,
-        suggest_n_cells,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     history = emb.where(F.col("vec_id") % 2 == 0)
     new_batch = emb.where(F.col("vec_id") % 2 != 0)
-    if sf_dir not in _SEM_INC_CENTROIDS:
-        lo, hi = SEM_CELL_CLAMP
-        n_cells = suggest_n_cells(history.count(), min_cells=lo, max_cells=hi)
-        _SEM_INC_CENTROIDS[sf_dir] = seeded_centroids(history, n_cells)
-    cents = _SEM_INC_CENTROIDS[sf_dir]
+    cents = sem_centroids(history)
     return semantic_dedup_incremental(
         new_batch,
         semantic_cell_index(history, cents),

@@ -81,13 +81,13 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_CELLS = 16
 N_PROBE = 4
 
-_IVF_CENTROIDS: dict[str, list] = {}
-
-# Persisted-index cache keys, memoized per corpus per process (same
-# invalidation model as _IVF_CENTROIDS): repeat serves of
-# ann_ivf_indexed must not pay a corpus-wide scan just to key the
-# cache — that scan is exactly what the index exists to avoid.
-_IVF_INDEX_FP: dict[str, str] = {}
+# The one per-process memo in queries/: sf_dir -> (persisted IVF index
+# path, its centroids), filled only by _ivf_index so repeat serves of
+# ann_ivf_indexed never pay a corpus-wide scan just to key the index —
+# that scan is exactly what the index exists to avoid. Safe because the
+# index directory on disk is content-fingerprinted, and the fixture
+# files behind an sf_dir are immutable for the life of the process.
+_IVF_INDEX: dict[str, tuple[str, list]] = {}
 
 
 def _ivf_index_fingerprint(
@@ -131,8 +131,6 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_dataengineering_project_spark.operators.similarity import seeded_centroids
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_CENTROIDS:  # select once per corpus per process
-        _IVF_CENTROIDS[sf_dir] = seeded_centroids(emb, N_CELLS)
     return ivf_topk(
         _queries_df(spark, sf_dir),
         emb,
@@ -140,7 +138,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=TOP_K,
         n_cells=N_CELLS,
         n_probe=N_PROBE,
-        centroids=_IVF_CENTROIDS[sf_dir],
+        centroids=seeded_centroids(emb, N_CELLS),
     )
 
 
@@ -230,9 +228,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[sf_dir] = seeded_centroids(emb, N_CELLS)
-    return pq_encode(emb, _IVF_CENTROIDS[sf_dir])
+    return pq_encode(emb, seeded_centroids(emb, N_CELLS))
 
 
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,10 +244,8 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[sf_dir] = seeded_centroids(emb, N_CELLS)
     return pq_adc_topk(
-        _queries_df(spark, sf_dir), emb, _IVF_CENTROIDS[sf_dir], k=TOP_K
+        _queries_df(spark, sf_dir), emb, seeded_centroids(emb, N_CELLS), k=TOP_K
     )
 
 
@@ -827,11 +821,11 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     serve an index built from OLD data, OLD constants, or an OLD
     schema against freshly-computed probe cells. Any change to the
     fixtures, to N_CELLS/the seed constants, or to IVF_INDEX_META
-    lands in a new directory and rebuilds. The fingerprint is memoized
-    per sf_dir (same per-process invalidation model as
-    _IVF_CENTROIDS), so only the FIRST serve pays the one fingerprint
-    scan — repeat serves never touch the unprobed corpus, which is the
-    point of the index."""
+    lands in a new directory and rebuilds. The (path, centroids) pair
+    is memoized per sf_dir in ``_IVF_INDEX``, so only the FIRST serve
+    pays the centroid selection and the one fingerprint scan — repeat
+    serves never touch the unprobed corpus, which is the point of the
+    index."""
     import os
 
     from ecommerce_dataengineering_project_spark.operators.similarity import (
@@ -841,19 +835,14 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     from ecommerce_dataengineering_project_spark.streaming.harness import scratch_dir
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[sf_dir] = seeded_centroids(emb, N_CELLS)
-    if sf_dir not in _IVF_INDEX_FP:
-        _IVF_INDEX_FP[sf_dir] = _ivf_index_fingerprint(
-            emb, _IVF_CENTROIDS[sf_dir], IVF_INDEX_META
-        )
-    fp = _IVF_INDEX_FP[sf_dir]
-    path = os.path.join(scratch_dir("ivf_index", sf_dir), fp)
+    if sf_dir not in _IVF_INDEX:
+        cents = seeded_centroids(emb, N_CELLS)
+        fp = _ivf_index_fingerprint(emb, cents, IVF_INDEX_META)
+        _IVF_INDEX[sf_dir] = (os.path.join(scratch_dir("ivf_index", sf_dir), fp), cents)
+    path, cents = _IVF_INDEX[sf_dir]
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        build_ivf_index(
-            emb, _IVF_CENTROIDS[sf_dir], path, meta_cols=IVF_INDEX_META
-        )
-    return path, _IVF_CENTROIDS[sf_dir]
+        build_ivf_index(emb, cents, path, meta_cols=IVF_INDEX_META)
+    return path, cents
 
 
 def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1009,9 +998,7 @@ def q_ivf_quantizer_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[sf_dir] = seeded_centroids(emb, N_CELLS)
-    return quantizer_drift(emb, _IVF_CENTROIDS[sf_dir])
+    return quantizer_drift(emb, seeded_centroids(emb, N_CELLS))
 
 
 QUERIES["ivf_quantizer_drift"] = q_ivf_quantizer_drift

@@ -547,20 +547,6 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DRIFT_BUCKETS = 8
 DRIFT_WIDTH = 64.0
-# In-process memo keyed by (sf_dir, content fingerprint) — NOT path
-# alone (the r10 IVF-cache staleness class, ADVICE/VERDICT r12): if
-# the events table under the same path changes, the fingerprint
-# changes and the baseline refits. The fingerprint rides the SAME
-# single-scan aggregation as the fit, so keying by content costs no
-# extra job ON THE FIRST FIT — but every later call still pays that
-# one scan to re-derive the key before the memo/artifact can answer
-# (ADVICE r13). That repeat scan IS the content-addressing trade: a
-# key the data cannot lie to has to look at the data. Deliberate —
-# the baseline consumer here is a bounded monitor run, not a hot
-# loop; a deployment that polls the baseline per micro-batch should
-# read the persisted artifact by name and trust its embedded
-# fingerprint instead of re-deriving it.
-_DRIFT_BASELINE: dict[tuple[str, str], list[float]] = {}
 
 
 def _drift_bucket(col: str) -> F.Column:
@@ -570,64 +556,17 @@ def _drift_bucket(col: str) -> F.Column:
 
 
 def drift_baseline(spark: SparkSession, sf_dir: str) -> list[float]:
-    """Fit (or fetch) the drift monitor's baseline distribution: the
-    add-one-smoothed bucket histogram of the batch events table.
-
-    Production shape (VERDICT r12 item 4): the fitted baseline is an
-    explicit, inspectable JSON ARTIFACT persisted under
-    .tmp/drift_baseline/, keyed — like the persisted IVF index — by a
-    content fingerprint (bucket counts + ``bit_xor(xxhash64(value))``
-    per bucket, folded in the same one-scan aggregation that fits the
-    histogram). A monitor fleet reads the artifact instead of
-    re-fitting; a mutated corpus lands at a new key and refits; a
-    STALE artifact can never be served because the key IS the content.
-    """
-    import hashlib
-    import json
-
+    """Fit the drift monitor's baseline distribution: the
+    add-one-smoothed bucket histogram of the batch events table. One
+    bucket-count aggregation per call, so a rewritten table refits."""
     ev = load_table(spark, sf_dir, "events")
-    rows = (
-        ev.groupBy(_drift_bucket("value").alias("b"))
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.expr("bit_xor(xxhash64(value))").alias("sig"),
-        )
-        .collect()
-    )
-    fp = hashlib.sha256(
-        repr(
-            (DRIFT_BUCKETS, DRIFT_WIDTH, sorted((r["b"], r["c"], r["sig"]) for r in rows))
-        ).encode()
-    ).hexdigest()[:12]
-    key = (sf_dir, fp)
-    if key not in _DRIFT_BASELINE:
-        art_dir = scratch_dir("drift_baseline", sf_dir)
-        art = os.path.join(art_dir, f"baseline_{fp}.json")
-        if os.path.exists(art):
-            with open(art) as f:
-                q = json.load(f)["q"]
-        else:
-            counts = {r["b"]: r["c"] for r in rows}
-            n_total = sum(counts.values())
-            q = [
-                (counts.get(i, 0) + 1) / (n_total + DRIFT_BUCKETS)
-                for i in range(DRIFT_BUCKETS)
-            ]
-            os.makedirs(art_dir, exist_ok=True)
-            tmp = art + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {
-                        "buckets": DRIFT_BUCKETS,
-                        "width": DRIFT_WIDTH,
-                        "fingerprint": fp,
-                        "q": q,
-                    },
-                    f,
-                )
-            os.replace(tmp, art)  # atomic: readers never see a partial fit
-        _DRIFT_BASELINE[key] = q
-    return _DRIFT_BASELINE[key]
+    rows = ev.groupBy(_drift_bucket("value").alias("b")).count().collect()
+    counts = {r["b"]: r["count"] for r in rows}
+    n_total = sum(counts.values())
+    return [
+        (counts.get(i, 0) + 1) / (n_total + DRIFT_BUCKETS)
+        for i in range(DRIFT_BUCKETS)
+    ]
 
 
 def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -637,7 +576,7 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     "has this source drifted over the whole corpus"; this answers "is
     it drifting RIGHT NOW"). Per (1-day window, event_type): add-one
     smoothed KL of the bucketed value histogram against the corpus
-    baseline distribution, fitted once batch-side (8+1 scalars riding
+    baseline distribution, fitted batch-side (8+1 scalars riding
     the plan as literals, like the LSH planes).
 
     Scale shape: ONE streaming aggregation (the window/key groupBy
@@ -648,9 +587,9 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     double divisions, left-associated term sum, 1e-6 half-up rounding
     after — the mixture_divergence contract, bit-exact vs DuckDB.
 
-    The baseline comes from ``drift_baseline``: a content-fingerprinted
-    persisted artifact (the IVF-index invalidation model), so a
-    mutated corpus refits instead of serving a stale fit.
+    The baseline comes from ``drift_baseline``, fitted from the events
+    table on every call, so a mutated corpus refits instead of serving
+    a stale fit.
     """
     src = _events_source(spark, sf_dir, n_flush=2, n_data=1)
     q = drift_baseline(spark, sf_dir)
@@ -1670,24 +1609,15 @@ def q_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe cells when the index is stored bucketed/partitioned by cell
     — history is never rescanned, the property measured flat
     (1.94->1.89 s for 10x history) in SCALE.md."""
-    from ecommerce_dataengineering_project_spark.operators.similarity import (
-        seeded_centroids,
-        suggest_n_cells,
-    )
     from ecommerce_dataengineering_project_spark.queries.ext_dedup import (
         COSINE_THRESHOLD,
-        SEM_CELL_CLAMP,
-        _SEM_INC_CENTROIDS,
+        sem_centroids,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     history = emb.where(F.col("vec_id") % 2 == 0)
-    # the index's versioned quantizer — SAME history slice and memo as
-    # the batch incremental arm, so the two arms share one selection
-    if sf_dir not in _SEM_INC_CENTROIDS:
-        lo, hi = SEM_CELL_CLAMP
-        n_cells = suggest_n_cells(history.count(), min_cells=lo, max_cells=hi)
-        _SEM_INC_CENTROIDS[sf_dir] = seeded_centroids(history, n_cells)
+    # the index's versioned quantizer — SAME history slice and helper
+    # as the batch incremental arm, so the two arms derive one selection
     return run_semantic_dedup_stream(
         spark,
         scratch_dir("streams/stream_semantic_dedup", sf_dir),
@@ -1695,7 +1625,7 @@ def q_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.where(F.col("vec_id") % 2 != 0),
         F.expr("cast((vec_id % 6) div 2 as int)"),
         STREAM_SEM_BATCHES,
-        _SEM_INC_CENTROIDS[sf_dir],
+        sem_centroids(history),
         COSINE_THRESHOLD,
     )
 

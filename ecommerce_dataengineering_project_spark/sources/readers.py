@@ -27,18 +27,18 @@ TESTDATA_TABLES = (
 )
 
 # Per-process memo of each fixture file's INFERRED schema (the raw
-# on-disk schema, pre-NTZ-normalization), keyed by absolute path.
-# Schema inference is driver-side footer work (~125 ms/call measured
-# on local[32]); with hundreds of registered queries each calling
-# load_table 1-3x per run it was the single largest fixed cost in the
-# suite. Passing the memoized schema back to the reader skips the
-# inference (20 ms/call) and changes nothing else — the declared
-# schema IS the inferred one. This is the production posture too: at
-# 100 TB the schema comes from the catalog/table format, never from
-# per-query footer sniffing. Fixture files are immutable for the life
-# of a process, so the memo can never go stale; mutable .tmp outputs
-# must NOT be routed through this cache.
-_SCHEMA_CACHE: dict[str, StructType] = {}
+# on-disk schema, pre-NTZ-normalization), keyed by absolute path and
+# stamped with the file's (st_mtime_ns, st_size). Schema inference is
+# driver-side footer work (~125 ms/call measured on local[32]); with
+# hundreds of registered queries each calling load_table 1-3x per run
+# it was the single largest fixed cost in the suite. Passing the
+# memoized schema back to the reader skips the inference (20 ms/call)
+# and changes nothing else — the declared schema IS the inferred one.
+# This is the production posture too: at 100 TB the schema comes from
+# the catalog/table format, never from per-query footer sniffing. A
+# file rewritten at the same path changes its stamp and is inferred
+# again, so the memo costs one os.stat per call and never goes stale.
+_SCHEMA_CACHE: dict[str, tuple[tuple[int, int] | None, StructType]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -60,12 +60,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     value-preserving.
     """
     path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    raw_schema = _SCHEMA_CACHE.get(path)
-    if raw_schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+    try:
+        st = os.stat(path)
+        stamp = (st.st_mtime_ns, st.st_size)
+    except OSError:  # missing: the reader below raises its own error
+        stamp = None
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is not None and hit[0] == stamp:
+        df = spark.read.schema(hit[1]).parquet(path)
     else:
-        df = spark.read.schema(raw_schema).parquet(path)
+        df = spark.read.parquet(path)
+        _SCHEMA_CACHE[path] = (stamp, df.schema)
     return normalize_ntz(df)
 
 

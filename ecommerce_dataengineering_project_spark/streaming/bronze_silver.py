@@ -157,11 +157,6 @@ def to_kafka_shape(df: DataFrame, options: dict[str, str] | None = None) -> Data
     return df.select(F.to_json(F.struct(*df.columns), options or {}).alias("value"))
 
 
-def stamp_ingestion(df: DataFrame, col: str = "ingestion_timestamp") -> Column:
-    """P4 (streaming_consumer.py:72)."""
-    return df.withColumn(col, F.current_timestamp())
-
-
 def events_to_kafka(events: DataFrame, *keep: str) -> DataFrame:
     """Click events as Kafka-shaped bronze: the ``EVENT_SCHEMA`` columns
     serialized into one JSON ``value`` string, plus the ``keep``

@@ -2,7 +2,7 @@
 read of a fixture table must skip driver-side schema inference (the
 memo supplies the declared schema) while producing an identical frame
 — same schema (post-NTZ-normalization) and same rows as a fresh
-inference read."""
+inference read. A file rewritten at the same path is inferred again."""
 
 from __future__ import annotations
 
@@ -35,3 +35,16 @@ def test_memo_keys_per_path(spark, sf_dir):
     load_table(spark, sf_dir, "documents")
     keys = {k for k in _SCHEMA_CACHE if k.endswith(("orders.parquet", "documents.parquet"))}
     assert len(keys) == 2  # one entry per file, never shared
+
+
+def test_memo_reinfers_a_rewritten_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), path)  # same path, new schema
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert [tuple(r) for r in df.collect()] == [(3, "x")]

@@ -810,10 +810,10 @@ def test_ivf_index_fingerprint_sees_non_centroid_content(spark):
 def test_ivf_indexed_serve_memoizes_the_fingerprint(spark, sf_dir):
     """Repeat serves must not pay a corpus-wide scan to key the index
     cache — the fingerprint is computed once per corpus per process
-    (same invalidation model as the centroid cache)."""
+    (the _IVF_INDEX memo)."""
     from ecommerce_dataengineering_project_spark.queries import ext_similarity as xs
 
-    xs._IVF_INDEX_FP.pop(sf_dir, None)
+    xs._IVF_INDEX.pop(sf_dir, None)
     calls = {"n": 0}
     real = xs._ivf_index_fingerprint
 

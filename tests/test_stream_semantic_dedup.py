@@ -38,13 +38,12 @@ def _rows(df):
 def test_stream_equals_sequential_batch_replay(spark, sf_dir):
     from ecommerce_dataengineering_project_spark.queries.ext_dedup import (
         COSINE_THRESHOLD,
-        _SEM_INC_CENTROIDS,
+        sem_centroids,
     )
 
     got = q_stream_semantic_dedup(spark, sf_dir)
-    cents = _SEM_INC_CENTROIDS[sf_dir]  # populated by the query
-
     emb = load_table(spark, sf_dir, "embeddings")
+    cents = sem_centroids(emb.where(F.col("vec_id") % 2 == 0))
     idx = semantic_cell_index(emb.where(F.col("vec_id") % 2 == 0), cents)
     want = []
     for k in range(STREAM_SEM_BATCHES):
@@ -67,16 +66,16 @@ def test_each_epoch_recomputes_identically_from_log_prefix(spark, sf_dir):
     after its own (partial or complete) epoch directory landed."""
     from ecommerce_dataengineering_project_spark.queries.ext_dedup import (
         COSINE_THRESHOLD,
-        _SEM_INC_CENTROIDS,
+        sem_centroids,
     )
 
     q_stream_semantic_dedup(spark, sf_dir)  # materialize the log
-    cents = _SEM_INC_CENTROIDS[sf_dir]
     dec_dir = os.path.join(
         scratch_dir("streams/stream_semantic_dedup", sf_dir), "decisions"
     )
     log = spark.read.parquet(dec_dir)
     emb = load_table(spark, sf_dir, "embeddings")
+    cents = sem_centroids(emb.where(F.col("vec_id") % 2 == 0))
     for k in range(STREAM_SEM_BATCHES):
         stored = log.where(F.col("ingest_batch") == k).select(
             "vec_id", "cell", "n_history_hits", "n_batch_hits", "keep"
